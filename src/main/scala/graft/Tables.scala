@@ -57,7 +57,7 @@ object Tables {
         }
         if (sig == -1L) -2L else sig // -1 is reserved for "unstattable"
       }
-    } catch { case _: Throwable => -1L }
+    } catch { case scala.util.control.NonFatal(_) => -1L }
 
   /** Plain parquet scan. Filters/pruning push down via Catalyst.
     * Schema served from [[schemaCache]] after the first inference. */

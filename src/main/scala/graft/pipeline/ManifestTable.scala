@@ -3,7 +3,8 @@ package graft.pipeline
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
+import scala.util.control.NonFatal
 
 /** Minimal commit-log table protocol — the observable core of the
   * reference's Delta ACID layer (`/root/reference/src/etl_pipeline.py:36-69`)
@@ -16,8 +17,11 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
   *     (POSIX hard link / HDFS rename / object-store conditional PUT —
   *     put-if-absent semantics per store), so a writer dying ANYWHERE
   *     before it leaves only an orphaned snapshot directory no reader
-  *     sees, and two racing writers cannot both win a version (OCC
-  *     retry);
+  *     sees, and two racing writers cannot both win a version. Every
+  *     verb publishes its version through the single transaction
+  *     function [[transact]] — base resolution, the writer-protocol
+  *     gate, the publish, the checkpoint and the OCC retry live there
+  *     once; a verb supplies only its attempt body;
   *  3. since round 10 the committed manifest is an INCREMENTAL LOG
   *     ENTRY (the `_delta_log` shape, Delta paper VLDB 2020 §3): it
   *     records only the commit's `adds`/`removes` (+ per-add stats +
@@ -630,7 +634,7 @@ object ManifestTable {
     val prev =
       if (version <= 1L) 0L
       else try resolveState(spark, path, version - 1).ts
-      catch { case _: Throwable => commitTimestamp(spark, path, version - 1) }
+      catch { case NonFatal(_) => commitTimestamp(spark, path, version - 1) }
     math.max(System.currentTimeMillis(), prev + 1)
   }
 
@@ -1072,10 +1076,11 @@ object ManifestTable {
     * O(columns)). Never the table's file list.
     */
   private def deltaJson(version: Long, ts: Long,
-                        adds: Seq[String], removes: Seq[String],
-                        addStats: Map[String, Map[String, ColStats]],
-                        tag: Option[String], tagHorizon: Int,
-                        schema: Option[StructType],
+                        adds: Seq[String] = Nil, removes: Seq[String] = Nil,
+                        addStats: Map[String, Map[String, ColStats]] = Map.empty,
+                        tag: Option[String] = None,
+                        tagHorizon: Int = DefaultTagHorizon,
+                        schema: Option[StructType] = None,
                         dvAdds: Seq[String] = Nil,
                         dvRemoves: Seq[String] = Nil,
                         dvKey: Option[String] = None,
@@ -1333,13 +1338,7 @@ object ManifestTable {
                               st: TableState): Unit = {
     val f = fs(spark, path)
     val dst = checkpointPath(path, st.version)
-    if (!f.exists(dst)) {
-      val tmp = new Path(path,
-        s"$CheckpointPrefix${st.version}.json.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-      val out = f.create(tmp, true)
-      try out.write(checkpointJson(st).getBytes("UTF-8")) finally out.close()
-      if (!conditionalCommit(f, tmp, dst)) f.delete(tmp, false)
-    }
+    if (!f.exists(dst)) publish(f, dst, newToken(), checkpointJson(st))
   }
 
   private def maybeCheckpoint(spark: SparkSession, path: String,
@@ -1370,11 +1369,12 @@ object ManifestTable {
             generatedAdds: Map[String, String] = Map.empty,
             propertiesFull: Option[Map[String, String]] = None,
             statsSchemaDecl: Option[Seq[String]] = None): Long =
-    commit(df, path, partitionCols, maxAttempts, statsCols,
-      carryForward = false, tag = tag, tagHorizon = tagHorizon,
-      partitionColsDecl = partitionColsDecl, txn = txn,
-      generatedAdds = generatedAdds, propertiesFull = propertiesFull,
-      statsSchemaDecl = statsSchemaDecl)
+    transact(df.sparkSession, path, "manifest", maxAttempts, None)(
+      writeAttempt(_, df, partitionCols, statsCols, carryForward = false,
+        tag = tag, tagHorizon = tagHorizon,
+        partitionColsDecl = partitionColsDecl, txn = txn,
+        generatedAdds = generatedAdds, propertiesFull = propertiesFull,
+        statsSchemaDecl = statsSchemaDecl))
 
   /** MAINTENANCE overwrite (compact / Z-order): the same commit as
     * [[write]] but with the expectations gate OFF — a rewrite
@@ -1386,8 +1386,9 @@ object ManifestTable {
   private def writeRewrite(df: DataFrame, path: String,
                            partitionCols: Seq[String] = Nil,
                            statsCols: Seq[String] = Nil): Long =
-    commit(df, path, partitionCols, maxAttempts = 3, statsCols,
-      carryForward = false, tag = None, gateExpectations = false)
+    transact(df.sparkSession, path, "manifest", 3, None)(
+      writeAttempt(_, df, partitionCols, statsCols, carryForward = false,
+        tag = None, gateExpectations = false))
 
   /** Transactional APPEND: commit a log entry adding this batch's files
     * — O(new files) bytes, regardless of table size. Data files of
@@ -1399,9 +1400,15 @@ object ManifestTable {
              partitionCols: Seq[String] = Nil, maxAttempts: Int = 3,
              statsCols: Seq[String] = Nil, tag: Option[String] = None,
              tagHorizon: Int = DefaultTagHorizon,
-             txn: Option[(String, Long)] = None): Long =
-    commit(df, path, partitionCols, maxAttempts, statsCols,
-      carryForward = true, tag = tag, tagHorizon = tagHorizon, txn = txn)
+             txn: Option[(String, Long)] = None): Long = {
+    require(partitionCols.isEmpty,
+      "append is unpartitioned by contract: a partitioned append would mix " +
+        "k=v and flat snapshot layouts under one basePath, which Spark's " +
+        "partition discovery rejects at read time")
+    transact(df.sparkSession, path, "manifest", maxAttempts, None)(
+      writeAttempt(_, df, partitionCols, statsCols, carryForward = true,
+        tag = tag, tagHorizon = tagHorizon, txn = txn))
+  }
 
   /** The last committed writer-transaction version for `appId`
     * (Delta's `txnVersion(appId)` — the resume point an idempotent
@@ -1423,7 +1430,7 @@ object ManifestTable {
       case None => 0L
       case Some(n) => strArr(n, "adds").map { r =>
         try f.getFileStatus(new Path(resolveRef(path, r))).getLen
-        catch { case _: Throwable => 0L }
+        catch { case NonFatal(_) => 0L }
       }.sum
     }
   }
@@ -1503,43 +1510,36 @@ object ManifestTable {
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
       .map(s => s.getPath.toUri.toString).sorted.toSeq
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"COPY INTO needs a committed table at $path — declare it " +
-            "first (CREATE TABLE schema DDL or an initial write)"))
-      val st = resolveState(spark, path, prevV)
-      val newFiles = listed.filterNot(st.copyFiles.toSet)
-      if (newFiles.isEmpty) return (prevV, 0)
-      val reader = fmt match {
-        case "parquet" => spark.read.parquet(newFiles: _*)
-        case "csv" => spark.read.option("header", "true")
-          .option("inferSchema", "true").csv(newFiles: _*)
-        case "json" => spark.read.json(newFiles: _*)
-      }
-      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-      val extra = reader.columns.filterNot(schema.fieldNames.contains)
-      require(extra.isEmpty,
-        s"source carries columns the table lacks: ${extra.mkString(", ")}" +
-          " — evolve the table first (ADD COLUMNS) or drop them")
-      val aligned = reader.select(schema.fields
-        .filter(f => reader.columns.contains(f.name))
-        .map(f => org.apache.spark.sql.functions.col(f.name)
-          .cast(f.dataType).as(f.name)).toSeq: _*)
-      try return (commit(aligned, path, Nil, maxAttempts = 1, Nil,
-        carryForward = true, tag = None, copyAdds = newFiles),
-        newFiles.length)
-      catch {
-        // lost an OCC race — the winner may have been another COPY of
-        // overlapping files: recompute the ledger diff and retry
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost") =>
-          attempt += 1
+    // the ledger diff runs inside the attempt: a race lost to another
+    // COPY of overlapping files re-diffs against the winner's ledger
+    var ingested = 0
+    val v = transact(spark, path, "COPY INTO", maxAttempts, Some(
+        s"COPY INTO needs a committed table at $path — declare it " +
+          "first (CREATE TABLE schema DDL or an initial write)")) { t =>
+      val newFiles = listed.filterNot(t.st.copyFiles.toSet)
+      ingested = newFiles.length
+      if (newFiles.isEmpty) Done(t.base)
+      else {
+        val reader = fmt match {
+          case "parquet" => spark.read.parquet(newFiles: _*)
+          case "csv" => spark.read.option("header", "true")
+            .option("inferSchema", "true").csv(newFiles: _*)
+          case "json" => spark.read.json(newFiles: _*)
+        }
+        val schema = t.st.schema.getOrElse(readStateDf(spark, path, t.st).schema)
+        val extra = reader.columns.filterNot(schema.fieldNames.contains)
+        require(extra.isEmpty,
+          s"source carries columns the table lacks: ${extra.mkString(", ")}" +
+            " — evolve the table first (ADD COLUMNS) or drop them")
+        val aligned = reader.select(schema.fields
+          .filter(f => reader.columns.contains(f.name))
+          .map(f => org.apache.spark.sql.functions.col(f.name)
+            .cast(f.dataType).as(f.name)).toSeq: _*)
+        writeAttempt(t, aligned, Nil, Nil, carryForward = true, tag = None,
+          copyAdds = newFiles)
       }
     }
-    throw new IllegalStateException(
-      s"COPY INTO lost $maxAttempts races at $path — giving up")
+    (v, ingested)
   }
 
   /** The COPY INTO ledger at the current version — fully-qualified
@@ -1573,19 +1573,12 @@ object ManifestTable {
     require(files.nonEmpty, s"no parquet files under $path to convert")
     val adds = files.map(p => f.makeQualified(p).toUri.toString).sorted
     val schema = spark.read.parquet(path).schema
-    val json = deltaJson(1L, System.currentTimeMillis(), adds, Nil,
-      Map.empty, None, DefaultTagHorizon, Some(schema),
-      op = Some("CONVERT"))
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(path, s"${ManifestPrefix}1.json.$token.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (!conditionalCommit(f, tmp, manifestPath(path, 1L))) {
-      f.delete(tmp, false)
+    val json = deltaJson(1L, System.currentTimeMillis(), adds,
+      schema = Some(schema), op = Some("CONVERT"))
+    if (!publish(f, manifestPath(path, 1L), newToken(), json))
       throw new IllegalStateException(
         s"CONVERT lost the commit race at $path — another writer " +
           "created the table concurrently")
-    }
     1L
   }
 
@@ -1656,76 +1649,36 @@ object ManifestTable {
                          exprSql: String, maxAttempts: Int = 3): Long = {
     import org.apache.spark.sql.functions.{col, expr, not}
     require(name.nonEmpty, "generated column name must be non-empty")
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(0L)
-      if (prevV > 0L) {
-        val st = resolveState(spark, path, prevV)
-        val schema = st.schema
-        if (schema.exists(_.fieldNames.nonEmpty) && st.files.nonEmpty) {
-          require(schema.exists(_.fieldNames.contains(name)),
-            s"cannot declare generated column '$name' on non-empty $path: " +
-              "existing rows lack it (backfill with a rewrite first)")
-          val divergent = readStateDf(spark, path, st)
-            .filter(not(col(name) <=> expr(exprSql))).count()
-          require(divergent == 0L,
-            s"cannot declare generated column '$name' = ($exprSql) at " +
-              s"$path: $divergent existing rows diverge")
-        }
+    fs(spark, path).mkdirs(new Path(path))
+    transact(spark, path, "generated-column", maxAttempts, None) { t =>
+      val schema = t.st.schema
+      if (schema.exists(_.fieldNames.nonEmpty) && t.st.files.nonEmpty) {
+        require(schema.exists(_.fieldNames.contains(name)),
+          s"cannot declare generated column '$name' on non-empty $path: " +
+            "existing rows lack it (backfill with a rewrite first)")
+        val divergent = readStateDf(spark, path, t.st)
+          .filter(not(col(name) <=> expr(exprSql))).count()
+        require(divergent == 0L,
+          s"cannot declare generated column '$name' = ($exprSql) at " +
+            s"$path: $divergent existing rows diverge")
       }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        generatedAdds = Map(name -> exprSql))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Publish(deltaJson(t.version, t.ts,
+        generatedAdds = Map(name -> exprSql)))
     }
-    throw new IllegalStateException(
-      s"generated-column commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Un-declare a generated column (metadata-only; the column itself
     * stays an ordinary column).
     */
   def dropGeneratedColumn(spark: SparkSession, path: String, name: String,
-                          maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
-      require(st.generated.contains(name),
+                          maxAttempts: Int = 3): Long =
+    transact(spark, path, "generated-column", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      require(t.st.generated.contains(name),
         s"no generated column '$name' at $path (live: " +
-          s"${st.generated.keys.toSeq.sorted.mkString(", ")})")
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        generatedRemoves = Seq(name))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+          s"${t.st.generated.keys.toSeq.sorted.mkString(", ")})")
+      Publish(deltaJson(t.version, t.ts, generatedRemoves = Seq(name)))
     }
-    throw new IllegalStateException(
-      s"generated-column commit lost $maxAttempts races at $path — giving up")
-  }
 
   /** The table's live CHECK constraints (name → SQL expression). */
   def checkConstraints(spark: SparkSession, path: String): Map[String, String] =
@@ -1744,35 +1697,15 @@ object ManifestTable {
                          exprSql: String, maxAttempts: Int = 3): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(name.nonEmpty, "constraint name must be non-empty")
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version at $path to constrain"))
-      val st = resolveState(spark, path, prevV)
-      val violations = readStateDf(spark, path, st)
+    transact(spark, path, "constraint", maxAttempts,
+        Some(s"no committed version at $path to constrain")) { t =>
+      val violations = readStateDf(spark, path, t.st)
         .filter(not(coalesce(expr(exprSql), lit(true)))).count()
       require(violations == 0L,
         s"cannot add CHECK constraint '$name' ($exprSql) at $path: " +
           s"$violations existing rows violate it")
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        constraintAdds = Map(name -> exprSql))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Publish(deltaJson(t.version, t.ts, constraintAdds = Map(name -> exprSql)))
     }
-    throw new IllegalStateException(
-      s"constraint commit lost $maxAttempts races at $path — giving up")
   }
 
   /** `ALTER TABLE ... ADD COLUMNS` — METADATA-ONLY additive schema
@@ -1788,13 +1721,9 @@ object ManifestTable {
   def addColumns(spark: SparkSession, path: String,
                  cols: StructType, maxAttempts: Int = 3): Long = {
     require(cols.fields.nonEmpty, "ADD COLUMNS needs at least one column")
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version at $path to evolve"))
-      val st = resolveState(spark, path, prevV)
+    transact(spark, path, "ADD COLUMNS", maxAttempts,
+        Some(s"no committed version at $path to evolve")) { t =>
+      val st = t.st
       val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
       cols.fieldNames.foreach(n =>
         require(!schema.fieldNames.contains(n),
@@ -1807,23 +1736,9 @@ object ManifestTable {
           val fresh = cols.fieldNames.map { n => id += 1; n -> s"col-$id" }
           (Some(st.mapping ++ fresh), Some(id))
         }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, Some(newSchema),
-        mapping = mapOpt, maxColId = maxIdOpt, op = Some("SCHEMA"))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Publish(deltaJson(t.version, t.ts, schema = Some(newSchema),
+        mapping = mapOpt, maxColId = maxIdOpt, op = Some("SCHEMA")))
     }
-    throw new IllegalStateException(
-      s"ADD COLUMNS commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Declare a table-bound EXPECTATION (DLT's `CONSTRAINT name EXPECT
@@ -1845,13 +1760,9 @@ object ManifestTable {
                      condSql: String, onViolation: String = "warn",
                      maxAttempts: Int = 3): Long = {
     require(name.nonEmpty, "expectation name must be non-empty")
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version at $path to declare an expectation on"))
-      val st = resolveState(spark, path, prevV)
+    transact(spark, path, "expectation", maxAttempts, Some(
+        s"no committed version at $path to declare an expectation on")) { t =>
+      val st = t.st
       // fail-fast analysis probe: the condition must resolve against
       // the table's logical schema (zero data read — one empty frame)
       val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
@@ -1866,56 +1777,21 @@ object ManifestTable {
             s"expectation '$name' condition ($condSql) does not " +
               s"resolve against the table schema: ${ex.getMessage}")
       }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        expectationAdds =
-          Map(name -> Expectations.encode(onViolation, condSql)))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Publish(deltaJson(t.version, t.ts, expectationAdds =
+        Map(name -> Expectations.encode(onViolation, condSql))))
     }
-    throw new IllegalStateException(
-      s"expectation commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Un-declare an expectation (metadata-only commit). */
   def dropExpectation(spark: SparkSession, path: String, name: String,
-                      maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
-      require(st.expectations.contains(name),
+                      maxAttempts: Int = 3): Long =
+    transact(spark, path, "expectation", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      require(t.st.expectations.contains(name),
         s"no expectation '$name' at $path (live: " +
-          s"${st.expectations.keys.toSeq.sorted.mkString(", ")})")
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        expectationRemoves = Seq(name))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+          s"${t.st.expectations.keys.toSeq.sorted.mkString(", ")})")
+      Publish(deltaJson(t.version, t.ts, expectationRemoves = Seq(name)))
     }
-    throw new IllegalStateException(
-      s"expectation commit lost $maxAttempts races at $path — giving up")
-  }
 
   /** The table's live expectations (name → `<action>:<condSql>`). */
   def tableExpectations(spark: SparkSession,
@@ -1986,53 +1862,31 @@ object ManifestTable {
                         maxAttempts: Int = 3): Long = {
     import org.apache.spark.sql.functions.{col, max => smax}
     require(step > 0, "identity step must be positive")
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(0L)
+    fs(spark, path).mkdirs(new Path(path))
+    transact(spark, path, "identity", maxAttempts, None) { t =>
+      val st = t.st
       var water = startWith - step
-      if (prevV > 0L) {
-        val st = resolveState(spark, path, prevV)
-        require(st.identityCol.isEmpty,
-          s"table $path already has identity column " +
-            s"'${st.identityCol.map(st.logical).getOrElse("")}'")
-        if (st.files.nonEmpty) {
-          val sc = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-          require(sc.fieldNames.contains(column),
-            s"no column '$column' at $path to declare IDENTITY " +
-              "(declare before the first write to have it assigned)")
-          val df = readStateDf(spark, path, st)
-          val nulls = df.filter(col(column).isNull).count()
-          require(nulls == 0L,
-            s"cannot declare IDENTITY on '$column': $nulls existing " +
-              "NULLs (a NULL is indistinguishable from 'assign me')")
-          water = Option(df.agg(smax(col(column).cast("long"))).head().get(0))
-            .map(_.asInstanceOf[Long]).map(math.max(_, water))
-            .getOrElse(water)
-        }
+      require(st.identityCol.isEmpty,
+        s"table $path already has identity column " +
+          s"'${st.identityCol.map(st.logical).getOrElse("")}'")
+      if (st.files.nonEmpty) {
+        val sc = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+        require(sc.fieldNames.contains(column),
+          s"no column '$column' at $path to declare IDENTITY " +
+            "(declare before the first write to have it assigned)")
+        val df = readStateDf(spark, path, st)
+        val nulls = df.filter(col(column).isNull).count()
+        require(nulls == 0L,
+          s"cannot declare IDENTITY on '$column': $nulls existing " +
+            "NULLs (a NULL is indistinguishable from 'assign me')")
+        water = Option(df.agg(smax(col(column).cast("long"))).head().get(0))
+          .map(_.asInstanceOf[Long]).map(math.max(_, water))
+          .getOrElse(water)
       }
-      val version = prevV + 1L
-      val st0 = if (prevV > 0L) Some(resolveState(spark, path, prevV)) else None
-      val physCol = st0.map(_.phys(column)).getOrElse(column)
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        op = Some("METADATA"),
-        identity = Some((physCol, step)),
-        identityHighWater = Some(water))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Publish(deltaJson(t.version, t.ts, op = Some("METADATA"),
+        identity = Some((st.phys(column), step)),
+        identityHighWater = Some(water)))
     }
-    throw new IllegalStateException(
-      s"identity commit lost $maxAttempts races at $path — giving up")
   }
 
   /** The declared identity column (logical name), step, and current
@@ -2047,34 +1901,14 @@ object ManifestTable {
 
   /** Drop a named CHECK constraint (metadata-only commit). */
   def dropCheckConstraint(spark: SparkSession, path: String, name: String,
-                          maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
-      require(st.constraints.contains(name),
+                          maxAttempts: Int = 3): Long =
+    transact(spark, path, "constraint", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      require(t.st.constraints.contains(name),
         s"no CHECK constraint '$name' at $path (live: " +
-          s"${st.constraints.keys.toSeq.sorted.mkString(", ")})")
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        constraintRemoves = Seq(name))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+          s"${t.st.constraints.keys.toSeq.sorted.mkString(", ")})")
+      Publish(deltaJson(t.version, t.ts, constraintRemoves = Seq(name)))
     }
-    throw new IllegalStateException(
-      s"constraint commit lost $maxAttempts races at $path — giving up")
-  }
 
   // ------------------------------------------------------------------
   // Column mapping (metadata-only RENAME / DROP COLUMN)
@@ -2132,12 +1966,9 @@ object ManifestTable {
   def renameColumn(spark: SparkSession, path: String, from: String,
                    to: String, maxAttempts: Int = 3): Long = {
     require(from != to, s"rename '$from' -> '$to' is a no-op")
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
+    transact(spark, path, "rename", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      val st = t.st
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"table $path has no committed schema — cannot rename"))
       require(schema.fieldNames.contains(from),
@@ -2155,7 +1986,6 @@ object ManifestTable {
         if (fd.name == from) fd.copy(name = to) else fd))
       val newMapping = ((st.mapping - from) + (to -> st.phys(from)))
         .filterNot { case (l, p) => l == p }
-      val version = prevV + 1L
       // a generated column renames WITH its declaration, and any
       // generated column whose EXPRESSION references the renamed source
       // has the identifier rewritten in place (same word-boundary
@@ -2173,27 +2003,14 @@ object ManifestTable {
       // a column DEFAULT renames WITH its column (it is keyed by the
       // logical name, like the generated declaration)
       val defMove = st.defaults.get(from)
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, Some(newSchema),
+      Publish(deltaJson(t.version, t.ts, schema = Some(newSchema),
         mapping = Some(newMapping),
         maxColId = Some(math.max(st.maxColId, 1L)),
         generatedAdds = genMove.map(e => to -> e).toMap ++ genRewrites,
         generatedRemoves = genMove.map(_ => from).toSeq,
         defaultAdds = defMove.map(e => to -> e).toMap,
-        defaultRemoves = defMove.map(_ => from).toSeq)
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+        defaultRemoves = defMove.map(_ => from).toSeq))
     }
-    throw new IllegalStateException(
-      s"rename commit lost $maxAttempts races at $path — giving up")
   }
 
   /** DROP COLUMN as a METADATA-ONLY commit: existing files keep the
@@ -2208,13 +2025,10 @@ object ManifestTable {
     * first), and on partitioned layouts.
     */
   def dropColumn(spark: SparkSession, path: String, name: String,
-                 maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
+                 maxAttempts: Int = 3): Long =
+    transact(spark, path, "drop-column", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      val st = t.st
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"table $path has no committed schema — cannot drop"))
       require(schema.fieldNames.contains(name),
@@ -2240,30 +2054,15 @@ object ManifestTable {
           s"cannot drop '$name' at $path: generated column '$g' " +
             s"references it (${st.generated(g)}) — drop it first"))
       val newSchema = StructType(schema.fields.filterNot(_.name == name))
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, Some(newSchema),
+      Publish(deltaJson(t.version, t.ts, schema = Some(newSchema),
         mapping = Some(st.mapping - name),
         maxColId = Some(math.max(st.maxColId, 1L)),
         generatedRemoves = if (st.generated.contains(name)) Seq(name) else Nil,
         // the DEFAULT dies with its column — a re-added same-name
         // column must NOT resurrect the stale declaration (the same
         // never-resurrect contract the physical mapping enforces)
-        defaultRemoves = if (st.defaults.contains(name)) Seq(name) else Nil)
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+        defaultRemoves = if (st.defaults.contains(name)) Seq(name) else Nil))
     }
-    throw new IllegalStateException(
-      s"drop-column commit lost $maxAttempts races at $path — giving up")
-  }
 
   // ------------------------------------------------------------------
   // File-level bloom index (point-lookup pruning on unclustered keys)
@@ -2290,33 +2089,13 @@ object ManifestTable {
                     items: Long = 1L << 20, fpp: Double = 0.01,
                     maxAttempts: Int = 3): Long = {
     require(cols.nonEmpty, "need at least one bloom column")
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(0L)
-      // the spec stores PHYSICAL names (rename-safe); identity on
-      // unmapped or empty tables
-      val physCols =
-        if (prevV == 0L) cols
-        else { val st = resolveState(spark, path, prevV); cols.map(st.phys) }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        bloomSpec = Some(BloomSpec(physCols, items, fpp)))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+    fs(spark, path).mkdirs(new Path(path))
+    // the spec stores PHYSICAL names (rename-safe); identity on unmapped
+    // or empty tables
+    transact(spark, path, "bloom-index", maxAttempts, None) { t =>
+      Publish(deltaJson(t.version, t.ts,
+        bloomSpec = Some(BloomSpec(cols.map(t.st.phys), items, fpp))))
     }
-    throw new IllegalStateException(
-      s"bloom-index commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Build the per-file bloom sidecar for this commit's staged files:
@@ -2479,31 +2258,11 @@ object ManifestTable {
     */
   def setStatsColumns(spark: SparkSession, path: String,
                       cols: Seq[String], maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(0L)
-      val physCols =
-        if (prevV == 0L) cols
-        else { val st = resolveState(spark, path, prevV); cols.map(st.phys) }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        op = Some("SET_STATS"), statsSchema = Some(physCols))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+    fs(spark, path).mkdirs(new Path(path))
+    transact(spark, path, "stats-schema", maxAttempts, None) { t =>
+      Publish(deltaJson(t.version, t.ts, op = Some("SET_STATS"),
+        statsSchema = Some(cols.map(t.st.phys))))
     }
-    throw new IllegalStateException(
-      s"stats-schema commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Declare CLUSTER COLUMNS (the Delta 3.x liquid-clustering shape,
@@ -2530,41 +2289,19 @@ object ManifestTable {
                         cols: Seq[String], maxAttempts: Int = 3): Long = {
     require(cols.nonEmpty && cols.length <= 8,
       s"cluster columns: 1..8 supported, got ${cols.length}")
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(0L)
-      val (physCols, statsUnion) =
-        if (prevV == 0L) (cols, cols)
-        else {
-          val st = resolveState(spark, path, prevV)
-          // Delta's rule: clustering REPLACES partitioning — a k=v
-          // layout already fixes file boundaries by partition value
-          require(partitionColsOf(st.files).isEmpty,
-            s"cannot cluster partitioned table $path — clustering " +
-              "replaces partitioning (rewrite unpartitioned first)")
-          val pc = cols.map(st.phys)
-          (pc, (st.statsSchemaCols ++ pc).distinct)
-        }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        op = Some("CLUSTER_BY"), clusterCols = Some(physCols),
-        statsSchema = Some(statsUnion))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+    fs(spark, path).mkdirs(new Path(path))
+    transact(spark, path, "cluster-by", maxAttempts, None) { t =>
+      val st = t.st
+      // Delta's rule: clustering REPLACES partitioning — a k=v layout
+      // already fixes file boundaries by partition value
+      require(partitionColsOf(st.files).isEmpty,
+        s"cannot cluster partitioned table $path — clustering " +
+          "replaces partitioning (rewrite unpartitioned first)")
+      val physCols = cols.map(st.phys)
+      Publish(deltaJson(t.version, t.ts, op = Some("CLUSTER_BY"),
+        clusterCols = Some(physCols),
+        statsSchema = Some((st.statsSchemaCols ++ physCols).distinct)))
     }
-    throw new IllegalStateException(
-      s"cluster-by commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Incremental cluster maintenance (liquid clustering's OPTIMIZE):
@@ -2589,184 +2326,134 @@ object ManifestTable {
                         targetFiles: Int = 0,
                         maxAttempts: Int = 3): Long = {
     import org.apache.spark.sql.functions.{col, lit, max => smax, min => smin}
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
-      assertWritable(st, path)
+    transact(spark, path, "cluster", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      val st = t.st
       require(st.clusterCols.nonEmpty,
         s"no cluster columns declared at $path — setClusterColumns first")
       val clusteredSet = st.clusteredFiles.toSet
       val unclustered = st.files.filterNot(clusteredSet)
-      if (unclustered.isEmpty) return prevV // fully clustered: no-op
-      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-      val logicalCols = st.clusterCols.map(st.logical)
-      // bounding box of the UNCLUSTERED data per cluster column — from
-      // manifest stats when every unclustered file has complete stats,
-      // else one min/max scan of just those files
-      // the overlap arithmetic only exists for NUMERIC-prunable
-      // dimensions (the same soundness gate as every other prune —
-      // decimal/string/date comparisons are hazards, see statsPrunable);
-      // a non-numeric dimension contributes "overlaps everything",
-      // which degrades gracefully toward a fuller recluster, never a
-      // wrong one. The Z-key itself is fine with any type (cast-to-
-      // double nulls collapse to one grid cell; 1-column string
-      // clustering range-sorts natively).
-      val numericDims: Seq[Boolean] = logicalCols.map(prunableColumn(st, _))
-      def statsBox: Option[Seq[Option[(Double, Double)]]] = {
-        val per = st.clusterCols.zip(numericDims).map {
-          case (_, false) => Some(None)
-          case (c, true) =>
-            val rs = unclustered.map(fl => st.stats.get(fl).flatMap(_.get(c)))
-            if (rs.exists(r => !r.exists(s => s.complete && s.typ != "string")))
-              None
-            else Some(Some((rs.flatten.map(_.min.toString.toDouble).min,
-              rs.flatten.map(_.max.toString.toDouble).max)))
-        }
-        if (per.forall(_.isDefined)) Some(per.flatten) else None
-      }
-      val box: Seq[Option[(Double, Double)]] = statsBox.getOrElse {
-        val b = readStateDf(spark, path, st.copy(files = unclustered))
-          .agg(logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).head,
-            logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).tail: _*)
-          .head()
-        logicalCols.indices.map { i =>
-          if (!numericDims(i)) None
-          else {
-            val lo = if (b.isNullAt(2 * i)) Double.NegativeInfinity
-              else b.get(2 * i).toString.toDouble
-            val hi = if (b.isNullAt(2 * i + 1)) Double.PositiveInfinity
-              else b.get(2 * i + 1).toString.toDouble
-            Some((lo, hi))
+      if (unclustered.isEmpty) Done(t.base) // fully clustered: no-op
+      else {
+        val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+        val logicalCols = st.clusterCols.map(st.logical)
+        // bounding box of the UNCLUSTERED data per cluster column — from
+        // manifest stats when every unclustered file has complete stats,
+        // else one min/max scan of just those files
+        // the overlap arithmetic only exists for NUMERIC-prunable
+        // dimensions (the same soundness gate as every other prune —
+        // decimal/string/date comparisons are hazards, see statsPrunable);
+        // a non-numeric dimension contributes "overlaps everything",
+        // which degrades gracefully toward a fuller recluster, never a
+        // wrong one. The Z-key itself is fine with any type (cast-to-
+        // double nulls collapse to one grid cell; 1-column string
+        // clustering range-sorts natively).
+        val numericDims: Seq[Boolean] = logicalCols.map(prunableColumn(st, _))
+        def statsBox: Option[Seq[Option[(Double, Double)]]] = {
+          val per = st.clusterCols.zip(numericDims).map {
+            case (_, false) => Some(None)
+            case (c, true) =>
+              val rs = unclustered.map(fl => st.stats.get(fl).flatMap(_.get(c)))
+              if (rs.exists(r => !r.exists(s => s.complete && s.typ != "string")))
+                None
+              else Some(Some((rs.flatten.map(_.min.toString.toDouble).min,
+                rs.flatten.map(_.max.toString.toDouble).max)))
           }
+          if (per.forall(_.isDefined)) Some(per.flatten) else None
         }
-      }
-      // clustered files whose stats box INTERSECTS the unclustered box
-      // on every dimension must merge in (missing/incomplete stats and
-      // non-numeric dimensions → conservative overlap: clustering
-      // quality beats skipping a file)
-      val overlapping = st.clusteredFiles.filter { fl =>
-        st.clusterCols.zip(box).forall {
-          case (_, None) => true
-          case (c, Some((lo, hi))) =>
-            st.stats.get(fl).flatMap(_.get(c)) match {
-              case Some(s) if s.complete && s.typ != "string" =>
-                s.max.toString.toDouble >= lo && s.min.toString.toDouble <= hi
-              case _ => true
-            }
-        }
-      }
-      val rewrite = unclustered ++ overlapping
-      // read the selected rows (DV-aware; ids ride through) and Z-order
-      // them over THIS subset's observed domain
-      val idSchema = st.schema.map(sc => StructType(sc.fields :+
-        org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-      val rows = readStateDf(spark, path, st.copy(files = rewrite,
-        schema = if (st.rowTracking) idSchema else st.schema))
-      val nOut = if (targetFiles > 0) targetFiles
-        else math.max(1, rewrite.size)
-      val clustered =
-        if (logicalCols.length == 1)
-          rows.repartitionByRange(nOut, col(logicalCols.head))
-            .sortWithinPartitions(col(logicalCols.head))
-        else {
-          val b = rows.agg(
-            logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).head,
-            logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).tail: _*)
+        val box: Seq[Option[(Double, Double)]] = statsBox.getOrElse {
+          val b = readStateDf(spark, path, st.copy(files = unclustered))
+            .agg(logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).head,
+              logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).tail: _*)
             .head()
-          def d(i: Int): Double =
-            if (b.isNullAt(i)) 0.0 else b.get(i).toString.toDouble
-          def norm(c: String, lo: Double, hi: Double) =
-            if (hi <= lo) lit(0)
-            else (((col(c).cast("double") - lit(lo)) / lit(hi - lo))
-              * lit(4294967000.0) - lit(2147483500.0)).cast("long").cast("int")
-          val zNames = logicalCols.indices.map(i => s"_graft_cz$i")
-          val keyed = logicalCols.zipWithIndex.foldLeft(rows) {
-            case (df0, (c, i)) =>
-              df0.withColumn(zNames(i), norm(c, d(2 * i), d(2 * i + 1)))
+          logicalCols.indices.map { i =>
+            if (!numericDims(i)) None
+            else {
+              val lo = if (b.isNullAt(2 * i)) Double.NegativeInfinity
+                else b.get(2 * i).toString.toDouble
+              val hi = if (b.isNullAt(2 * i + 1)) Double.PositiveInfinity
+                else b.get(2 * i + 1).toString.toDouble
+              Some((lo, hi))
+            }
           }
-          val out =
-            if (logicalCols.length == 2)
-              graft.functions.ZOrderKey.clusterBy(keyed,
-                zNames(0), zNames(1), nOut)
-            else graft.functions.ZOrderKeyN.clusterByN(keyed, zNames, nOut)
-          out.drop(zNames: _*)
         }
-      val version = prevV + 1L
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val snapDir = s"$path/snap-$version-$token"
-      val physOut =
-        if (!st.mapped) clustered
-        else clustered.select(clustered.schema.fieldNames.map(n =>
-          col(n).as(st.phys(n))).toSeq: _*)
-      physOut.write.mode("overwrite").parquet(snapDir)
-      val staged = listDataFiles(f, new Path(snapDir))
-      val stagedRel = staged.map(p => relativize(new Path(path), p))
-      val physStats = (st.statsSchemaCols ++ st.clusterCols).distinct
-      val newStats: Map[String, Map[String, ColStats]] =
-        stagedFooterStats(spark, path, staged, physStats)
-      val bloomAdds = st.bloom match {
-        case Some(spec) if spec.cols.nonEmpty =>
-          buildBloomSidecar(spark, path, staged, spec, version, token)
-        case _ => Nil
+        // clustered files whose stats box INTERSECTS the unclustered box
+        // on every dimension must merge in (missing/incomplete stats and
+        // non-numeric dimensions → conservative overlap: clustering
+        // quality beats skipping a file)
+        val overlapping = st.clusteredFiles.filter { fl =>
+          st.clusterCols.zip(box).forall {
+            case (_, None) => true
+            case (c, Some((lo, hi))) =>
+              st.stats.get(fl).flatMap(_.get(c)) match {
+                case Some(s) if s.complete && s.typ != "string" =>
+                  s.max.toString.toDouble >= lo && s.min.toString.toDouble <= hi
+                case _ => true
+              }
+          }
+        }
+        val rewrite = unclustered ++ overlapping
+        // read the selected rows (DV-aware; ids ride through) and Z-order
+        // them over THIS subset's observed domain
+        val idSchema = st.schema.map(sc => StructType(sc.fields :+
+          org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
+        val rows = readStateDf(spark, path, st.copy(files = rewrite,
+          schema = if (st.rowTracking) idSchema else st.schema))
+        val nOut = if (targetFiles > 0) targetFiles
+          else math.max(1, rewrite.size)
+        val clustered =
+          if (logicalCols.length == 1)
+            rows.repartitionByRange(nOut, col(logicalCols.head))
+              .sortWithinPartitions(col(logicalCols.head))
+          else {
+            val b = rows.agg(
+              logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).head,
+              logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).tail: _*)
+              .head()
+            def d(i: Int): Double =
+              if (b.isNullAt(i)) 0.0 else b.get(i).toString.toDouble
+            def norm(c: String, lo: Double, hi: Double) =
+              if (hi <= lo) lit(0)
+              else (((col(c).cast("double") - lit(lo)) / lit(hi - lo))
+                * lit(4294967000.0) - lit(2147483500.0)).cast("long").cast("int")
+            val zNames = logicalCols.indices.map(i => s"_graft_cz$i")
+            val keyed = logicalCols.zipWithIndex.foldLeft(rows) {
+              case (df0, (c, i)) =>
+                df0.withColumn(zNames(i), norm(c, d(2 * i), d(2 * i + 1)))
+            }
+            val out =
+              if (logicalCols.length == 2)
+                graft.functions.ZOrderKey.clusterBy(keyed,
+                  zNames(0), zNames(1), nOut)
+              else graft.functions.ZOrderKeyN.clusterByN(keyed, zNames, nOut)
+            out.drop(zNames: _*)
+          }
+        val snapDir = t.dir("snap")
+        val physOut =
+          if (!st.mapped) clustered
+          else clustered.select(clustered.schema.fieldNames.map(n =>
+            col(n).as(st.phys(n))).toSeq: _*)
+        physOut.write.mode("overwrite").parquet(snapDir)
+        val staged = listDataFiles(t.f, new Path(snapDir))
+        val stagedRel = staged.map(t.rel)
+        val newStats = stagedFooterStats(spark, path, staged,
+          (st.statsSchemaCols ++ st.clusterCols).distinct)
+        val (bloomAdds, ndvAdds) = t.sidecars(staged)
+        Publish(deltaJson(t.version, t.ts, stagedRel, rewrite, newStats,
+            schema = Some(schema), bloomAdds = bloomAdds, ndvAdds = ndvAdds,
+            op = Some("CLUSTER"), clusteredAdds = stagedRel),
+          snapDir +: t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
       }
-      val ndvAdds = st.ndvCols match {
-        case Nil  => Nil
-        case cols => buildNdvSidecar(spark, path, staged, cols, version, token)
-      }
-      val json = deltaJson(version, commitTs(spark, path, version), stagedRel,
-        rewrite, newStats, None, DefaultTagHorizon, Some(schema),
-        bloomAdds = bloomAdds, ndvAdds = ndvAdds, op = Some("CLUSTER"),
-        clusteredAdds = stagedRel)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      f.delete(new Path(snapDir), true)
-      if (bloomAdds.nonEmpty)
-        f.delete(new Path(s"$path/bloom-$version-$token"), true)
-      if (ndvAdds.nonEmpty)
-        f.delete(new Path(s"$path/ndv-$version-$token"), true)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"cluster commit lost $maxAttempts races at $path — giving up")
   }
 
   def setNdvStats(spark: SparkSession, path: String, cols: Seq[String],
                   maxAttempts: Int = 3): Long = {
     require(cols.nonEmpty, "need at least one NDV column")
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(0L)
-      val physCols =
-        if (prevV == 0L) cols
-        else { val st = resolveState(spark, path, prevV); cols.map(st.phys) }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        ndvCols = Some(physCols))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+    fs(spark, path).mkdirs(new Path(path))
+    transact(spark, path, "ndv-stats", maxAttempts, None) { t =>
+      Publish(deltaJson(t.version, t.ts, ndvCols = Some(cols.map(t.st.phys))))
     }
-    throw new IllegalStateException(
-      s"ndv-stats commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Build the per-file NDV sidecar for this commit's staged files: one
@@ -2921,13 +2608,10 @@ object ManifestTable {
     */
   def upgradeProtocol(spark: SparkSession, path: String,
                       minReader: Int, minWriter: Int,
-                      maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
+                      maxAttempts: Int = 3): Long =
+    transact(spark, path, "protocol", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      val st = t.st
       require(minReader >= st.minReader && minWriter >= st.minWriter,
         s"protocol downgrade refused at $path: current " +
           s"(${st.minReader}, ${st.minWriter}), requested " +
@@ -2938,24 +2622,9 @@ object ManifestTable {
           s"($SupportedReaderVersion, $SupportedWriterVersion); " +
           s"requested ($minReader, $minWriter) — a client must " +
           "implement the protocol it declares (Delta's rule)")
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        protocol = Some((minReader, minWriter)), op = Some("PROTOCOL"))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Publish(deltaJson(t.version, t.ts,
+        protocol = Some((minReader, minWriter)), op = Some("PROTOCOL")))
     }
-    throw new IllegalStateException(
-      s"protocol commit lost $maxAttempts races at $path — giving up")
-  }
 
   /** GENERATE symlink_format_manifest (Delta's `GENERATE` /
     * `deltaTable.generate(...)`) — publish the CURRENT snapshot's live
@@ -3183,15 +2852,10 @@ object ManifestTable {
   }
 
   def setColumnDefault(spark: SparkSession, path: String, column: String,
-                       exprSql: String, maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version at $path to declare a default on"))
-      val st = resolveState(spark, path, prevV)
-      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+                       exprSql: String, maxAttempts: Int = 3): Long =
+    transact(spark, path, "default", maxAttempts,
+        Some(s"no committed version at $path to declare a default on")) { t =>
+      val schema = t.st.schema.getOrElse(readStateDf(spark, path, t.st).schema)
       // SQL identifiers resolve case-insensitively everywhere else the
       // default is CONSUMED (INSERT column lists, UPDATE SET) — the
       // declaration must match, canonicalized to the schema's spelling
@@ -3199,89 +2863,36 @@ object ManifestTable {
         .getOrElse(throw new IllegalArgumentException(
           s"cannot declare a default on unknown column '$column' at $path"))
       validateColumnDefault(spark, canon, exprSql, schema(canon).dataType)
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        defaultAdds = Map(canon -> exprSql), op = Some("METADATA"))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Publish(deltaJson(t.version, t.ts,
+        defaultAdds = Map(canon -> exprSql), op = Some("METADATA")))
     }
-    throw new IllegalStateException(
-      s"default commit lost $maxAttempts races at $path — giving up")
-  }
 
   /** `ALTER TABLE ... ALTER COLUMN c DROP DEFAULT` — the column falls
     * back to NULL fill (absent declarations are a no-op). */
   def dropColumnDefault(spark: SparkSession, path: String, column: String,
-                        maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
+                        maxAttempts: Int = 3): Long =
+    transact(spark, path, "default", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
       // declarations are stored under the schema's spelling; drop the
-      // same way SET resolves — case-insensitively
-      val canon = st.defaults.keys.find(_.equalsIgnoreCase(column))
-        .getOrElse(return prevV) // no declaration: no-op
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        defaultRemoves = Seq(canon), op = Some("METADATA"))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
+      // same way SET resolves — case-insensitively; none is a no-op
+      t.st.defaults.keys.find(_.equalsIgnoreCase(column)) match {
+        case None => Done(t.base)
+        case Some(canon) => Publish(deltaJson(t.version, t.ts,
+          defaultRemoves = Seq(canon), op = Some("METADATA")))
       }
-      f.delete(tmp, false)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"default commit lost $maxAttempts races at $path — giving up")
-  }
 
   private def propertiesCommit(spark: SparkSession, path: String,
                                maxAttempts: Int,
                                change: TableState => Map[String, String],
-                               opName: String): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
-      assertWritable(st, path)
-      val next = change(st)
-      if (next == st.properties) return prevV // no-op change, no commit
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        op = Some(opName), properties = Some(next))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+                               opName: String): Long =
+    transact(spark, path, opName, maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      val next = change(t.st)
+      if (next == t.st.properties) Done(t.base) // no-op change, no commit
+      else Publish(deltaJson(t.version, t.ts,
+        op = Some(opName), properties = Some(next)))
     }
-    throw new IllegalStateException(
-      s"$opName commit lost $maxAttempts races at $path — giving up")
-  }
 
   /** ENABLE ROW TRACKING (Delta 3.x `delta.enableRowTracking`): every
     * row gets a stable long id (hidden physical column [[RowIdCol]])
@@ -3301,38 +2912,18 @@ object ManifestTable {
     */
   def enableRowTracking(spark: SparkSession, path: String,
                         maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(0L)
-      if (prevV > 0L) {
-        val st = resolveState(spark, path, prevV)
-        // "empty" is a ROW-level fact: the declare-schema DDL commit
-        // stages a zero-row parquet file, which must still count as
-        // empty (CREATE TABLE (cols) TBLPROPERTIES enables here)
-        require(st.files.isEmpty ||
-            readStateDf(spark, path, st).limit(1).isEmpty,
-          s"cannot enable row tracking on non-empty $path — ids must " +
-            "exist from the first write to be stable")
-      }
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-        Map.empty, None, DefaultTagHorizon, None,
-        rowTracking = Some(true), rowHighWater = Some(0L))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+    fs(spark, path).mkdirs(new Path(path))
+    transact(spark, path, "row-tracking", maxAttempts, None) { t =>
+      // "empty" is a ROW-level fact: the declare-schema DDL commit
+      // stages a zero-row parquet file, which must still count as
+      // empty (CREATE TABLE (cols) TBLPROPERTIES enables here)
+      require(t.st.files.isEmpty ||
+          readStateDf(spark, path, t.st).limit(1).isEmpty,
+        s"cannot enable row tracking on non-empty $path — ids must " +
+          "exist from the first write to be stable")
+      Publish(deltaJson(t.version, t.ts,
+        rowTracking = Some(true), rowHighWater = Some(0L)))
     }
-    throw new IllegalStateException(
-      s"row-tracking commit lost $maxAttempts races at $path — giving up")
   }
 
   /** Read the current version WITH the stable row id exposed as
@@ -3439,7 +3030,7 @@ object ManifestTable {
     }
   }
 
-  /** Writer-version gate, called by every data-write path. */
+  /** Writer-version gate, run by [[transact]] on every attempt. */
   private def assertWritable(st: TableState, path: String): Unit =
     if (st.minWriter > SupportedWriterVersion)
       throw new IllegalStateException(
@@ -3447,359 +3038,310 @@ object ManifestTable {
           s"${st.minWriter}; this library implements " +
           s"$SupportedWriterVersion — reading is allowed, writing is not")
 
-  private def commit(df: DataFrame, path: String, partitionCols: Seq[String],
-                     maxAttempts: Int, statsCols: Seq[String],
-                     carryForward: Boolean, tag: Option[String],
-                     tagHorizon: Int = DefaultTagHorizon,
-                     partitionColsDecl: Seq[String] = Nil,
-                     copyAdds: Seq[String] = Nil,
-                     txn: Option[(String, Long)] = None,
-                     generatedAdds: Map[String, String] = Map.empty,
-                     propertiesFull: Option[Map[String, String]] = None,
-                     statsSchemaDecl: Option[Seq[String]] = None,
-                     gateExpectations: Boolean = true): Long = {
-    val spark = df.sparkSession
-    val f = fs(spark, path)
-    require(!carryForward || partitionCols.isEmpty,
-      "append is unpartitioned by contract: a partitioned append would mix " +
-        "k=v and flat snapshot layouts under one basePath, which Spark's " +
-        "partition discovery rejects at read time")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prev = currentVersion(spark, path)
-      val prevState = prev.map(resolveState(spark, path, _))
-      prevState.foreach(assertWritable(_, path))
-      // writer-transaction idempotency (Delta's txnAppId/txnVersion,
-      // MONOTONE): a write whose version is at or below the app's last
-      // committed one is a stale replay — skip without committing.
-      // Checked INSIDE the retry loop, so losing an OCC race to a
-      // sibling replay of the same (app, ver) still lands exactly once.
-      txn.foreach { case (app, ver) =>
-        prevState.flatMap(_.txns.get(app)).foreach { last =>
-          if (ver <= last) return prev.get
-        }
+  /** One write/append attempt against `t`'s base: stage the batch in a
+    * fresh snapshot dir and build the log entry that publishes it
+    * ([[write]], [[append]], [[copyInto]] and the maintenance rewrites
+    * all commit through here). */
+  private def writeAttempt(t: Txn, df: DataFrame, partitionCols: Seq[String],
+                           statsCols: Seq[String],
+                           carryForward: Boolean, tag: Option[String],
+                           tagHorizon: Int = DefaultTagHorizon,
+                           partitionColsDecl: Seq[String] = Nil,
+                           copyAdds: Seq[String] = Nil,
+                           txn: Option[(String, Long)] = None,
+                           generatedAdds: Map[String, String] = Map.empty,
+                           propertiesFull: Option[Map[String, String]] = None,
+                           statsSchemaDecl: Option[Seq[String]] = None,
+                           gateExpectations: Boolean = true): Attempt = {
+    import t.{f, path, spark, st, token, version}
+    // writer-transaction idempotency (Delta's txnAppId/txnVersion,
+    // MONOTONE): a write whose version is at or below the app's last
+    // committed one is a stale replay — skip without committing.
+    // Checked INSIDE the retry loop, so losing an OCC race to a
+    // sibling replay of the same (app, ver) still lands exactly once.
+    txn.foreach { case (app, ver) =>
+      st.txns.get(app).foreach { last =>
+        if (ver <= last) return Done(t.base)
       }
-      val version = prev.getOrElse(0L) + 1L
-      // fail-fast twin of the require above: appending onto a base
-      // version whose files live in k=v partition dirs would commit an
-      // unreadable mixed layout
-      if (carryForward) prevState.foreach { ps =>
-        require(!ps.files.exists(_.split("/").exists(_.contains("="))),
-          s"cannot append onto partitioned version ${ps.version} of $path — " +
-            "rewrite it unpartitioned first (compact) or overwrite")
-      }
-      // schema rides the log (Delta keeps it there too): an overwrite
-      // commits the batch's schema; an append commits the EVOLVED union.
-      // Computed BEFORE staging: an incompatible append fails fast,
-      // leaving no orphan files.
-      // generated columns first: an omitted generated column is computed
-      // (it must exist before schema/mapping/stats are derived), a
-      // present one is enforced inside the staging pass. `generatedAdds`
-      // (declarations landing WITH this commit — the shred writer's
-      // one-commit contract) participate immediately.
-      val genApplied0 = generatedGuard(df,
-        prevState.map(_.generated).getOrElse(Map.empty) ++ generatedAdds)
-      // IDENTITY column: assigned when the batch omits it (BY DEFAULT
-      // semantics — a present column keeps its values and the high
-      // water advances past them after staging). Values are unique by
-      // construction: hw + (monotonic id + 1) × step, gaps allowed.
-      val identDecl = prevState.flatMap(st =>
-        st.identityCol.map(c =>
-          (st.logical(c), c, st.identityStep, st.identityHighWater)))
-      val genApplied = identDecl match {
-        case Some((lc, _, step, hw)) if !genApplied0.columns.contains(lc) =>
-          genApplied0.withColumn(lc,
-            (org.apache.spark.sql.functions.lit(hw) +
-              (org.apache.spark.sql.functions.monotonically_increasing_id()
-                + 1L) * step).cast(LongType))
-        case _ => genApplied0
-      }
-      // shred binding metadata: on a shred-spec'd table, re-tag the
-      // shred columns (writer-of/path binding) and the variant column
-      // (shredded marker) so the committed schema carries the identity
-      // ShredSubstitution requires — projection only, no recompute;
-      // a no-op on tables without a spec
-      val genTagged = VariantShred.retag(genApplied,
-        propertiesFull.orElse(prevState.map(_.properties))
-          .getOrElse(Map.empty))
-      val tracked = prevState.exists(_.rowTracking)
-      // the row id is PHYSICAL only — never part of the logical schema
-      val logicalIn = StructType(
-        genTagged.schema.fields.filterNot(_.name == RowIdCol))
-      val schema =
-        if (carryForward)
-          prevState.flatMap(_.schema).map(evolve(_, logicalIn))
-            .getOrElse(logicalIn)
-        else logicalIn
-      // column mapping: files hold PHYSICAL names. Retained logicals
-      // keep their physical; a logical name NEW to the table gets a
-      // FRESH physical from the monotone counter, so a column dropped
-      // and later re-added can never resurrect old file data.
-      val prevMapped = prevState.exists(_.mapped)
-      val (newMapping, newMaxColId) =
-        if (!prevMapped) (Map.empty[String, String], 0L)
-        else {
-          val ps = prevState.get
-          val prevLogical = ps.schema.map(_.fieldNames.toSet)
-            .getOrElse(Set.empty[String])
-          val keep =
-            if (carryForward) ps.mapping
-            else ps.mapping.filter { case (l, _) =>
-              logicalIn.fieldNames.contains(l) }
-          var id = ps.maxColId
-          val fresh = logicalIn.fieldNames.filterNot(prevLogical)
-            .map { n => id += 1; n -> s"col-$id" }
-          (keep ++ fresh, id)
-        }
-      // stats columns: per-commit argument overrides; else a stats
-      // schema DECLARED with this commit; else the table's declared
-      // stats schema (stored physical — rename-safe)
-      val statsColsPhys =
-        if (statsCols.nonEmpty) {
-          if (!prevMapped) statsCols
-          else statsCols.map(c => newMapping.getOrElse(c, c))
-        } else statsSchemaDecl
-          .getOrElse(prevState.map(_.statsSchemaCols).getOrElse(Nil))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val snapDir = s"$path/snap-$version-$token"
-      // persisted EXPECTATIONS (DLT's table-bound quality rules) gate
-      // the batch in the SAME staging pass: FAIL rules abort the write
-      // job (nothing lands), DROP rules filter violating rows, WARN
-      // rules keep them — and per-rule violation/pass counts observe
-      // DURING the staging write itself (one pass, zero extra scans),
-      // landing in this commit's log entry below (DLT's event log)
-      // MAINTENANCE rewrites (compact / Z-order / auto-compact) bypass
-      // the gate: they re-stage EXISTING rows — rows that landed
-      // before a rule was declared would be silently DROPPED by an
-      // OPTIMIZE, data loss via maintenance (expectations gate
-      // INCOMING batches only; history is CHECK constraints' job)
-      val expectRules =
-        if (!gateExpectations) Map.empty[String, String]
-        else prevState.map(_.expectations).getOrElse(Map.empty)
-      val expectGate =
-        if (expectRules.isEmpty) None
-        else Some(Expectations.commitGate(genTagged, expectRules,
-          s"graft-expect-$version-$token"))
-      val expectGated = expectGate.map(_._1).getOrElse(genTagged)
-      // CHECK constraints enforce inside the staging pass: a violating
-      // row fails the write job, no manifest lands, readers see nothing
-      val guarded0 = constraintGuard(expectGated,
-        prevState.map(_.constraints).getOrElse(Map.empty))
-      // row ids: fresh above the high-water mark for rows lacking one;
-      // rewrite paths (compact/zorder via readWithRowIds) keep theirs
-      val guarded =
-        if (tracked) assignRowIds(guarded0,
-          prevState.map(_.rowHighWater).getOrElse(0L))
-        else guarded0
-      // a batch ARRIVING with row ids is either an internal rewrite
-      // (compact/zorder carry ids verbatim — unique by construction) or
-      // an external caller asserting id authority it may not have:
-      // validate uniqueness before anything lands, so a buggy caller
-      // cannot silently corrupt the contract changesByRowId and feed
-      // consumers key on. One aggregate over the staging batch, only on
-      // tracked tables whose input carries the column.
-      if (tracked && df.columns.contains(RowIdCol)) {
-        val chk = guarded.agg(
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"),
-          org.apache.spark.sql.functions.countDistinct(
-            org.apache.spark.sql.functions.col(RowIdCol)).as("d")).head()
-        require(chk.getLong(0) == chk.getLong(1),
-          s"batch carries duplicate $RowIdCol values " +
-            s"(${chk.getLong(0)} rows, ${chk.getLong(1)} distinct ids) — " +
-            "caller-supplied row ids must be unique")
-      }
-      // rename logical -> physical as the last step before the write
-      // (the row id keeps its reserved physical name)
-      val stagedDf =
-        if (!prevMapped) guarded
-        else guarded.select(guarded.schema.fieldNames.map(n =>
-          org.apache.spark.sql.functions.col(n)
-            .as(newMapping.getOrElse(n, n))).toSeq: _*)
-      // DECLARED partitioning (empty-table DDL / first-write
-      // declaration): an overwrite that names no layout inherits the
-      // table's declaration; an explicit partitionBy always wins
-      val effPartCols =
-        if (partitionCols.nonEmpty || carryForward) partitionCols
-        else if (partitionColsDecl.nonEmpty) partitionColsDecl
-        else prevState.map(_.partitionColsDecl).getOrElse(Nil)
-      // partition DIRS carry physical names on mapped tables (k=v is
-      // file layout, like footers) — reads translate via the mapping
-      val partColsPhys =
-        if (!prevMapped) effPartCols
-        else effPartCols.map(c => newMapping.getOrElse(c, c))
-      // ingestion-time clustering (liquid-clustering shape): declared
-      // cluster columns sort each staged file LOCALLY — zero shuffle,
-      // tight per-file stats on the cluster key from the first commit;
-      // [[optimizeClustered]] does the global incremental recluster
-      val clusterPhys = prevState.map(_.clusterCols).getOrElse(Nil)
-        .filter(stagedDf.columns.contains)
-      require(clusterPhys.isEmpty || partColsPhys.isEmpty,
-        s"table $path has cluster columns declared — clustering " +
-          "replaces partitioning (write without partitionBy)")
-      val toStage0 =
-        if (clusterPhys.isEmpty) stagedDf
-        else stagedDf.sortWithinPartitions(
-          clusterPhys.map(org.apache.spark.sql.functions.col): _*)
-      // OPTIMIZED WRITE (`graft.autoOptimize.optimizeWrite`): coalesce
-      // the staged batch toward the target file size instead of
-      // committing one sliver per shuffle partition — the write-time
-      // small-file control a streaming ingest needs (delta's
-      // optimizeWrite shape). Shuffle-free: coalesce only MERGES
-      // partitions, so a batch under the target stages as ONE file
-      // while a big batch keeps its write parallelism. Sized from the
-      // optimizer's byte estimate (plan stats — on-disk bytes for
-      // scan-shaped inputs, a row-size model elsewhere).
-      val tableProps = prevState.map(_.properties).getOrElse(Map.empty)
-      val optimizeWrite = tableProps.get(OptimizeWriteProp)
-        .exists(_.equalsIgnoreCase("true"))
-      val owTarget = tableProps.get("graft.autoOptimize.targetFileSize")
-        .flatMap(_.toLongOption).filter(_ > 0L)
-        .getOrElse(AutoOptimizeTargetBytes)
-      val toStage =
-        if (!optimizeWrite) toStage0
-        else {
-          val est = stagedDf.queryExecution.optimizedPlan.stats.sizeInBytes
-          val n = ((est + owTarget - 1) / owTarget)
-            .min(BigInt(1 << 20)).max(BigInt(1)).toInt
-          // coalesce FIRST, then the cluster sort: coalesce on top of
-          // sortWithinPartitions concatenates sorted runs, silently
-          // degrading clustered layout whenever optimizeWrite merges
-          // partitions (the repack path below already orders it this
-          // way)
-          val merged = stagedDf.coalesce(n)
-          if (clusterPhys.isEmpty) merged
-          else merged.sortWithinPartitions(
-            clusterPhys.map(org.apache.spark.sql.functions.col): _*)
-        }
-      val w = toStage.write.mode("overwrite")
-      (if (partColsPhys.nonEmpty) w.partitionBy(partColsPhys: _*) else w)
-        .parquet(snapDir)
-      var staged = listDataFiles(f, new Path(snapDir))
-      if (staged.isEmpty && !(carryForward && prev.nonEmpty)) {
-        // a PARTITIONED write of zero rows emits no files at all, which
-        // would commit an unreadable version — re-stage unpartitioned:
-        // an empty non-partitioned parquet write keeps a schema-bearing
-        // file (partition columns become ordinary empty columns).
-        stagedDf.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
-        staged = listDataFiles(f, new Path(snapDir))
-      }
-      // OPTIMIZED WRITE, post-hoc exactness pass: the plan-stats
-      // estimate above can be UNKNOWN (RDD-backed frames — the
-      // streaming sink's rebased micro-batches — default to
-      // Long.MaxValue, leaving the coalesce a no-op) or simply off.
-      // When the STAGED layout holds more files than its MEASURED
-      // bytes warrant, repack the staged output before anything reads
-      // it — cost bounded by the sliver bytes themselves (it can only
-      // trigger when average file size is under the target), the
-      // commit still lands exactly once. The repack read pins the
-      // staged schema (partition dirs re-read under their written
-      // types, never re-inferred) and restores the cluster sort.
-      if (optimizeWrite && staged.size > 1) {
-        val stagedBytes = staged.map { p =>
-          try f.getFileStatus(p).getLen
-          catch { case _: java.io.IOException => owTarget } // conservative
-        }.sum
-        val want = math.max(1L, (stagedBytes + owTarget - 1L) / owTarget)
-        if (want < staged.size) {
-          val snapDir2 = s"$path/snap-$version-$token-r"
-          val back0 = spark.read.schema(toStage0.schema).parquet(snapDir)
-            .coalesce(want.toInt)
-          val back =
-            if (clusterPhys.isEmpty) back0
-            else back0.sortWithinPartitions(
-              clusterPhys.map(org.apache.spark.sql.functions.col): _*)
-          val w2 = back.write.mode("overwrite")
-          (if (partColsPhys.nonEmpty) w2.partitionBy(partColsPhys: _*)
-           else w2).parquet(snapDir2)
-          val repacked = listDataFiles(f, new Path(snapDir2))
-          // a PARTITIONED repack re-splits by partition value and may
-          // not shrink — keep whichever layout holds fewer files
-          if (repacked.nonEmpty && repacked.size < staged.size) {
-            f.delete(new Path(snapDir), true)
-            staged = repacked
-          } else f.delete(new Path(snapDir2), true)
-        }
-      }
-      val adds = staged.map(p => relativize(new Path(path), p))
-      val newStats: Map[String, Map[String, ColStats]] =
-        if (statsColsPhys.isEmpty) Map.empty
-        else stagedFooterStats(spark, path, staged, statsColsPhys)
-      // overwrite: every previous file (and deletion vector) leaves the
-      // state; append: nothing leaves. Carried stats survive appends by
-      // construction — a stats-less streaming append only leaves its
-      // own files unindexed.
-      val removes = if (carryForward) Nil
-        else prevState.map(_.files).getOrElse(Nil)
-      val dvRemoves = if (carryForward) Nil
-        else prevState.map(_.dvFiles).getOrElse(Nil)
-      // bloom index: one pass over the STAGED files builds their
-      // filters; an overwrite retires every previous sidecar
-      val bloomAdds = prevState.flatMap(_.bloom) match {
-        case Some(spec) => buildBloomSidecar(spark, path, staged, spec,
-          version, token)
-        case None => Nil
-      }
-      val bloomRemoves = if (carryForward) Nil
-        else prevState.map(_.bloomFiles).getOrElse(Nil)
-      val ndvAdds = prevState.map(_.ndvCols).getOrElse(Nil) match {
-        case Nil  => Nil
-        case cols => buildNdvSidecar(spark, path, staged, cols, version, token)
-      }
-      val ndvRemoves = if (carryForward) Nil
-        else prevState.map(_.ndvFiles).getOrElse(Nil)
-      val newHigh =
-        if (!tracked) None
-        else Some(stagedHighWater(spark, staged,
-          prevState.map(_.rowHighWater).getOrElse(0L)))
-      // identity high water from the STAGED files' own column (one
-      // long-column scan of the new files), so supplied values advance
-      // it too
-      val newIdentHigh = identDecl.map { case (_, physCol, _, hw) =>
-        stagedColMax(spark, staged, physCol, hw) }
-      // expectation metrics materialized with the staging write above
-      // (the observe fired inside that action — no extra job here)
-      val expectCounts: Map[String, (Long, Long)] =
-        expectGate.map { case (_, obs, names) =>
-          Expectations.metricsOf(obs, names) }.getOrElse(Map.empty)
-      val json = deltaJson(version, commitTs(spark, path, version), adds, removes,
-        newStats, tag, tagHorizon, Some(schema), dvRemoves = dvRemoves,
-        bloomAdds = bloomAdds, bloomRemoves = bloomRemoves,
-        mapping = if (prevMapped) Some(newMapping) else None,
-        maxColId = if (prevMapped) Some(newMaxColId) else None,
-        ndvAdds = ndvAdds, ndvRemoves = ndvRemoves,
-        op = Some(if (copyAdds.nonEmpty) "COPY"
-          else if (carryForward) "APPEND" else "WRITE"),
-        rowHighWater = newHigh,
-        identityHighWater = newIdentHigh,
-        partitionColsDecl =
-          if (partitionColsDecl.nonEmpty) Some(partitionColsDecl) else None,
-        copyAdds = copyAdds, txn = txn,
-        generatedAdds = generatedAdds,
-        properties = propertiesFull,
-        statsSchema = statsSchemaDecl,
-        expectMetrics = expectCounts)
-      val manifest = manifestPath(path, version)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifest)) {
-        maybeCheckpoint(spark, path, version)
-        maybeAutoCompact(spark, path, tableProps)
-        return version
-      }
-      // lost the race — drop this attempt's staging, re-stage on next N
-      f.delete(tmp, false)
-      f.delete(new Path(snapDir), true)
-      f.delete(new Path(s"$snapDir-r"), true)
-      if (bloomAdds.nonEmpty)
-        f.delete(new Path(s"$path/bloom-$version-$token"), true)
-      if (ndvAdds.nonEmpty)
-        f.delete(new Path(s"$path/ndv-$version-$token"), true)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"manifest commit lost $maxAttempts races at $path — giving up")
+    // fail-fast twin of append's layout require: appending onto a base
+    // version whose files live in k=v partition dirs would commit an
+    // unreadable mixed layout
+    if (carryForward)
+      require(!st.files.exists(_.split("/").exists(_.contains("="))),
+        s"cannot append onto partitioned version ${st.version} of $path — " +
+          "rewrite it unpartitioned first (compact) or overwrite")
+    // schema rides the log (Delta keeps it there too): an overwrite
+    // commits the batch's schema; an append commits the EVOLVED union.
+    // Computed BEFORE staging: an incompatible append fails fast,
+    // leaving no orphan files.
+    // generated columns first: an omitted generated column is computed
+    // (it must exist before schema/mapping/stats are derived), a
+    // present one is enforced inside the staging pass. `generatedAdds`
+    // (declarations landing WITH this commit — the shred writer's
+    // one-commit contract) participate immediately.
+    val genApplied0 = generatedGuard(df, st.generated ++ generatedAdds)
+    // IDENTITY column: assigned when the batch omits it (BY DEFAULT
+    // semantics — a present column keeps its values and the high
+    // water advances past them after staging). Values are unique by
+    // construction: hw + (monotonic id + 1) × step, gaps allowed.
+    val identDecl = st.identityCol.map(c =>
+      (st.logical(c), c, st.identityStep, st.identityHighWater))
+    val genApplied = identDecl match {
+      case Some((lc, _, step, hw)) if !genApplied0.columns.contains(lc) =>
+        genApplied0.withColumn(lc,
+          (org.apache.spark.sql.functions.lit(hw) +
+            (org.apache.spark.sql.functions.monotonically_increasing_id()
+              + 1L) * step).cast(LongType))
+      case _ => genApplied0
+    }
+    // shred binding metadata: on a shred-spec'd table, re-tag the
+    // shred columns (writer-of/path binding) and the variant column
+    // (shredded marker) so the committed schema carries the identity
+    // ShredSubstitution requires — projection only, no recompute;
+    // a no-op on tables without a spec
+    val genTagged = VariantShred.retag(genApplied,
+      propertiesFull.getOrElse(st.properties))
+    val tracked = st.rowTracking
+    // the row id is PHYSICAL only — never part of the logical schema
+    val logicalIn = StructType(
+      genTagged.schema.fields.filterNot(_.name == RowIdCol))
+    val schema =
+      if (carryForward)
+        st.schema.map(evolve(_, logicalIn)).getOrElse(logicalIn)
+      else logicalIn
+    // column mapping: files hold PHYSICAL names. Retained logicals
+    // keep their physical; a logical name NEW to the table gets a
+    // FRESH physical from the monotone counter, so a column dropped
+    // and later re-added can never resurrect old file data.
+    val prevMapped = st.mapped
+    val (newMapping, newMaxColId) =
+      if (!prevMapped) (Map.empty[String, String], 0L)
+      else {
+        val prevLogical = st.schema.map(_.fieldNames.toSet)
+          .getOrElse(Set.empty[String])
+        val keep =
+          if (carryForward) st.mapping
+          else st.mapping.filter { case (l, _) =>
+            logicalIn.fieldNames.contains(l) }
+        var id = st.maxColId
+        val fresh = logicalIn.fieldNames.filterNot(prevLogical)
+          .map { n => id += 1; n -> s"col-$id" }
+        (keep ++ fresh, id)
+      }
+    // stats columns: per-commit argument overrides; else a stats
+    // schema DECLARED with this commit; else the table's declared
+    // stats schema (stored physical — rename-safe)
+    val statsColsPhys =
+      if (statsCols.nonEmpty) {
+        if (!prevMapped) statsCols
+        else statsCols.map(c => newMapping.getOrElse(c, c))
+      } else statsSchemaDecl.getOrElse(st.statsSchemaCols)
+    val snapDir = t.dir("snap")
+    // persisted EXPECTATIONS (DLT's table-bound quality rules) gate
+    // the batch in the SAME staging pass: FAIL rules abort the write
+    // job (nothing lands), DROP rules filter violating rows, WARN
+    // rules keep them — and per-rule violation/pass counts observe
+    // DURING the staging write itself (one pass, zero extra scans),
+    // landing in this commit's log entry below (DLT's event log)
+    // MAINTENANCE rewrites (compact / Z-order / auto-compact) bypass
+    // the gate: they re-stage EXISTING rows — rows that landed
+    // before a rule was declared would be silently DROPPED by an
+    // OPTIMIZE, data loss via maintenance (expectations gate
+    // INCOMING batches only; history is CHECK constraints' job)
+    val expectRules =
+      if (!gateExpectations) Map.empty[String, String]
+      else st.expectations
+    val expectGate =
+      if (expectRules.isEmpty) None
+      else Some(Expectations.commitGate(genTagged, expectRules,
+        s"graft-expect-$version-$token"))
+    val expectGated = expectGate.map(_._1).getOrElse(genTagged)
+    // CHECK constraints enforce inside the staging pass: a violating
+    // row fails the write job, no manifest lands, readers see nothing
+    val guarded0 = constraintGuard(expectGated, st.constraints)
+    // row ids: fresh above the high-water mark for rows lacking one;
+    // rewrite paths (compact/zorder via readWithRowIds) keep theirs
+    val guarded =
+      if (tracked) assignRowIds(guarded0, st.rowHighWater)
+      else guarded0
+    // a batch ARRIVING with row ids is either an internal rewrite
+    // (compact/zorder carry ids verbatim — unique by construction) or
+    // an external caller asserting id authority it may not have:
+    // validate uniqueness before anything lands, so a buggy caller
+    // cannot silently corrupt the contract changesByRowId and feed
+    // consumers key on. One aggregate over the staging batch, only on
+    // tracked tables whose input carries the column.
+    if (tracked && df.columns.contains(RowIdCol)) {
+      val chk = guarded.agg(
+        org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)).as("n"),
+        org.apache.spark.sql.functions.countDistinct(
+          org.apache.spark.sql.functions.col(RowIdCol)).as("d")).head()
+      require(chk.getLong(0) == chk.getLong(1),
+        s"batch carries duplicate $RowIdCol values " +
+          s"(${chk.getLong(0)} rows, ${chk.getLong(1)} distinct ids) — " +
+          "caller-supplied row ids must be unique")
+    }
+    // rename logical -> physical as the last step before the write
+    // (the row id keeps its reserved physical name)
+    val stagedDf =
+      if (!prevMapped) guarded
+      else guarded.select(guarded.schema.fieldNames.map(n =>
+        org.apache.spark.sql.functions.col(n)
+          .as(newMapping.getOrElse(n, n))).toSeq: _*)
+    // DECLARED partitioning (empty-table DDL / first-write
+    // declaration): an overwrite that names no layout inherits the
+    // table's declaration; an explicit partitionBy always wins
+    val effPartCols =
+      if (partitionCols.nonEmpty || carryForward) partitionCols
+      else if (partitionColsDecl.nonEmpty) partitionColsDecl
+      else st.partitionColsDecl
+    // partition DIRS carry physical names on mapped tables (k=v is
+    // file layout, like footers) — reads translate via the mapping
+    val partColsPhys =
+      if (!prevMapped) effPartCols
+      else effPartCols.map(c => newMapping.getOrElse(c, c))
+    // ingestion-time clustering (liquid-clustering shape): declared
+    // cluster columns sort each staged file LOCALLY — zero shuffle,
+    // tight per-file stats on the cluster key from the first commit;
+    // [[optimizeClustered]] does the global incremental recluster
+    val clusterPhys = st.clusterCols.filter(stagedDf.columns.contains)
+    require(clusterPhys.isEmpty || partColsPhys.isEmpty,
+      s"table $path has cluster columns declared — clustering " +
+        "replaces partitioning (write without partitionBy)")
+    val toStage0 =
+      if (clusterPhys.isEmpty) stagedDf
+      else stagedDf.sortWithinPartitions(
+        clusterPhys.map(org.apache.spark.sql.functions.col): _*)
+    // OPTIMIZED WRITE (`graft.autoOptimize.optimizeWrite`): coalesce
+    // the staged batch toward the target file size instead of
+    // committing one sliver per shuffle partition — the write-time
+    // small-file control a streaming ingest needs (delta's
+    // optimizeWrite shape). Shuffle-free: coalesce only MERGES
+    // partitions, so a batch under the target stages as ONE file
+    // while a big batch keeps its write parallelism. Sized from the
+    // optimizer's byte estimate (plan stats — on-disk bytes for
+    // scan-shaped inputs, a row-size model elsewhere).
+    val tableProps = st.properties
+    val optimizeWrite = tableProps.get(OptimizeWriteProp)
+      .exists(_.equalsIgnoreCase("true"))
+    val owTarget = tableProps.get("graft.autoOptimize.targetFileSize")
+      .flatMap(_.toLongOption).filter(_ > 0L)
+      .getOrElse(AutoOptimizeTargetBytes)
+    val toStage =
+      if (!optimizeWrite) toStage0
+      else {
+        val est = stagedDf.queryExecution.optimizedPlan.stats.sizeInBytes
+        val n = ((est + owTarget - 1) / owTarget)
+          .min(BigInt(1 << 20)).max(BigInt(1)).toInt
+        // coalesce FIRST, then the cluster sort: coalesce on top of
+        // sortWithinPartitions concatenates sorted runs, silently
+        // degrading clustered layout whenever optimizeWrite merges
+        // partitions (the repack path below already orders it this
+        // way)
+        val merged = stagedDf.coalesce(n)
+        if (clusterPhys.isEmpty) merged
+        else merged.sortWithinPartitions(
+          clusterPhys.map(org.apache.spark.sql.functions.col): _*)
+      }
+    val w = toStage.write.mode("overwrite")
+    (if (partColsPhys.nonEmpty) w.partitionBy(partColsPhys: _*) else w)
+      .parquet(snapDir)
+    var staged = listDataFiles(f, new Path(snapDir))
+    if (staged.isEmpty && !(carryForward && t.base > 0L)) {
+      // a PARTITIONED write of zero rows emits no files at all, which
+      // would commit an unreadable version — re-stage unpartitioned:
+      // an empty non-partitioned parquet write keeps a schema-bearing
+      // file (partition columns become ordinary empty columns).
+      stagedDf.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
+      staged = listDataFiles(f, new Path(snapDir))
+    }
+    // OPTIMIZED WRITE, post-hoc exactness pass: the plan-stats
+    // estimate above can be UNKNOWN (RDD-backed frames — the
+    // streaming sink's rebased micro-batches — default to
+    // Long.MaxValue, leaving the coalesce a no-op) or simply off.
+    // When the STAGED layout holds more files than its MEASURED
+    // bytes warrant, repack the staged output before anything reads
+    // it — cost bounded by the sliver bytes themselves (it can only
+    // trigger when average file size is under the target), the
+    // commit still lands exactly once. The repack read pins the
+    // staged schema (partition dirs re-read under their written
+    // types, never re-inferred) and restores the cluster sort.
+    if (optimizeWrite && staged.size > 1) {
+      val stagedBytes = staged.map { p =>
+        try f.getFileStatus(p).getLen
+        catch { case _: java.io.IOException => owTarget } // conservative
+      }.sum
+      val want = math.max(1L, (stagedBytes + owTarget - 1L) / owTarget)
+      if (want < staged.size) {
+        val snapDir2 = s"$snapDir-r"
+        val back0 = spark.read.schema(toStage0.schema).parquet(snapDir)
+          .coalesce(want.toInt)
+        val back =
+          if (clusterPhys.isEmpty) back0
+          else back0.sortWithinPartitions(
+            clusterPhys.map(org.apache.spark.sql.functions.col): _*)
+        val w2 = back.write.mode("overwrite")
+        (if (partColsPhys.nonEmpty) w2.partitionBy(partColsPhys: _*)
+         else w2).parquet(snapDir2)
+        val repacked = listDataFiles(f, new Path(snapDir2))
+        // a PARTITIONED repack re-splits by partition value and may
+        // not shrink — keep whichever layout holds fewer files
+        if (repacked.nonEmpty && repacked.size < staged.size) {
+          f.delete(new Path(snapDir), true)
+          staged = repacked
+        } else f.delete(new Path(snapDir2), true)
+      }
+    }
+    val adds = staged.map(p => relativize(new Path(path), p))
+    val newStats: Map[String, Map[String, ColStats]] =
+      if (statsColsPhys.isEmpty) Map.empty
+      else stagedFooterStats(spark, path, staged, statsColsPhys)
+    // overwrite: every previous file (and deletion vector) leaves the
+    // state; append: nothing leaves. Carried stats survive appends by
+    // construction — a stats-less streaming append only leaves its
+    // own files unindexed.
+    val removes = if (carryForward) Nil else st.files
+    val dvRemoves = if (carryForward) Nil else st.dvFiles
+    // index sidecars: one pass over the STAGED files builds their
+    // filters/sketches; an overwrite retires every previous sidecar
+    val (bloomAdds, ndvAdds) = t.sidecars(staged)
+    val bloomRemoves = if (carryForward) Nil else st.bloomFiles
+    val ndvRemoves = if (carryForward) Nil else st.ndvFiles
+    val newHigh =
+      if (!tracked) None
+      else Some(stagedHighWater(spark, staged, st.rowHighWater))
+    // identity high water from the STAGED files' own column (one
+    // long-column scan of the new files), so supplied values advance
+    // it too
+    val newIdentHigh = identDecl.map { case (_, physCol, _, hw) =>
+      stagedColMax(spark, staged, physCol, hw) }
+    // expectation metrics materialized with the staging write above
+    // (the observe fired inside that action — no extra job here)
+    val expectCounts: Map[String, (Long, Long)] =
+      expectGate.map { case (_, obs, names) =>
+        Expectations.metricsOf(obs, names) }.getOrElse(Map.empty)
+    val json = deltaJson(version, t.ts, adds, removes,
+      newStats, tag, tagHorizon, Some(schema), dvRemoves = dvRemoves,
+      bloomAdds = bloomAdds, bloomRemoves = bloomRemoves,
+      mapping = if (prevMapped) Some(newMapping) else None,
+      maxColId = if (prevMapped) Some(newMaxColId) else None,
+      ndvAdds = ndvAdds, ndvRemoves = ndvRemoves,
+      op = Some(if (copyAdds.nonEmpty) "COPY"
+        else if (carryForward) "APPEND" else "WRITE"),
+      rowHighWater = newHigh,
+      identityHighWater = newIdentHigh,
+      partitionColsDecl =
+        if (partitionColsDecl.nonEmpty) Some(partitionColsDecl) else None,
+      copyAdds = copyAdds, txn = txn,
+      generatedAdds = generatedAdds,
+      properties = propertiesFull,
+      statsSchema = statsSchemaDecl,
+      expectMetrics = expectCounts)
+    // a lost race drops this attempt's staging; the next re-stages
+    Publish(json, Seq(snapDir, s"$snapDir-r") ++
+      t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds), autoCompact = true)
   }
 
   // ------------------------------------------------------------------
@@ -3878,22 +3420,12 @@ object ManifestTable {
                  schemaEvolution: Boolean = false): Long = {
     val spark = updates.sparkSession
     validateMergeKeys(keys)
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse {
-      var attempt = 0
-      while (attempt < maxAttempts) {
-        val prevV = currentVersion(spark, path).getOrElse(
-          throw new IllegalStateException(
-            s"no committed version at $path to merge into"))
-        mergeAttempt(updates, path, keys, deleteCol, statsCols, tag,
-          tagHorizon, sortCols, deleteVectors, prevV,
-          schemaEvolution = schemaEvolution) match {
-          case Some(v) => return v
-          case None    => attempt += 1
-        }
-      }
-      throw new IllegalStateException(
-        s"merge commit lost $maxAttempts races at $path — giving up")
-    }
+    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
+      transact(spark, path, "merge", maxAttempts,
+          Some(s"no committed version at $path to merge into"))(
+        mergeAttempt(updates, _, keys, deleteCol, statsCols, tag,
+          tagHorizon, sortCols, deleteVectors,
+          schemaEvolution = schemaEvolution)))
   }
 
   /** The merge-source broadcast gate in rows
@@ -3930,23 +3462,22 @@ object ManifestTable {
     if (n <= 1) Seq("_graft_dv_key")
     else "_graft_dv_key" +: (1 until n).map(i => s"_graft_dv_key_$i")
 
-  /** One merge attempt pinned against base version `prevV`; returns
-    * None when the conditional commit loses the race (caller retries
-    * with a re-read base — which is what lets [[mergeConditional]]
-    * re-resolve its clauses against the version the commit actually
-    * lands on).
+  /** One merge attempt against `t`'s base version: stage the touched
+    * files' rewrite and build the log entry. A lost race re-runs the
+    * caller's whole attempt body against the new base — which is what
+    * lets [[mergeConditional]] re-resolve its clauses against the
+    * version the commit actually lands on.
     */
-  private def mergeAttempt(updates: DataFrame, path: String,
+  private def mergeAttempt(updates: DataFrame, t: Txn,
                            keys: Seq[String],
                            deleteCol: Option[String], statsCols: Seq[String],
                            tag: Option[String], tagHorizon: Int,
                            sortCols: Seq[String], deleteVectors: Boolean,
-                           prevV: Long,
                            schemaEvolution: Boolean = false,
                            broadcastSource: Option[Boolean] = None)
-      : Option[Long] = {
+      : Attempt = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, input_file_name, lit, split, when, max => smax, min => smin}
-    val spark = updates.sparkSession
+    import t.{f, path, spark, st, version}
     // MATERIALIZE the source once per attempt (eager local checkpoint,
     // lineage truncated — see mergeMultiKeyed's source note): the body
     // evaluates `updates` several times (bounds aggregate, confirm-scan
@@ -3968,10 +3499,6 @@ object ManifestTable {
     try {
     // every body reference below binds to the materialized frame
     val updates = srcMat
-    val f = fs(spark, path)
-    val st = resolveState(spark, path, prevV)
-    assertWritable(st, path)
-    val version = prevV + 1L
     val tableSchema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
     val updCols = updates.schema.fields
       .filterNot(fd => deleteCol.contains(fd.name))
@@ -4200,8 +3727,7 @@ object ManifestTable {
             schema = if (st.rowTracking) idSchema else st.schema))
         .join(maybeBc(updKeys), keys, "left_anti"))
         .unionByName(ordered)
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val snapDir = s"$path/snap-$version-$token"
+    val snapDir = t.dir("snap")
     val untouched = st.files.filterNot(touchedSet)
     var staged: Seq[Path] = Nil
     if (touched.nonEmpty || hasUpserts) {
@@ -4238,7 +3764,7 @@ object ManifestTable {
     // collected the pairs and re-parallelized them: driver memory
     // scaled with the merge's delete set)
     var dvAdds: Seq[String] = Nil
-    val dvDir = s"$path/dv-$version-$token"
+    val dvDir = t.dir("dv")
     if (hasDvEntries) {
       // the read-side anti-join resolves ONE dvKey per table: adding
       // vectors keyed differently than the live ones would corrupt it
@@ -4277,18 +3803,10 @@ object ManifestTable {
     val newStats: Map[String, Map[String, ColStats]] =
       if (mergeStatsPhys.isEmpty) Map.empty
       else stagedFooterStats(spark, path, staged, mergeStatsPhys)
-    // bloom index: rewritten files get fresh filters (stale entries for
+    // index sidecars: rewritten files get fresh entries (stale ones for
     // the removed files are dead weight until compact retires them)
-    val bloomAdds = st.bloom match {
-      case Some(spec) => buildBloomSidecar(spark, path, staged, spec,
-        version, token)
-      case None => Nil
-    }
-    val ndvAdds = st.ndvCols match {
-      case Nil  => Nil
-      case cols => buildNdvSidecar(spark, path, staged, cols, version, token)
-    }
-    val json = deltaJson(version, commitTs(spark, path, version), stagedRel,
+    val (bloomAdds, ndvAdds) = t.sidecars(staged)
+    val json = deltaJson(version, t.ts, stagedRel,
       touched, newStats, tag, tagHorizon, Some(schema),
       dvAdds = dvAdds,
       // composite keys record comma-joined (names validated comma-free)
@@ -4306,30 +3824,14 @@ object ManifestTable {
         else Some(stagedHighWater(spark, staged, st.rowHighWater)),
       // identity uniqueness contract: MERGE-supplied identity values
       // must advance the high water too (same staged-column scan as
-      // commit()), or later engine-assigned ids could collide with them
+      // writeAttempt), or later engine-assigned ids could collide with them
       identityHighWater = st.identityCol.map(pc =>
         stagedColMax(spark, staged, pc, st.identityHighWater)))
-    val manifest = manifestPath(path, version)
-    val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (conditionalCommit(f, tmp, manifest)) {
-      maybeCheckpoint(spark, path, version)
-      // merge commits stage small files per batch exactly like appends
-      // — evaluate auto-compaction here too (delta's post-commit hook
-      // fires after ANY write), same reentrancy guard
-      maybeAutoCompact(spark, path, st.properties)
-      Some(version)
-    } else {
-      f.delete(tmp, false)
-      f.delete(new Path(snapDir), true)
-      if (dvAdds.nonEmpty) f.delete(new Path(dvDir), true)
-      if (bloomAdds.nonEmpty)
-        f.delete(new Path(s"$path/bloom-$version-$token"), true)
-      if (ndvAdds.nonEmpty)
-        f.delete(new Path(s"$path/ndv-$version-$token"), true)
-      None
-    }
+    // merge commits stage small files per batch exactly like appends —
+    // auto-compaction evaluates here too (delta's post-commit hook
+    // fires after ANY write), same reentrancy guard
+    Publish(json, snapDir +: t.written("dv" -> dvAdds, "bloom" -> bloomAdds,
+      "ndv" -> ndvAdds), autoCompact = true)
     } finally {
       releaseSrc()
     }
@@ -4447,33 +3949,38 @@ object ManifestTable {
       // silently evaluate to NULL in the fused full-outer path (the
       // condition reads false, an update writes NULL). Delta refuses
       // source references in by-source clauses at analysis; so do we.
+      // Zero-row ANALYSIS probe (no job, no data read): expressions
+      // resolve against null columns shaped like the merge's resolved
+      // frame — `src` columns bare, the target's as `_b_<col>`.
+      def analyzeOn(target: StructType, src: Seq[StructField],
+                    exprs: Seq[Column]): Unit = {
+        val probe = spark.range(1).select(
+          (src.map(fd => lit(null).cast(fd.dataType).as(fd.name)) ++
+            target.fields.map(fd =>
+              lit(null).cast(fd.dataType).as(s"_b_${fd.name}"))): _*)
+        exprs.foreach(e => probe.select(e).queryExecution.analyzed)
+      }
+      def exprsOf(cl: MergeMatched): Seq[Column] =
+        cl.condition.toSeq ++ (cl match {
+          case u: MergeUpdate => u.set.map(_._2)
+          case _              => Nil
+        })
       if (notMatchedBySource.nonEmpty) {
-        import org.apache.spark.sql.functions.lit
         val curV = currentVersion(spark, path).getOrElse(
           throw new IllegalStateException(
             s"no committed version at $path to merge into"))
         val st0 = resolveState(spark, path, curV)
         val schema0 =
           st0.schema.getOrElse(readStateDf(spark, path, st0).schema)
-        val probe = spark.range(1).select(schema0.fields.map(f =>
-          lit(null).cast(f.dataType).as(s"_b_${f.name}")).toSeq: _*)
-        notMatchedBySource.foreach { cl =>
-          val exprs = cl.condition.toSeq ++ (cl match {
-            case u: MergeUpdate => u.set.map(_._2)
-            case _              => Nil
-          })
-          exprs.foreach { e =>
-            try { probe.select(e).queryExecution.analyzed; () }
-            catch {
-              case ex: org.apache.spark.sql.AnalysisException =>
-                throw new IllegalArgumentException(
-                  "WHEN NOT MATCHED BY SOURCE conditions and SET " +
-                    "expressions may only reference TARGET columns — " +
-                    "by-source clauses act on target rows with NO " +
-                    "source match (engine API: `_b_<col>`; SQL: " +
-                    s"qualify with the target alias). ${ex.getMessage}")
-            }
-          }
+        try analyzeOn(schema0, Nil, notMatchedBySource.flatMap(exprsOf))
+        catch {
+          case ex: org.apache.spark.sql.AnalysisException =>
+            throw new IllegalArgumentException(
+              "WHEN NOT MATCHED BY SOURCE conditions and SET " +
+                "expressions may only reference TARGET columns — " +
+                "by-source clauses act on target rows with NO " +
+                "source match (engine API: `_b_<col>`; SQL: " +
+                s"qualify with the target alias). ${ex.getMessage}")
         }
       }
       notMatchedBySource.dropRight(1).foreach(c =>
@@ -4595,19 +4102,15 @@ object ManifestTable {
       // caller. BY SOURCE merges can act on target rows with zero
       // source rows and schema evolution evolves the schema from the
       // source's COLUMNS even when empty, so both keep the full path.
-      if (srcRows == 0L && !hasBySource && !schemaEvolution) {
-        var emptyAttempt = 0
-        while (emptyAttempt < maxAttempts) {
-          val prevV = currentVersion(spark, path).getOrElse(
-            throw new IllegalStateException(
-              s"no committed version at $path to merge into"))
-          val st = resolveState(spark, path, prevV)
-          assertWritable(st, path)
+      if (srcRows == 0L && !hasBySource && !schemaEvolution)
+        transact(spark, path, "conditional merge", maxAttempts,
+            Some(s"no committed version at $path to merge into")) { t =>
+          val st = t.st
           val schema =
             st.schema.getOrElse(readStateDf(spark, path, st).schema)
           // fail-fast PARITY with the full path (all driver-only):
-          // clause-structure errors must not depend on whether the
-          // batch happens to be empty — a typo'd SET target, a
+          // clause errors must not depend on whether the batch happens
+          // to be empty — a typo'd SET target or clause expression, a
           // generated-column assignment or a re-keying SET fails here
           // exactly as it would on the first non-empty batch
           val setsAndValues =
@@ -4632,37 +4135,19 @@ object ManifestTable {
                   s"'$c' — the keyed copy-on-write addresses rows by " +
                   "key equality; express a re-key as DELETE + INSERT")
             }
-          val version = prevV + 1L
-          val f = fs(spark, path)
-          val json = deltaJson(version, commitTs(spark, path, version),
-            Nil, Nil, Map.empty, tag, tagHorizon, Some(schema),
-            mergeKey = Some(keys.mkString(",")))
-          val token = java.util.UUID.randomUUID.toString.take(8)
-          val manifest = manifestPath(path, version)
-          val tmpP = new Path(path,
-            s"$ManifestPrefix$version.json.$token.tmp")
-          val out = f.create(tmpP, true)
-          try out.write(json.getBytes("UTF-8")) finally out.close()
-          if (conditionalCommit(f, tmpP, manifest)) {
-            maybeCheckpoint(spark, path, version)
-            maybeAutoCompact(spark, path, st.properties)
-            return version
-          }
-          f.delete(tmpP, false)
-          emptyAttempt += 1
+          analyzeOn(schema, updates.schema.fields.toSeq,
+            matched.flatMap(exprsOf) ++ residual.toSeq ++ notMatched
+              .flatMap(cl => cl.condition.toSeq ++ cl.values.map(_._2)))
+          Publish(deltaJson(t.version, t.ts, tag = tag,
+              tagHorizon = tagHorizon, schema = Some(schema),
+              mergeKey = Some(keys.mkString(","))), autoCompact = true)
         }
-        throw new IllegalStateException(
-          s"conditional merge lost $maxAttempts races at $path — giving up")
-      }
-      var attempt = 0
-      while (attempt < maxAttempts) {
-        val prevV = currentVersion(spark, path).getOrElse(
-          throw new IllegalStateException(
-            s"no committed version at $path to merge into"))
-        val st = resolveState(spark, path, prevV)
+      else transact(spark, path, "conditional merge", maxAttempts,
+          Some(s"no committed version at $path to merge into")) { t =>
+        val st = t.st
         val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
         // match-state resolution over the pruned base slice, PINNED to
-        // prevV. BY SOURCE semantics inspect EVERY target row, so the
+        // the base. BY SOURCE semantics inspect EVERY target row, so the
         // base-only side cannot prune to the update-key range; without
         // by-source clauses the pruned slice stands (only matched rows
         // matter).
@@ -5313,12 +4798,12 @@ object ManifestTable {
         val (compiledPinned, releaseCompiled) =
           org.apache.spark.sql.graftshim.PlanShim
             .localCheckpointReleasable(genFill(withBySource))
-        val outcome =
-          try mergeAttempt(compiledPinned, path, keys,
+        // a lost race re-runs this whole resolution against the new base
+        try mergeAttempt(compiledPinned, t, keys,
             deleteCol = Some("_graft_del"),
             statsCols = statsCols, tag = tag, tagHorizon = tagHorizon,
             sortCols = sortCols, deleteVectors = deleteVectors,
-            prevV = prevV, schemaEvolution = schemaEvolution,
+            schemaEvolution = schemaEvolution,
             // a by-source clause can grow the COMPILED frame to base
             // size (every base-only acted/carried row joins it) no
             // matter how small the original source was — let
@@ -5326,17 +4811,11 @@ object ManifestTable {
             // (its bounds aggregate carries the count for free)
             // instead of inheriting a verdict sized to the source
             broadcastSource = if (hasBySource) None else Some(bcSource))
-          finally {
-            releaseCompiled()
-            releasePairs()
-          }
-        outcome match {
-          case Some(v) => return v
-          case None    => attempt += 1 // lost the race: RE-RESOLVE above
+        finally {
+          releaseCompiled()
+          releasePairs()
         }
       }
-      throw new IllegalStateException(
-        s"conditional merge lost $maxAttempts races at $path — giving up")
       } finally {
         releaseSrc()
       }
@@ -5603,14 +5082,10 @@ object ManifestTable {
                     tagHorizon: Int = DefaultTagHorizon,
                     sparseRowLimit: Long = DefaultSparseRowLimit): Long = {
     import org.apache.spark.sql.functions.{col, element_at, input_file_name, split}
-    val f = fs(spark, path)
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse {
-      var attempt = 0
-      while (attempt < maxAttempts) {
-        val prevV = currentVersion(spark, path).getOrElse(
-          throw new IllegalStateException(s"no committed version at $path"))
-        val st = resolveState(spark, path, prevV)
-        assertWritable(st, path)
+    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
+      transact(spark, path, "DV-delete", maxAttempts,
+          Some(s"no committed version at $path")) { t =>
+        val st = t.st
         val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
         require(schema.fieldNames.contains(key),
           s"no column '$key' at $path to key deletion vectors on")
@@ -5619,77 +5094,66 @@ object ManifestTable {
             s"table $path has live deletion vectors keyed on " +
               s"'${st.logical(dk)}' — a second DV key would corrupt " +
               "the read-side anti-join"))
-        val version = prevV + 1L
         val candidates = condBounds(cond).foldLeft(st.files) {
           case (files, (c, (lo, hi))) =>
             if (files.isEmpty || !prunableColumn(st, c)) files
             else pruneFilesByRange(st.copy(files = files), c,
               prunableType = true, lo, hi)
         }
-        if (candidates.isEmpty) return prevV
-        // DV-aware matching scan (already-deleted rows never re-enter a
-        // sidecar), emitting (file basename, key) pairs DISTRIBUTIVELY.
-        // The file name is projected BEFORE any join (input_file_name
-        // is task-scoped — the same discipline as readStateDf's own DV
-        // anti-join).
-        val base = readFilesMapped(spark, path, st, candidates)
-          .withColumn("_graft_dv_file",
-            element_at(split(input_file_name(), "/"), -1))
-        val alive =
-          if (st.dvFiles.isEmpty) base
-          else {
-            import org.apache.spark.sql.functions.broadcast
-            val dv = spark.read
-              .parquet(st.dvFiles.map(resolveRef(path, _)): _*)
-            base.join(broadcast(dv),
-              base("_graft_dv_file") === dv("_graft_dv_file") &&
-                base(key) === dv("_graft_dv_key"), "left_anti")
-          }
-        // the emptiness check, the sparse-contract guard, and the
-        // sidecar write all read ONE cached frame — the pruned
-        // detection scan runs once (a nondeterministic or
-        // time-sensitive predicate could otherwise commit a vector
-        // that diverges from the emptiness check; mirrors
-        // updateWhereDV's cached pattern)
-        val pairs = alive.filter(cond)
-          .select(col("_graft_dv_file"), col(key).as("_graft_dv_key"))
-          .dropDuplicates("_graft_dv_file", "_graft_dv_key")
-          .cache()
-        try {
-          val matched = pairs.count()
-          if (matched == 0L) return prevV // no match: nothing to commit
-          if (matched > sparseRowLimit) {
-            // the predicate is BULK, not sparse: a coalesce(1) sidecar
-            // of this size would funnel through one task and readers
-            // would pay a huge anti-join forever — the CoW rewrite is
-            // the right shape, so take it (self-enforcing contract)
-            pairs.unpersist(blocking = false)
-            return deleteWhere(spark, path, cond,
-              maxAttempts = maxAttempts, tag = tag, tagHorizon = tagHorizon)
-          }
-          val token = java.util.UUID.randomUUID.toString.take(8)
-          val dvDir = s"$path/dv-$version-$token"
-          pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
-          val dvAdds = listDataFiles(f, new Path(dvDir))
-            .map(p => relativize(new Path(path), p))
-          val json = deltaJson(version, commitTs(spark, path, version), Nil, Nil,
-            Map.empty, tag, tagHorizon, Some(schema),
-            dvAdds = dvAdds, dvKey = Some(st.phys(key)), op = Some("DELETE_DV"))
-          val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-          val out = f.create(tmp, true)
-          try out.write(json.getBytes("UTF-8")) finally out.close()
-          if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-            maybeCheckpoint(spark, path, version)
-            return version
-          }
-          f.delete(tmp, false)
-          f.delete(new Path(dvDir), true)
-        } finally pairs.unpersist(blocking = false)
-        attempt += 1
-      }
-      throw new IllegalStateException(
-        s"DV-delete commit lost $maxAttempts races at $path — giving up")
-    }
+        if (candidates.isEmpty) Done(t.base)
+        else {
+          // DV-aware matching scan (already-deleted rows never re-enter
+          // a sidecar), emitting (file basename, key) pairs
+          // DISTRIBUTIVELY. The file name is projected BEFORE any join
+          // (input_file_name is task-scoped — the same discipline as
+          // readStateDf's own DV anti-join).
+          val base = readFilesMapped(spark, path, st, candidates)
+            .withColumn("_graft_dv_file",
+              element_at(split(input_file_name(), "/"), -1))
+          val alive =
+            if (st.dvFiles.isEmpty) base
+            else {
+              import org.apache.spark.sql.functions.broadcast
+              val dv = spark.read
+                .parquet(st.dvFiles.map(resolveRef(path, _)): _*)
+              base.join(broadcast(dv),
+                base("_graft_dv_file") === dv("_graft_dv_file") &&
+                  base(key) === dv("_graft_dv_key"), "left_anti")
+            }
+          // the emptiness check, the sparse-contract guard, and the
+          // sidecar write all read ONE cached frame — the pruned
+          // detection scan runs once (a nondeterministic or
+          // time-sensitive predicate could otherwise commit a vector
+          // that diverges from the emptiness check; mirrors
+          // updateWhereDV's cached pattern)
+          val pairs = alive.filter(cond)
+            .select(col("_graft_dv_file"), col(key).as("_graft_dv_key"))
+            .dropDuplicates("_graft_dv_file", "_graft_dv_key")
+            .cache()
+          try {
+            val matched = pairs.count()
+            if (matched == 0L) Done(t.base) // no match: nothing to commit
+            else if (matched > sparseRowLimit) {
+              // the predicate is BULK, not sparse: a coalesce(1) sidecar
+              // of this size would funnel through one task and readers
+              // would pay a huge anti-join forever — the CoW rewrite is
+              // the right shape, so take it (self-enforcing contract)
+              pairs.unpersist(blocking = false)
+              Done(deleteWhere(spark, path, cond, maxAttempts = maxAttempts,
+                tag = tag, tagHorizon = tagHorizon))
+            } else {
+              val dvDir = t.dir("dv")
+              pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
+              val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
+              Publish(deltaJson(t.version, t.ts, tag = tag,
+                  tagHorizon = tagHorizon, schema = Some(schema),
+                  dvAdds = dvAdds, dvKey = Some(st.phys(key)),
+                  op = Some("DELETE_DV")),
+                Seq(dvDir))
+            }
+          } finally pairs.unpersist(blocking = false)
+        }
+      })
   }
 
   /** Merge-on-read predicate UPDATE (`UPDATE ... SET ... WHERE` with
@@ -5712,14 +5176,10 @@ object ManifestTable {
                     sparseRowLimit: Long = DefaultSparseRowLimit): Long = {
     import org.apache.spark.sql.functions.{broadcast, col, element_at, input_file_name, split, when}
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val f = fs(spark, path)
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse {
-      var attempt = 0
-      while (attempt < maxAttempts) {
-        val prevV = currentVersion(spark, path).getOrElse(
-          throw new IllegalStateException(s"no committed version at $path"))
-        val st = resolveState(spark, path, prevV)
-        assertWritable(st, path)
+    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
+      transact(spark, path, "MoR-update", maxAttempts,
+          Some(s"no committed version at $path")) { t =>
+        val st = t.st
         val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
         require(schema.fieldNames.contains(key),
           s"no column '$key' at $path to key deletion vectors on")
@@ -5740,130 +5200,104 @@ object ManifestTable {
         // partitionBy, so every new image lands in its partition home
         // (including rows a SET moves ACROSS partitions)
         val partCols = partitionColsOf(st.files)
-        val version = prevV + 1L
         val candidates = condBounds(cond).foldLeft(st.files) {
           case (files, (c, (lo, hi))) =>
             if (files.isEmpty || !prunableColumn(st, c)) files
             else pruneFilesByRange(st.copy(files = files), c,
               prunableType = true, lo, hi)
         }
-        if (candidates.isEmpty) return prevV
-        val idSchema = st.schema.map(sc => StructType(sc.fields :+
-          org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-        val base = readFilesMapped(spark, path,
-            st.copy(schema = if (st.rowTracking) idSchema else st.schema),
-            candidates)
-          .withColumn("_graft_dv_file",
-            element_at(split(input_file_name(), "/"), -1))
-        val alive =
-          if (st.dvFiles.isEmpty) base
-          else {
-            val dv = spark.read
-              .parquet(st.dvFiles.map(resolveRef(path, _)): _*)
-            base.join(broadcast(dv),
-              base("_graft_dv_file") === dv("_graft_dv_file") &&
-                base(key) === dv("_graft_dv_key"), "left_anti")
-          }
-        val matching = alive.filter(cond)
-        // the DV pairs (old images to kill) and the new images come
-        // from ONE cached matching frame — the scan runs once
-        val cached = matching.cache()
-        try {
-          val matchedRows = cached.count()
-          if (matchedRows == 0L) return prevV
-          if (matchedRows > sparseRowLimit) {
-            // bulk predicate: the MoR shape's single-task images write
-            // and perpetual read-side anti-join would both be the wrong
-            // cost curve — fall through to the CoW rewrite instead
-            // (self-enforcing sparse contract)
-            cached.unpersist(blocking = false)
-            return updateWhere(spark, path, set, cond,
-              maxAttempts = maxAttempts, tag = tag, tagHorizon = tagHorizon)
-          }
-          val pairs = cached
-            .select(col("_graft_dv_file"), col(key).as("_graft_dv_key"))
-            .dropDuplicates("_graft_dv_file", "_graft_dv_key")
-          // SET semantics as in updateWhere: stage all RHS against the
-          // OLD row — BEFORE generated columns strip, so a RHS may
-          // reference them — then overwrite (cond is TRUE on every
-          // cached row, so no per-row guard is needed); generated
-          // columns recompute from the updated sources
-          val stagedSet = set.foldLeft(cached.drop("_graft_dv_file")) {
-            case (d, (c, e)) =>
-              d.withColumn(s"_graft_set_$c", e.cast(schema(c).dataType))
-          }
-          val stripped = st.generated.keys.foldLeft(stagedSet)(_ drop _)
-          val updated0 = set.foldLeft(stripped) { case (d, (c, _)) =>
-            d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
-          }
-          val carrySchema =
-            if (st.rowTracking) schema.fieldNames :+ RowIdCol
-            else schema.fieldNames
-          val newImages = constraintGuard(
-            generatedGuard(updated0, st.generated), st.constraints)
-            .select(carrySchema.map(col).toSeq: _*)
-          val token = java.util.UUID.randomUUID.toString.take(8)
-          val snapDir = s"$path/snap-$version-$token"
-          val physOut =
-            if (!st.mapped) newImages
-            else newImages.select(newImages.schema.fieldNames.map(n =>
-              col(n).as(st.phys(n))).toSeq: _*)
-          val imgW = physOut.coalesce(1).write.mode("overwrite")
-          (if (partCols.nonEmpty) imgW.partitionBy(partCols: _*) else imgW)
-            .parquet(snapDir)
-          val staged = listDataFiles(f, new Path(snapDir))
-          val stagedRel = staged.map(p => relativize(new Path(path), p))
-          val dvDir = s"$path/dv-$version-$token"
-          pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
-          val dvAdds = listDataFiles(f, new Path(dvDir))
-            .map(p => relativize(new Path(path), p))
-          val physStats =
-            if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
-            else st.stats.values.headOption.map(_.keys.toSeq.sorted)
-              .getOrElse(Nil)
-          val newStats: Map[String, Map[String, ColStats]] =
-            if (physStats.isEmpty) Map.empty
-            else stagedFooterStats(spark, path, staged, physStats)
-          val bloomAdds = st.bloom match {
-            case Some(spec) if spec.cols.nonEmpty =>
-              buildBloomSidecar(spark, path, staged, spec, version, token)
-            case _ => Nil
-          }
-          val ndvAdds = st.ndvCols match {
-            case Nil  => Nil
-            case cols => buildNdvSidecar(spark, path, staged, cols,
-              version, token)
-          }
-          val json = deltaJson(version, commitTs(spark, path, version),
-            stagedRel, Nil, newStats, tag, tagHorizon, Some(schema),
-            dvAdds = dvAdds, dvKey = Some(st.phys(key)),
-            bloomAdds = bloomAdds, ndvAdds = ndvAdds,
-            op = Some("UPDATE_DV"))
-          val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-          val out = f.create(tmp, true)
-          try out.write(json.getBytes("UTF-8")) finally out.close()
-          if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-            maybeCheckpoint(spark, path, version)
-            return version
-          }
-          f.delete(tmp, false)
-          f.delete(new Path(snapDir), true)
-          f.delete(new Path(dvDir), true)
-          if (bloomAdds.nonEmpty)
-            f.delete(new Path(s"$path/bloom-$version-$token"), true)
-          if (ndvAdds.nonEmpty)
-            f.delete(new Path(s"$path/ndv-$version-$token"), true)
-        } finally cached.unpersist(blocking = false)
-        attempt += 1
-      }
-      throw new IllegalStateException(
-        s"MoR-update commit lost $maxAttempts races at $path — giving up")
-    }
+        if (candidates.isEmpty) Done(t.base)
+        else {
+          val idSchema = st.schema.map(sc => StructType(sc.fields :+
+            org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
+          val base = readFilesMapped(spark, path,
+              st.copy(schema = if (st.rowTracking) idSchema else st.schema),
+              candidates)
+            .withColumn("_graft_dv_file",
+              element_at(split(input_file_name(), "/"), -1))
+          val alive =
+            if (st.dvFiles.isEmpty) base
+            else {
+              val dv = spark.read
+                .parquet(st.dvFiles.map(resolveRef(path, _)): _*)
+              base.join(broadcast(dv),
+                base("_graft_dv_file") === dv("_graft_dv_file") &&
+                  base(key) === dv("_graft_dv_key"), "left_anti")
+            }
+          val matching = alive.filter(cond)
+          // the DV pairs (old images to kill) and the new images come
+          // from ONE cached matching frame — the scan runs once
+          val cached = matching.cache()
+          try {
+            val matchedRows = cached.count()
+            if (matchedRows == 0L) Done(t.base)
+            else if (matchedRows > sparseRowLimit) {
+              // bulk predicate: the MoR shape's single-task images write
+              // and perpetual read-side anti-join would both be the wrong
+              // cost curve — fall through to the CoW rewrite instead
+              // (self-enforcing sparse contract)
+              cached.unpersist(blocking = false)
+              Done(updateWhere(spark, path, set, cond,
+                maxAttempts = maxAttempts, tag = tag, tagHorizon = tagHorizon))
+            } else {
+              val pairs = cached
+                .select(col("_graft_dv_file"), col(key).as("_graft_dv_key"))
+                .dropDuplicates("_graft_dv_file", "_graft_dv_key")
+              // SET semantics as in updateWhere: stage all RHS against the
+              // OLD row — BEFORE generated columns strip, so a RHS may
+              // reference them — then overwrite (cond is TRUE on every
+              // cached row, so no per-row guard is needed); generated
+              // columns recompute from the updated sources
+              val stagedSet = set.foldLeft(cached.drop("_graft_dv_file")) {
+                case (d, (c, e)) =>
+                  d.withColumn(s"_graft_set_$c", e.cast(schema(c).dataType))
+              }
+              val stripped = st.generated.keys.foldLeft(stagedSet)(_ drop _)
+              val updated0 = set.foldLeft(stripped) { case (d, (c, _)) =>
+                d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
+              }
+              val carrySchema =
+                if (st.rowTracking) schema.fieldNames :+ RowIdCol
+                else schema.fieldNames
+              val newImages = constraintGuard(
+                generatedGuard(updated0, st.generated), st.constraints)
+                .select(carrySchema.map(col).toSeq: _*)
+              val snapDir = t.dir("snap")
+              val physOut =
+                if (!st.mapped) newImages
+                else newImages.select(newImages.schema.fieldNames.map(n =>
+                  col(n).as(st.phys(n))).toSeq: _*)
+              val imgW = physOut.coalesce(1).write.mode("overwrite")
+              (if (partCols.nonEmpty) imgW.partitionBy(partCols: _*) else imgW)
+                .parquet(snapDir)
+              val staged = listDataFiles(t.f, new Path(snapDir))
+              val dvDir = t.dir("dv")
+              pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
+              val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
+              val physStats =
+                if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
+                else st.stats.values.headOption.map(_.keys.toSeq.sorted)
+                  .getOrElse(Nil)
+              val newStats: Map[String, Map[String, ColStats]] =
+                if (physStats.isEmpty) Map.empty
+                else stagedFooterStats(spark, path, staged, physStats)
+              val (bloomAdds, ndvAdds) = t.sidecars(staged)
+              Publish(deltaJson(t.version, t.ts, staged.map(t.rel),
+                  addStats = newStats, tag = tag, tagHorizon = tagHorizon,
+                  schema = Some(schema), dvAdds = dvAdds,
+                  dvKey = Some(st.phys(key)), bloomAdds = bloomAdds,
+                  ndvAdds = ndvAdds, op = Some("UPDATE_DV")),
+                Seq(snapDir, dvDir) ++
+                  t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
+            }
+          } finally cached.unpersist(blocking = false)
+        }
+      })
   }
 
-  /** Shared CoW engine for the keyless row-level verbs: OCC loop of
-    * (detect touched files → rewrite them via `transform` → commit
-    * adds/removes). Detection first PRE-PRUNES the candidate files with
+  /** Shared CoW engine for the keyless row-level verbs: each attempt
+    * detects touched files, rewrites them via `transform` and commits
+    * the adds/removes. Detection first PRE-PRUNES the candidate files with
     * the manifest's per-file stats against [[condBounds]]'s necessary
     * ranges (sound: a file whose stats exclude a necessary condition
     * holds no matching row), then runs ONE filter-pushed name-only scan
@@ -5879,14 +5313,9 @@ object ManifestTable {
                            transform: (DataFrame, TableState) => DataFrame,
                            extra: Option[DataFrame] = None): Long = {
     import org.apache.spark.sql.functions.{col, element_at, input_file_name, split}
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
-      assertWritable(st, path)
-      val version = prevV + 1L
+    transact(spark, path, op, maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      val st = t.st
       val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
       val partCols = partitionColsOf(st.files)
       // 1a) manifest-stats pre-prune: necessary ranges from the cond's
@@ -5909,100 +5338,78 @@ object ManifestTable {
           .distinct().collect().map(_.getString(0)).toSet
       val touched = candidates.filter(fl => touchedBase(fl.split("/").last))
       // no matches AND no staged batch: nothing to commit
-      if (touched.isEmpty && extra.forall(_.isEmpty)) return prevV
-      // 2) rewrite ONLY the touched files, DV-aware (already-deleted
-      // rows never resurrect); row ids ride along verbatim
-      val idSchema = st.schema.map(sc => StructType(sc.fields :+
-        org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-      val carrySchema =
-        if (st.rowTracking) schema.fieldNames :+ RowIdCol
-        else schema.fieldNames
-      // rewritten survivors pack into ~touched-file count (shuffle-free
-      // coalesce); an extra staged batch (replaceWhere's incoming
-      // slice) keeps ITS OWN partitioning — its size is unrelated to
-      // the files it displaces. Extra rows are inserts: under row
-      // tracking they draw fresh ids above the high-water mark.
-      val rewritten: Option[DataFrame] =
-        if (touched.isEmpty) None
-        else Some(transform(readStateDf(spark, path, st.copy(files = touched,
-            schema = if (st.rowTracking) idSchema else st.schema)), st)
-          .select(carrySchema.map(col).toSeq: _*)
-          .coalesce(math.max(1, touched.size)))
-      val extraPrep: Option[DataFrame] = extra.map { e =>
-        val withId = if (st.rowTracking) assignRowIds(e, st.rowHighWater) else e
-        withId.select(carrySchema.map(col).toSeq: _*)
-      }
-      val newData = (rewritten.toSeq ++ extraPrep.toSeq).reduce(_ unionByName _)
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val snapDir = s"$path/snap-$version-$token"
-      // physical names on mapped tables, inside the partition layout
-      val packed = newData
-      val physOut =
-        if (!st.mapped) packed
-        else packed.select(packed.schema.fieldNames.map(n =>
-          col(n).as(st.phys(n))).toSeq: _*)
-      val w = physOut.write.mode("overwrite")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(snapDir)
-      var staged = listDataFiles(f, new Path(snapDir))
-      val untouched = st.files.filterNot(touched.toSet)
-      if (staged.isEmpty && untouched.isEmpty) {
-        // every row deleted: keep the version readable
-        physOut.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
-        staged = listDataFiles(f, new Path(snapDir))
-      }
-      val stagedRel = staged.map(p => relativize(new Path(path), p))
-      // stats columns: explicit > declared stats schema > inherited
-      // from existing file stats (so skipping survives the rewrite
-      // without the caller re-declaring); stored keys already PHYSICAL
-      val physStats =
-        if (statsCols.nonEmpty) statsCols.map(st.phys)
-        else if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
-        else st.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
-      val newStats: Map[String, Map[String, ColStats]] =
-        if (physStats.isEmpty) Map.empty
-        else stagedFooterStats(spark, path, staged, physStats)
-      val bloomAdds = st.bloom match {
-        case Some(spec) if spec.cols.nonEmpty =>
-          buildBloomSidecar(spark, path, staged, spec, version, token)
-        case _ => Nil
-      }
-      val ndvAdds = st.ndvCols match {
-        case Nil  => Nil
-        case cols => buildNdvSidecar(spark, path, staged, cols, version, token)
-      }
-      val json = deltaJson(version, commitTs(spark, path, version), stagedRel,
-        touched, newStats, tag, tagHorizon, Some(schema),
-        bloomAdds = bloomAdds, ndvAdds = ndvAdds, op = Some(op),
-        rowHighWater =
-          if (!st.rowTracking || extra.isEmpty) None
-          else Some(stagedHighWater(spark, staged, st.rowHighWater)),
-        // replaceWhere's staged batch carries the identity column by
-        // schema contract — supplied values advance the high water
-        // exactly as commit() does, preserving id uniqueness
-        identityHighWater = st.identityCol.map(pc =>
-          stagedColMax(spark, staged, pc, st.identityHighWater)))
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
+      if (touched.isEmpty && extra.forall(_.isEmpty)) Done(t.base)
+      else {
+        // 2) rewrite ONLY the touched files, DV-aware (already-deleted
+        // rows never resurrect); row ids ride along verbatim
+        val idSchema = st.schema.map(sc => StructType(sc.fields :+
+          org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
+        val carrySchema =
+          if (st.rowTracking) schema.fieldNames :+ RowIdCol
+          else schema.fieldNames
+        // rewritten survivors pack into ~touched-file count (shuffle-free
+        // coalesce); an extra staged batch (replaceWhere's incoming
+        // slice) keeps ITS OWN partitioning — its size is unrelated to
+        // the files it displaces. Extra rows are inserts: under row
+        // tracking they draw fresh ids above the high-water mark.
+        val rewritten: Option[DataFrame] =
+          if (touched.isEmpty) None
+          else Some(transform(readStateDf(spark, path, st.copy(files = touched,
+              schema = if (st.rowTracking) idSchema else st.schema)), st)
+            .select(carrySchema.map(col).toSeq: _*)
+            .coalesce(math.max(1, touched.size)))
+        val extraPrep: Option[DataFrame] = extra.map { e =>
+          val withId = if (st.rowTracking) assignRowIds(e, st.rowHighWater) else e
+          withId.select(carrySchema.map(col).toSeq: _*)
+        }
+        val newData = (rewritten.toSeq ++ extraPrep.toSeq).reduce(_ unionByName _)
+        val snapDir = t.dir("snap")
+        // physical names on mapped tables, inside the partition layout
+        val packed = newData
+        val physOut =
+          if (!st.mapped) packed
+          else packed.select(packed.schema.fieldNames.map(n =>
+            col(n).as(st.phys(n))).toSeq: _*)
+        val w = physOut.write.mode("overwrite")
+        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
+          .parquet(snapDir)
+        var staged = listDataFiles(t.f, new Path(snapDir))
+        val untouched = st.files.filterNot(touched.toSet)
+        if (staged.isEmpty && untouched.isEmpty) {
+          // every row deleted: keep the version readable
+          physOut.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
+          staged = listDataFiles(t.f, new Path(snapDir))
+        }
+        val stagedRel = staged.map(t.rel)
+        // stats columns: explicit > declared stats schema > inherited
+        // from existing file stats (so skipping survives the rewrite
+        // without the caller re-declaring); stored keys already PHYSICAL
+        val physStats =
+          if (statsCols.nonEmpty) statsCols.map(st.phys)
+          else if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
+          else st.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
+        val newStats: Map[String, Map[String, ColStats]] =
+          if (physStats.isEmpty) Map.empty
+          else stagedFooterStats(spark, path, staged, physStats)
+        val (bloomAdds, ndvAdds) = t.sidecars(staged)
+        val json = deltaJson(t.version, t.ts, stagedRel,
+          touched, newStats, tag, tagHorizon, Some(schema),
+          bloomAdds = bloomAdds, ndvAdds = ndvAdds, op = Some(op),
+          rowHighWater =
+            if (!st.rowTracking || extra.isEmpty) None
+            else Some(stagedHighWater(spark, staged, st.rowHighWater)),
+          // replaceWhere's staged batch carries the identity column by
+          // schema contract — supplied values advance the high water
+          // exactly as writeAttempt does, preserving id uniqueness
+          identityHighWater = st.identityCol.map(pc =>
+            stagedColMax(spark, staged, pc, st.identityHighWater)))
         // UPDATE/DELETE/replaceWhere rewrites stage small files per
-        // commit just like appends — evaluate auto-compaction after
+        // commit just like appends — auto-compaction evaluates after
         // any successful write (delta's post-commit hook shape)
-        maybeAutoCompact(spark, path, st.properties)
-        return version
+        Publish(json, snapDir +: t.written("bloom" -> bloomAdds,
+          "ndv" -> ndvAdds), autoCompact = true)
       }
-      f.delete(tmp, false)
-      f.delete(new Path(snapDir), true)
-      if (bloomAdds.nonEmpty)
-        f.delete(new Path(s"$path/bloom-$version-$token"), true)
-      if (ndvAdds.nonEmpty)
-        f.delete(new Path(s"$path/ndv-$version-$token"), true)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"$op commit lost $maxAttempts races at $path — giving up")
   }
 
   // ------------------------------------------------------------------
@@ -6059,8 +5466,7 @@ object ManifestTable {
     def abs(rel: String): String = resolveRef(srcRoot, rel)
     val json = deltaJson(1L, System.currentTimeMillis(),
       st.files.map(abs), Nil,
-      st.stats.map { case (k, v) => abs(k) -> v },
-      None, DefaultTagHorizon, st.schema,
+      st.stats.map { case (k, v) => abs(k) -> v }, schema = st.schema,
       dvAdds = st.dvFiles.map(abs), dvKey = st.dvKey,
       constraintAdds = st.constraints,
       bloomAdds = st.bloomFiles.map(abs), bloomSpec = st.bloom,
@@ -6091,11 +5497,7 @@ object ManifestTable {
         if (st.partitionColsDecl.nonEmpty) Some(st.partitionColsDecl)
         else None)
     f.mkdirs(new Path(dst))
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(dst, s"${ManifestPrefix}1.json.$token.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    require(conditionalCommit(f, tmp, manifestPath(dst, 1L)),
+    require(publish(f, manifestPath(dst, 1L), newToken(), json),
       s"clone commit lost the race at $dst")
     1L
   }
@@ -6210,8 +5612,7 @@ object ManifestTable {
     def m(rel: String): String = relMap(rel)
     val json = deltaJson(1L, System.currentTimeMillis(),
       st.files.map(m), Nil,
-      st.stats.map { case (k, v) => m(k) -> v },
-      None, DefaultTagHorizon, st.schema,
+      st.stats.map { case (k, v) => m(k) -> v }, schema = st.schema,
       dvAdds = st.dvFiles.map(m), dvKey = st.dvKey,
       constraintAdds = st.constraints,
       bloomAdds = st.bloomFiles.map(m), bloomSpec = st.bloom,
@@ -6241,11 +5642,7 @@ object ManifestTable {
       partitionColsDecl =
         if (st.partitionColsDecl.nonEmpty) Some(st.partitionColsDecl)
         else None)
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(dst, s"${ManifestPrefix}1.json.$token.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    require(conditionalCommit(f, tmp, manifestPath(dst, 1L)),
+    require(publish(f, manifestPath(dst, 1L), newToken(), json),
       s"clone commit lost the race at $dst")
     1L
   }
@@ -6261,30 +5658,26 @@ object ManifestTable {
     * horizon fails loudly when a target file is gone.
     */
   def restore(spark: SparkSession, path: String, toVersion: Long,
-              maxAttempts: Int = 3): Long = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      require(toVersion <= prevV,
-        s"cannot restore $path to v$toVersion — current is v$prevV")
+              maxAttempts: Int = 3): Long =
+    transact(spark, path, "restore", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      require(toVersion <= t.base,
+        s"cannot restore $path to v$toVersion — current is v${t.base}")
       val target = resolveState(spark, path, toVersion)
       // fail fast if vacuum already swept a file the restore needs
-      target.files.find(r => !f.exists(new Path(resolveRef(path, r))))
+      target.files.find(r => !t.f.exists(new Path(resolveRef(path, r))))
         .foreach(missing => throw new IllegalStateException(
           s"cannot restore $path to v$toVersion — data file $missing was " +
             "vacuumed; restore is bounded by the retention horizon"))
-      val cur = resolveState(spark, path, prevV)
+      val cur = t.st
       val curFiles = cur.files.toSet
       val targetFiles = target.files.toSet
       val adds = target.files.filterNot(curFiles)
       val removes = cur.files.filterNot(targetFiles)
       val addSet = adds.toSet
       val addStats = target.stats.view.filterKeys(addSet).toMap
-      val version = prevV + 1L
-      val json = deltaJson(version, commitTs(spark, path, version), adds, removes,
-        addStats, None, DefaultTagHorizon, target.schema,
+      Publish(deltaJson(t.version, t.ts, adds, removes,
+        addStats, schema = target.schema,
         dvAdds = target.dvFiles.filterNot(cur.dvFiles.toSet),
         dvRemoves = cur.dvFiles.filterNot(target.dvFiles.toSet),
         dvKey = target.dvKey,
@@ -6366,21 +5759,8 @@ object ManifestTable {
         expectationAdds = target.expectations,
         expectationRemoves =
           (cur.expectations.keySet -- target.expectations.keySet)
-            .toSeq.sorted)
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      attempt += 1
+            .toSeq.sorted))
     }
-    throw new IllegalStateException(
-      s"restore commit lost $maxAttempts races at $path — giving up")
-  }
 
   /** DESCRIBE HISTORY: one row per committed version, newest first —
     * (version, ts, operation, adds, removes, dvAdds, tag). The
@@ -7130,15 +6510,10 @@ object ManifestTable {
     */
   def compactWhere(spark: SparkSession, path: String, cond: Column,
                    targetFiles: Int = 1, maxAttempts: Int = 3): Long = {
-    import org.apache.spark.sql.functions.col
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val st = resolveState(spark, path, prevV)
-      assertWritable(st, path)
+    transact(spark, path, "compactWhere", maxAttempts,
+        Some(s"no committed version at $path")) { t =>
+      val st = t.st
       val partCols = partitionColsOf(st.files)
       require(partCols.nonEmpty,
         s"compactWhere targets partitioned layouts — $path is flat " +
@@ -7158,59 +6533,9 @@ object ManifestTable {
           spark.sparkContext.parallelize(fileRows, 1), pvSchema)
         .filter(cond).select("_graft_file")
         .collect().map(_.getString(0)).toSeq
-      if (selected.isEmpty) return prevV
-      val version = prevV + 1L
-      val idSchema = st.schema.map(sc => StructType(sc.fields :+
-        org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-      val rows = readStateDf(spark, path, st.copy(files = selected,
-        schema = if (st.rowTracking) idSchema else st.schema))
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val snapDir = s"$path/snap-$version-$token"
-      val packed = rows.coalesce(targetFiles)
-      val physOut =
-        if (!st.mapped) packed
-        else packed.select(packed.schema.fieldNames.map(n =>
-          col(n).as(st.phys(n))).toSeq: _*)
-      physOut.write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(snapDir)
-      val staged = listDataFiles(f, new Path(snapDir))
-      val stagedRel = staged.map(p => relativize(new Path(path), p))
-      val physStats =
-        if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
-        else st.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
-      val newStats: Map[String, Map[String, ColStats]] =
-        if (physStats.isEmpty) Map.empty
-        else stagedFooterStats(spark, path, staged, physStats)
-      val bloomAdds = st.bloom match {
-        case Some(spec) if spec.cols.nonEmpty =>
-          buildBloomSidecar(spark, path, staged, spec, version, token)
-        case _ => Nil
-      }
-      val ndvAdds = st.ndvCols match {
-        case Nil  => Nil
-        case cols => buildNdvSidecar(spark, path, staged, cols, version, token)
-      }
-      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-      val json = deltaJson(version, commitTs(spark, path, version), stagedRel,
-        selected, newStats, None, DefaultTagHorizon, Some(schema),
-        bloomAdds = bloomAdds, ndvAdds = ndvAdds, op = Some("COMPACT"))
-      val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-        maybeCheckpoint(spark, path, version)
-        return version
-      }
-      f.delete(tmp, false)
-      f.delete(new Path(snapDir), true)
-      if (bloomAdds.nonEmpty)
-        f.delete(new Path(s"$path/bloom-$version-$token"), true)
-      if (ndvAdds.nonEmpty)
-        f.delete(new Path(s"$path/ndv-$version-$token"), true)
-      attempt += 1
+      if (selected.isEmpty) Done(t.base)
+      else subsetRewrite(t, selected, targetFiles, partCols)
     }
-    throw new IllegalStateException(
-      s"compactWhere commit lost $maxAttempts races at $path — giving up")
   }
 
   // reentrancy guard: the auto-compaction's OWN commit must never
@@ -7262,81 +6587,65 @@ object ManifestTable {
     if (small.size < minN) return
     inAutoCompact.set(java.lang.Boolean.TRUE)
     try { compactFiles(spark, path, small, target); () }
-    catch { case scala.util.control.NonFatal(_) => () } // best effort
+    catch { case NonFatal(_) => () } // best effort
     finally inAutoCompact.set(java.lang.Boolean.FALSE)
   }
 
   /** Bin-pack a SUBSET of the current version's files into
-    * ~`targetBytes` files; untouched files carry verbatim (same
-    * subset-rewrite commit shape as [[compactWhere]], flat layouts).
-    * Single attempt: the caller treats a lost race as "next trigger's
-    * problem". Returns the committed version (current one when the
-    * subset is stale/empty or the race was lost). */
+    * ~`targetBytes` files; untouched files carry verbatim (flat
+    * layouts). Single attempt: a lost race throws, which the
+    * best-effort caller treats as "next trigger's problem". A stale or
+    * empty subset commits nothing. */
   private def compactFiles(spark: SparkSession, path: String,
-                           subset: Seq[String], targetBytes: Long): Long = {
+                           subset: Seq[String], targetBytes: Long): Long =
+    transact(spark, path, "auto-compact", 1,
+        Some(s"no committed version at $path")) { t =>
+      val chosen = subset.filter(t.st.files.toSet)
+      if (chosen.isEmpty) Done(t.base)
+      else {
+        val bytes = chosen.map { r =>
+          try t.f.getFileStatus(new Path(resolveRef(path, r))).getLen
+          catch { case _: java.io.IOException => 0L }
+        }.sum
+        val n = math.max(1L, (bytes + targetBytes - 1L) / targetBytes).toInt
+        subsetRewrite(t, chosen, n, Nil)
+      }
+    }
+
+  /** The subset-rewrite attempt of [[compactWhere]] and auto-compaction:
+    * bin-pack `files` of `t`'s base (DV-aware, row ids carried) into
+    * `n` files inside the `partCols` layout; every other file carries
+    * verbatim. */
+  private def subsetRewrite(t: Txn, files: Seq[String], n: Int,
+                            partCols: Seq[String]): Attempt = {
     import org.apache.spark.sql.functions.col
-    val f = fs(spark, path)
-    val prevV = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val st = resolveState(spark, path, prevV)
-    assertWritable(st, path)
-    val live = st.files.toSet
-    val chosen = subset.filter(live)
-    if (chosen.isEmpty) return prevV
-    val bytes = chosen.map { r =>
-      try f.getFileStatus(new Path(resolveRef(path, r))).getLen
-      catch { case _: java.io.IOException => 0L }
-    }.sum
-    val n = math.max(1L, (bytes + targetBytes - 1L) / targetBytes).toInt
-    val version = prevV + 1L
+    import t.{path, spark, st}
     val idSchema = st.schema.map(sc => StructType(sc.fields :+
       org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-    val rows = readStateDf(spark, path, st.copy(files = chosen,
+    val rows = readStateDf(spark, path, st.copy(files = files,
       schema = if (st.rowTracking) idSchema else st.schema))
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val snapDir = s"$path/snap-$version-$token"
+    val snapDir = t.dir("snap")
     val packed = rows.coalesce(n)
     val physOut =
       if (!st.mapped) packed
       else packed.select(packed.schema.fieldNames.map(nm =>
         col(nm).as(st.phys(nm))).toSeq: _*)
-    physOut.write.mode("overwrite").parquet(snapDir)
-    val staged = listDataFiles(f, new Path(snapDir))
-    val stagedRel = staged.map(p => relativize(new Path(path), p))
+    val w = physOut.write.mode("overwrite")
+    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
+      .parquet(snapDir)
+    val staged = listDataFiles(t.f, new Path(snapDir))
     val physStats =
       if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
       else st.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
     val newStats: Map[String, Map[String, ColStats]] =
       if (physStats.isEmpty) Map.empty
       else stagedFooterStats(spark, path, staged, physStats)
-    val bloomAdds = st.bloom match {
-      case Some(spec) if spec.cols.nonEmpty =>
-        buildBloomSidecar(spark, path, staged, spec, version, token)
-      case _ => Nil
-    }
-    val ndvAdds = st.ndvCols match {
-      case Nil  => Nil
-      case cols => buildNdvSidecar(spark, path, staged, cols, version, token)
-    }
+    val (bloomAdds, ndvAdds) = t.sidecars(staged)
     val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-    val json = deltaJson(version, commitTs(spark, path, version), stagedRel,
-      chosen, newStats, None, DefaultTagHorizon, Some(schema),
-      bloomAdds = bloomAdds, ndvAdds = ndvAdds, op = Some("COMPACT"))
-    val tmp = new Path(path, s"$ManifestPrefix$version.json.$token.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (conditionalCommit(f, tmp, manifestPath(path, version))) {
-      maybeCheckpoint(spark, path, version)
-      version
-    } else {
-      f.delete(tmp, false)
-      f.delete(new Path(snapDir), true)
-      if (bloomAdds.nonEmpty)
-        f.delete(new Path(s"$path/bloom-$version-$token"), true)
-      if (ndvAdds.nonEmpty)
-        f.delete(new Path(s"$path/ndv-$version-$token"), true)
-      prevV
-    }
+    Publish(deltaJson(t.version, t.ts, staged.map(t.rel), files, newStats,
+        schema = Some(schema), bloomAdds = bloomAdds, ndvAdds = ndvAdds,
+        op = Some("COMPACT")),
+      snapDir +: t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
   }
 
   /** Time-based retention (Delta's `VACUUM ... RETAIN n HOURS`
@@ -7438,6 +6747,99 @@ object ManifestTable {
   private def conditionalCommit(f: FileSystem, tmp: Path, dst: Path): Boolean =
     logStoreOverride.getOrElse(LogStore.forScheme(f.getScheme))
       .putIfAbsent(f, tmp, dst)
+
+  private def newToken(): String = java.util.UUID.randomUUID.toString.take(8)
+
+  /** Write `json` beside `dst` as a token-named tmp file and publish it
+    * through [[conditionalCommit]]. False when `dst` already exists —
+    * the tmp is deleted then, so a loser leaves nothing behind. Every
+    * manifest and checkpoint file is created here. */
+  private def publish(f: FileSystem, dst: Path, token: String,
+                      json: String): Boolean = {
+    val tmp = new Path(dst.getParent, s"${dst.getName}.$token.tmp")
+    val out = f.create(tmp, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+    val won = conditionalCommit(f, tmp, dst)
+    if (!won) f.delete(tmp, false)
+    won
+  }
+
+  /** One OCC attempt's view of the table: the base version it builds on
+    * (0 = no table yet), the base's resolved state, and the writer
+    * token naming everything the attempt stages. */
+  private final case class Txn(spark: SparkSession, path: String,
+                               f: FileSystem, base: Long, st: TableState,
+                               token: String) {
+    /** The version this attempt publishes. */
+    def version: Long = base + 1L
+    /** Commit timestamp (see [[commitTs]]) — read once per entry. */
+    def ts: Long = commitTs(spark, path, version)
+    /** This attempt's `<kind>-<version>-<token>` dir (snap, dv, bloom,
+      * ndv) — unique per attempt, so a loser's staging never collides. */
+    def dir(kind: String): String = s"$path/$kind-$version-$token"
+    /** A staged file's table-relative ref. */
+    def rel(p: Path): String = relativize(new Path(path), p)
+    /** Bloom and NDV sidecars of the staged files, per the indexes the
+      * base declares (Nil for an undeclared one). */
+    def sidecars(staged: Seq[Path]): (Seq[String], Seq[String]) = (
+      st.bloom.filter(_.cols.nonEmpty).map(spec =>
+        buildBloomSidecar(spark, path, staged, spec, version, token))
+        .getOrElse(Nil),
+      if (st.ndvCols.isEmpty) Nil
+      else buildNdvSidecar(spark, path, staged, st.ndvCols, version, token))
+    /** The dirs of the kinds that wrote any refs — a lost race's cleanup. */
+    def written(kinds: (String, Seq[String])*): Seq[String] =
+      kinds.collect { case (kind, refs) if refs.nonEmpty => dir(kind) }
+  }
+
+  /** What one attempt decided. */
+  private sealed trait Attempt
+  /** Nothing to publish: the table already holds the verb's result at
+    * `version` (a replayed tag or txn, an unchanged property map, no
+    * matching row, ...). */
+  private final case class Done(version: Long) extends Attempt
+  /** Publish `entry` as the attempt's version. On a lost race the
+    * `cleanup` dirs are deleted; `autoCompact` runs the post-commit
+    * auto-compaction hook after a win. */
+  private final case class Publish(entry: String, cleanup: Seq[String] = Nil,
+                                   autoCompact: Boolean = false)
+      extends Attempt
+
+  /** THE commit seam: the only place a table version is published. Per
+    * attempt it lists the current version (none → refuse with
+    * `ifAbsent`, or with `None` start from the empty version 0),
+    * resolves its state, gates on the writer protocol
+    * ([[assertWritable]]), runs the verb's `attempt` body against that
+    * base, and publishes the returned entry as base+1 through
+    * [[publish]] — then checkpoints and runs the post-commit hook. A
+    * lost race deletes the attempt's staging and re-runs the body
+    * against the new base; `maxAttempts` losses give up. */
+  private def transact(spark: SparkSession, path: String, op: String,
+                       maxAttempts: Int, ifAbsent: Option[String])
+                      (attempt: Txn => Attempt): Long = {
+    val f = fs(spark, path)
+    var lost = 0
+    while (lost < maxAttempts) {
+      val base = currentVersion(spark, path).getOrElse(
+        ifAbsent.fold(0L)(msg => throw new IllegalStateException(msg)))
+      val st = resolveState(spark, path, base)
+      assertWritable(st, path)
+      val t = Txn(spark, path, f, base, st, newToken())
+      attempt(t) match {
+        case Done(v) => return v
+        case Publish(entry, cleanup, autoCompact) =>
+          if (publish(f, manifestPath(path, t.version), t.token, entry)) {
+            maybeCheckpoint(spark, path, t.version)
+            if (autoCompact) maybeAutoCompact(spark, path, st.properties)
+            return t.version
+          }
+          cleanup.foreach(d => f.delete(new Path(d), true))
+      }
+      lost += 1
+    }
+    throw new IllegalStateException(
+      s"$op commit lost $maxAttempts races at $path — giving up")
+  }
 
   private def listDataFiles(f: FileSystem, dir: Path): Seq[Path] = {
     val it = f.listFiles(dir, true)

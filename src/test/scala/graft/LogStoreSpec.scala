@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.{LogStore, ManifestTable}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 
 /** Round-11 commit-publish abstraction: every store implementation must
@@ -14,6 +14,17 @@ class LogStoreSpec extends SparkSpec {
 
   private def hadoopFs(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Reports the first `k` publishes as lost races (as if a rival had
+    * won each), then publishes through the hard-link store — a
+    * deterministic stand-in for thread races. */
+  private final class LosingStore(k: Int) extends LogStore {
+    val publishes = new java.util.concurrent.atomic.AtomicInteger
+    override val name = s"losing-$k"
+    override def putIfAbsent(f: FileSystem, tmp: Path, dst: Path): Boolean =
+      publishes.incrementAndGet() > k &&
+        LogStore.HardLink.putIfAbsent(f, tmp, dst)
+  }
 
   test("each store: first putIfAbsent wins, second loses, destination bytes complete, staging cleaned") {
     for (store <- Seq(LogStore.HardLink, LogStore.Rename,
@@ -86,6 +97,54 @@ class LogStoreSpec extends SparkSpec {
         vs.foreach(v =>
           assert(ManifestTable.readVersion(spark, path, v).count() === v))
       }
+    }
+  }
+
+  test("commit seam, deterministic retries: k lost publishes below maxAttempts land once at prev+1; at maxAttempts the verb gives up and leaves no staging") {
+    val verbs = Seq[(String, String => Long)](
+      "addCheckConstraint" -> (p =>
+        ManifestTable.addCheckConstraint(spark, p, "id_ok", "id >= 0")),
+      "append" -> (p =>
+        ManifestTable.append(Seq((10L, "x")).toDF("id", "v"), p)),
+      "merge" -> (p => ManifestTable.merge(
+        Seq((1L, "y"), (11L, "z")).toDF("id", "v"), p, "id")),
+      "deleteWhereDV" -> (p =>
+        ManifestTable.deleteWhereDV(spark, p, col("id") === 2L, "id")))
+    val maxAttempts = 3 // every verb's default
+    for ((verb, run) <- verbs; k <- Seq(maxAttempts - 1, maxAttempts)) {
+      val path = java.nio.file.Files.createTempDirectory(
+        s"graft_seam_$verb").toString + "/t"
+      ManifestTable.write((1L to 4L).map(i => (i, s"r$i")).toDF("id", "v"), path)
+      // both index sidecars declared, so data verbs stage bloom + ndv
+      // dirs too — all of which a lost attempt must remove
+      ManifestTable.setBloomIndex(spark, path, Seq("id"), items = 1000L)
+      ManifestTable.setNdvStats(spark, path, Seq("id"))
+      val prev = ManifestTable.currentVersion(spark, path).get
+      val store = new LosingStore(k)
+      ManifestTable.withLogStore(store) {
+        if (k < maxAttempts)
+          assert(run(path) === prev + 1, s"$verb, $k losses")
+        else {
+          val e = intercept[IllegalStateException](run(path))
+          assert(e.getMessage.contains(s"lost $maxAttempts races"),
+            s"$verb: ${e.getMessage}")
+        }
+      }
+      val landed = if (k < maxAttempts) 1 else 0
+      assert(ManifestTable.versions(spark, path) ===
+        (1L to prev + landed).toSeq, s"$verb, $k losses")
+      assert(store.publishes.get === k + landed,
+        s"$verb: one publish per attempt")
+      // losers leave nothing: no tmp manifest (or its checksum) and no
+      // staging dir of another attempt — at most the winner's token
+      val names = new java.io.File(path).list().toSeq
+      assert(!names.exists(_.contains(".tmp")), s"$verb: tmp left: $names")
+      val tokens = names.collect {
+        case n if n.matches(s"(snap|dv|bloom|ndv)-${prev + 1}-.*") =>
+          n.split("-")(2)
+      }.distinct
+      assert(tokens.size <= landed,
+        s"$verb, $k losses: staging of lost attempts left behind: $names")
     }
   }
 }

@@ -853,12 +853,60 @@ class ManifestLogSpec extends SparkSpec {
     val em = intercept[IllegalStateException] {
       ManifestTable.merge(Seq((1L, "x")).toDF("id", "v"), path, "id") }
     assert(em.getMessage.contains("writer version 99"))
+    // the gate covers every verb that publishes a version — metadata
+    // verbs and restore included, not only the data writes
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    Seq[(String, () => Long)](
+      "addCheckConstraint" -> (() =>
+        ManifestTable.addCheckConstraint(spark, path, "id_pos", "id > 0")),
+      "addColumns" -> (() => ManifestTable.addColumns(spark, path,
+        StructType(Seq(StructField("w", LongType))))),
+      "renameColumn" -> (() =>
+        ManifestTable.renameColumn(spark, path, "v", "v2")),
+      "setColumnDefault" -> (() =>
+        ManifestTable.setColumnDefault(spark, path, "v", "'d'")),
+      "restore" -> (() => ManifestTable.restore(spark, path, 1L))
+    ).foreach { case (verb, run) =>
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("writer version 99"),
+        s"$verb must refuse a future-writer table: ${e.getMessage}")
+    }
+    assert(ManifestTable.versions(spark, path) === Seq(1L, 2L, 3L),
+      "a refused verb must not commit")
 
     // a higher minReader refuses resolution entirely
     forge(4L, 99, 99)
     val er = intercept[IllegalStateException] {
       ManifestTable.read(spark, path) }
     assert(er.getMessage.contains("reader version 99"))
+  }
+
+  test("empty-source conditional merge analyzes its clause expressions exactly like a non-empty one") {
+    val path = java.nio.file.Files.createTempDirectory("graft_log_empty_merge").toString + "/t"
+    ManifestTable.write(Seq((1L, "a")).toDF("id", "v"), path)
+    val nonEmpty = Seq((1L, "b"), (2L, "c")).toDF("id", "v")
+    val empty = nonEmpty.limit(0)
+    // a typo'd column in a WHEN MATCHED condition, and in a WHEN NOT
+    // MATCHED condition: the batch's emptiness must not decide whether
+    // the typo fails
+    Seq(
+      (src: org.apache.spark.sql.DataFrame) => ManifestTable.mergeConditional(
+        src, path, "id", whenMatchedUpdate = Some(col("no_such_col") > 0)),
+      (src: org.apache.spark.sql.DataFrame) => ManifestTable.mergeConditional(
+        src, path, "id", whenNotMatchedInsert = Some(col("no_such_col") > 0))
+    ).foreach { run =>
+      val full = intercept[Exception](run(nonEmpty))
+      val none = intercept[Exception](run(empty))
+      assert(full.isInstanceOf[org.apache.spark.sql.AnalysisException],
+        s"non-empty batch: ${full.getClass}: ${full.getMessage}")
+      assert(none.getClass === full.getClass,
+        s"empty batch raised ${none.getClass}, non-empty ${full.getClass}")
+    }
+    assert(ManifestTable.versions(spark, path) === Seq(1L),
+      "a merge with a bad clause must not commit")
+    // a well-formed empty merge still commits its (empty) version
+    assert(ManifestTable.mergeConditional(empty, path, "id",
+      whenMatchedUpdate = Some(col("v") =!= col("_b_v"))) === 2L)
   }
 
   test("OCC races across METADATA commit types: rename, constraint, generated, appends all serialize") {
