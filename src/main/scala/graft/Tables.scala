@@ -39,7 +39,7 @@ object Tables {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val st = fs.getFileStatus(p)
-      if (!st.isDirectory) st.getModificationTime * 31L + st.getLen
+      if (!st.isDirectory) sigValue(st.getModificationTime * 31L + st.getLen)
       else {
         // sorted by name: listStatus order is filesystem-dependent, and
         // an order-sensitive fold would re-infer spuriously on an
@@ -55,9 +55,12 @@ object Tables {
           sig = sig * 31L + k.getLen
           i += 1
         }
-        if (sig == -1L) -2L else sig // -1 is reserved for "unstattable"
+        sigValue(sig)
       }
     } catch { case scala.util.control.NonFatal(_) => -1L }
+
+  /** A computed signature, moved off the reserved -1 ("unstattable"). */
+  private[graft] def sigValue(sig: Long): Long = if (sig == -1L) -2L else sig
 
   /** Plain parquet scan. Filters/pruning push down via Catalyst.
     * Schema served from [[schemaCache]] after the first inference. */

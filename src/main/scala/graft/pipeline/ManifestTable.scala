@@ -2,8 +2,8 @@ package graft.pipeline
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import scala.util.control.NonFatal
 
 /** Minimal commit-log table protocol — the observable core of the
@@ -45,7 +45,12 @@ import scala.util.control.NonFatal
   * [[mergeConditional]] (clause resolution inside the OCC loop), and
   * merge-on-read DELETION VECTORS (`deleteVectors = true`): sparse
   * deletes commit a per-file deleted-key sidecar instead of rewriting
-  * data files; reads anti-join the DV; [[compact]] folds DVs away.
+  * data files; [[compact]] folds DVs away. Reads resolve the sidecars
+  * on the driver ([[dvEntries]]: explicit schema, an LRU keyed like
+  * the state cache) and anti-join them as a local relation on each
+  * row's `_metadata.file_name`, so Catalyst folds a query's key
+  * predicates into the vector side; a sidecar past the cache's row
+  * budget stays a distributed broadcast read.
   */
 object ManifestTable {
 
@@ -616,28 +621,6 @@ object ManifestTable {
     versions(spark, path).reverseIterator
       .find(v => commitTimestamp(spark, path, v) <= tsMillis)
 
-  /** Monotone commit timestamp (delta's in-commit-timestamps
-    * rationale): wall-clock now, clamped STRICTLY AFTER the previous
-    * version's recorded ts — so timestamp time travel, retention
-    * horizons, and history ordering stay correct even when racing
-    * writers carry skewed clocks (without the clamp, a behind-clock
-    * writer would record a commit "before" its predecessor and
-    * `TIMESTAMP AS OF` would silently skip it). The predecessor's ts
-    * comes from the LRU-cached resolved state (every commit site just
-    * resolved it anyway — `TableState.ts` mirrors the manifest `ts`
-    * field exactly, checkpoint fallback included), so no commit pays a
-    * fresh manifest read + JSON parse for one long; the raw read
-    * remains as the fallback for an unresolvable predecessor. No
-    * predecessor → plain now. */
-  private def commitTs(spark: SparkSession, path: String,
-                       version: Long): Long = {
-    val prev =
-      if (version <= 1L) 0L
-      else try resolveState(spark, path, version - 1).ts
-      catch { case NonFatal(_) => commitTimestamp(spark, path, version - 1) }
-    math.max(System.currentTimeMillis(), prev + 1)
-  }
-
   /** Wall-clock commit time recorded by a version (0 on pre-round-10
     * manifests, which carried no timestamp).
     */
@@ -656,20 +639,31 @@ object ManifestTable {
     * per-snapshot-root and unioned by name — partition inference is
     * only defined under a single base. EVERY read path must come
     * through here or [[readStateDf]] or drift on appended tables.
+    * `fileName` adds [[FileNameCol]], each row's data-file name, taken
+    * per scan before any union (the metadata column belongs to a file
+    * relation).
     */
   private def readFilesOf(spark: SparkSession, path: String,
                           schema: Option[StructType],
-                          rel: Seq[String]): DataFrame = {
+                          rel: Seq[String],
+                          fileName: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val roots = rel.map(_.split("/").head).distinct
     val partitioned = rel.exists(_.split("/").dropRight(1).exists(_.contains("=")))
-    def scan(base: String, files: Seq[String]): DataFrame = {
-      val reader = spark.read.option("basePath", base)
-      val paths = files.map(resolveRef(path, _))
-      schema match {
-        case Some(s) => reader.schema(s).parquet(paths: _*)
-        case None    => reader.parquet(paths: _*)
-      }
+    def scan(base: Option[String], paths: Seq[String]): DataFrame = {
+      val reader = base.fold(spark.read)(spark.read.option("basePath", _))
+      val df = schema.fold(reader)(reader.schema).parquet(paths: _*)
+      if (fileName) df.withColumn(FileNameCol, col("_metadata.file_name"))
+      else df
     }
+    // per-base scans unioned by name, back in the recorded column order
+    def union(scans: Seq[DataFrame]): DataFrame = {
+      val unioned = scans.reduce(_ unionByName _)
+      schema.fold(unioned)(s => unioned.select(
+        (s.fieldNames.toSeq ++ Seq(FileNameCol).filter(_ => fileName))
+          .map(col): _*))
+    }
+    val paths = rel.map(resolveRef(path, _))
     if (rel.exists(isExternalRef)) {
       // shallow-clone refs point OUTSIDE the table root, so no single
       // basePath covers them. Flat refs scan directly (partition
@@ -684,35 +678,14 @@ object ManifestTable {
         val i = segs.indexWhere(_.contains("="))
         if (i < 0) "" else segs.take(i).mkString("/")
       }
-      val paths = rel.map(resolveRef(path, _))
-      if (!paths.exists(p => baseOf(p).nonEmpty)) {
-        schema match {
-          case Some(s) => spark.read.schema(s).parquet(paths: _*)
-          case None    => spark.read.parquet(paths: _*)
-        }
-      } else {
-        val byBase = paths.groupBy(baseOf).toSeq.sortBy(_._1)
-        val unioned = byBase.map { case (base, fl) =>
-          val reader =
-            if (base.isEmpty) spark.read else spark.read.option("basePath", base)
-          schema match {
-            case Some(s) => reader.schema(s).parquet(fl: _*)
-            case None    => reader.parquet(fl: _*)
-          }
-        }.reduce(_ unionByName _)
-        schema.map(s => unioned.select(s.fieldNames.map(org.apache.spark.sql
-          .functions.col).toSeq: _*)).getOrElse(unioned)
-      }
+      if (!paths.exists(p => baseOf(p).nonEmpty)) scan(None, paths)
+      else union(paths.groupBy(baseOf).toSeq.sortBy(_._1).map {
+        case (base, fl) => scan(Some(base).filter(_.nonEmpty), fl) })
     }
-    else if (roots.length == 1) scan(s"$path/${roots.head}", rel)
-    else if (!partitioned) scan(path, rel)
-    else {
-      val byRoot = rel.groupBy(_.split("/").head).toSeq.sortBy(_._1)
-      val unioned = byRoot.map { case (root, fl) => scan(s"$path/$root", fl) }
-        .reduce(_ unionByName _)
-      schema.map(s => unioned.select(s.fieldNames.map(org.apache.spark.sql
-        .functions.col).toSeq: _*)).getOrElse(unioned)
-    }
+    else if (roots.length == 1) scan(Some(s"$path/${roots.head}"), paths)
+    else if (!partitioned) scan(Some(path), paths)
+    else union(rel.groupBy(_.split("/").head).toSeq.sortBy(_._1).map {
+      case (root, fl) => scan(Some(s"$path/$root"), fl.map(resolveRef(path, _))) })
   }
 
   /** Mapping-aware file scan: on a column-mapped table the files hold
@@ -724,49 +697,206 @@ object ManifestTable {
     */
   private def readFilesMapped(spark: SparkSession, path: String,
                               st: TableState,
-                              files: Seq[String]): DataFrame =
-    if (!st.mapped) readFilesOf(spark, path, st.schema, files)
+                              files: Seq[String],
+                              fileName: Boolean = false): DataFrame =
+    if (!st.mapped) readFilesOf(spark, path, st.schema, files, fileName)
     else {
       import org.apache.spark.sql.functions.col
       val logical = st.schema.getOrElse(throw new IllegalStateException(
         s"column-mapped table $path has no committed schema"))
       val physSchema = StructType(
         logical.fields.map(f => f.copy(name = st.phys(f.name))))
-      readFilesOf(spark, path, Some(physSchema), files)
+      readFilesOf(spark, path, Some(physSchema), files, fileName)
         .select(logical.fields.map(f =>
-          col(st.phys(f.name)).as(f.name)).toSeq: _*)
+          col(st.phys(f.name)).as(f.name)).toSeq ++
+          Seq(col(FileNameCol)).filter(_ => fileName): _*)
     }
 
   /** State-aware read: the resolved file list, with the live deletion
-    * vectors anti-joined away. DV match is (file basename, key) — part
-    * file basenames carry a writer UUID, so they identify a physical
-    * file for the table's lifetime; the DV side is broadcast (sparse
-    * deletes are small by contract). Null-keyed base rows never match
-    * a DV entry (SQL join semantics) — they are never deleted.
+    * vectors anti-joined away (see [[liveRows]]).
     */
   private def readStateDf(spark: SparkSession, path: String,
-                          st: TableState): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at, input_file_name, split}
-    val base = readFilesMapped(spark, path, st, st.files)
-    if (st.dvFiles.isEmpty) base
-    else {
-      val dv = spark.read.parquet(st.dvFiles.map(resolveRef(path, _)): _*)
-      // input_file_name is non-deterministic: project it to a column
-      // BEFORE the join (a join condition must be deterministic)
-      val withF = base.withColumn("_graft_dv_f",
-        element_at(split(input_file_name(), "/"), -1))
-      // dvKey is recorded PHYSICAL (rename-safe; composite keys
-      // comma-joined); the base frame is logical, so join under the
-      // keys' current logical names — one conjunct per key column
-      val dvKeys = st.dvKey.get.split(",").toSeq
-      val keyConds = dvKeys.zip(dvKeyColNames(dvKeys.size))
-        .map { case (k, n) => withF(st.logical(k)) === dv(n) }
-      withF.join(broadcast(dv),
-        keyConds.foldLeft(
-          withF("_graft_dv_f") === dv("_graft_dv_file"))(_ && _),
-        "left_anti")
-        .drop("_graft_dv_f")
+                          st: TableState): DataFrame =
+    if (st.dvFiles.isEmpty) readFilesMapped(spark, path, st, st.files)
+    else liveRows(spark, path, st).drop(FileNameCol)
+
+  // ------------------------------------------------------------------
+  // Deletion vectors, resolved on the driver
+  // ------------------------------------------------------------------
+
+  /** Each scanned row's data-file name, from Spark's `_metadata.file_name`
+    * — the URL-encoded basename, the same string `input_file_name`'s
+    * last segment gives and the form every sidecar records. */
+  private val FileNameCol = "_graft_dv_f"
+
+  /** Row budget of the driver-side deletion-vector cache, and the size
+    * past which a read's vectors stay distributed. Sparse-delete
+    * sidecars hold a handful of rows each, so the live vectors of many
+    * tables fit in a few MB of driver heap; a bulk sidecar past the
+    * budget is read by Spark as a broadcast, as it always was. */
+  private val DvCacheRows: Long = 1L << 17
+
+  /** A cached sidecar. Identity is its path plus mtime/len, as
+    * [[CacheKey]] does for states, so a table deleted and re-created at
+    * the same path misses; the key schema is part of it because the
+    * rows are decoded under the table's key types. */
+  private final case class DvCacheKey(file: String, sig: Long,
+                                      schema: StructType)
+  /** A sidecar's row count, and its rows when it fits the budget. */
+  private final case class DvRows(count: Long, rows: Option[Array[Row]])
+  /** Loaded vector entries: the sidecar schema and the rows held on the
+    * driver (Left), or a distributed read of the sidecars (Right). */
+  private type DvSide = Either[(StructType, Seq[Row]), DataFrame]
+  private val dvCache =
+    new java.util.LinkedHashMap[DvCacheKey, DvRows](16, 0.75f, true)
+  private var dvCacheHeld = 0L // rows held by dvCache, guarded by it
+  private def dvCacheGet(k: DvCacheKey): Option[DvRows] =
+    dvCache.synchronized(Option(dvCache.get(k)))
+  private def dvCachePut(k: DvCacheKey, e: DvRows): Unit =
+    dvCache.synchronized {
+      def held(d: DvRows): Long = d.rows.fold(0L)(_.length.toLong)
+      Option(dvCache.put(k, e)).foreach(old => dvCacheHeld -= held(old))
+      dvCacheHeld += held(e)
+      // access order: the eldest entries evict first
+      val it = dvCache.values().iterator()
+      while ((dvCacheHeld > DvCacheRows || dvCache.size > 4096) && it.hasNext) {
+        dvCacheHeld -= held(it.next())
+        it.remove()
+      }
     }
+
+  /** Explicit sidecar schema of a vector keyed on the physical `keys`:
+    * the file name, then one column per key typed from the recorded
+    * table schema. None on a table without one. */
+  private def dvSchema(st: TableState, keys: Seq[String]): Option[StructType] =
+    st.schema.flatMap { s =>
+      val types = keys.map(k => s.fields.find(_.name == st.logical(k)))
+      if (types.exists(_.isEmpty)) None
+      else Some(StructType(
+        StructField("_graft_dv_file", StringType) +:
+          dvKeyColNames(keys.size).zip(types.flatten).map { case (n, fd) =>
+            StructField(n, fd.dataType) }))
+    }
+
+  /** The deletion-vector loader, the one way any path reads sidecars:
+    * the entries of `sidecars` (a vector keyed on the comma-joined
+    * physical `dvKey`). Left — every sidecar fits the row budget: the
+    * rows come from the LRU, and the misses are read in ONE
+    * explicit-schema job. Right — some sidecar (or the sum) is past the
+    * budget, or the table records no schema: the distributed read. The
+    * choice depends only on the sidecars' own row counts (parquet
+    * footers, read once per sidecar).
+    */
+  private def dvEntries(spark: SparkSession, path: String, st: TableState,
+                        sidecars: Seq[String], dvKey: String): DvSide = {
+    val paths = sidecars.map(resolveRef(path, _))
+    dvSchema(st, dvKey.split(",").toSeq) match {
+      case None => Right(spark.read.parquet(paths: _*))
+      case Some(schema) =>
+        val f = fs(spark, path)
+        val stats = paths.map(p => f.getFileStatus(new Path(p)))
+        val keys = stats.map(s => DvCacheKey(s.getPath.toString,
+          s.getModificationTime * 31L + s.getLen, schema))
+        val hits = keys.map(dvCacheGet)
+        val counts = stats.zip(hits).map { case (s, hit) =>
+          hit.fold(parquetRowCount(spark, s))(_.count) }
+        if (counts.sum > DvCacheRows) {
+          keys.zip(counts).zip(hits).foreach { case ((k, n), hit) =>
+            if (hit.isEmpty && n > DvCacheRows) dvCachePut(k, DvRows(n, None))
+          }
+          Right(spark.read.schema(schema).parquet(paths: _*))
+        } else {
+          val missing = hits.indices.filter(hits(_).isEmpty)
+          val loaded = missing.zip(loadSidecars(spark, schema, missing.map(paths))).toMap
+          loaded.foreach { case (i, rows) =>
+            dvCachePut(keys(i), DvRows(counts(i), Some(rows))) }
+          Left((schema, hits.indices.flatMap(i =>
+            hits(i).flatMap(_.rows).getOrElse(loaded(i)).toSeq)))
+        }
+    }
+  }
+
+  /** Rows of each of `sidecars` (none → no job), read in ONE job under
+    * the explicit `schema`; equal file names share one string (a
+    * sidecar repeats its data file's name once per killed row). */
+  private def loadSidecars(spark: SparkSession, schema: StructType,
+                           sidecars: Seq[String]): Seq[Array[Row]] =
+    if (sidecars.isEmpty) Nil
+    else {
+      import org.apache.spark.sql.functions.lit
+      val byIdx = sidecars.zipWithIndex.map { case (p, i) =>
+        spark.read.schema(schema).parquet(p).withColumn("_graft_dv_i", lit(i))
+      }.reduce(_ unionByName _).collect().groupBy(_.getInt(schema.size))
+      val names = scala.collection.mutable.HashMap.empty[String, String]
+      sidecars.indices.map(i => byIdx.getOrElse(i, Array.empty[Row]).map { r =>
+        val n = r.getString(0)
+        Row.fromSeq(names.getOrElseUpdate(n, n) +:
+          (1 until schema.size).map(r.get))
+      })
+    }
+
+  private def parquetRowCount(spark: SparkSession,
+                              s: org.apache.hadoop.fs.FileStatus): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s,
+        spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  /** A data-file ref's name as a scan reports it in [[FileNameCol]]. */
+  private def dataFileName(path: String, ref: String): String =
+    new Path(resolveRef(path, ref)).toUri.getRawPath.split('/').last
+
+  /** `base`, carrying each row's data-file name in [[FileNameCol]],
+    * joined `how` (`left_anti` drops the killed rows, `left_semi` keeps
+    * only them) against `entries` of a vector keyed on the comma-joined
+    * physical `dvKey`. Driver-resolved entries are first cut to the
+    * files of `st` and join as a LOCAL relation: Catalyst folds the
+    * query's key predicates into it, so a point lookup whose key no
+    * vector names plans no join at all, and none is planned when no
+    * entry names a scanned file. A distributed read joins as a
+    * broadcast. Match is (file name, key) — part-file names carry a
+    * writer UUID, so they identify a physical file for the table's
+    * lifetime. Null-keyed base rows never match an entry (SQL join
+    * semantics), so they are never deleted.
+    */
+  private def dvJoin(spark: SparkSession, path: String, st: TableState,
+                     base: DataFrame, entries: DvSide,
+                     dvKey: String, how: String): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    import scala.jdk.CollectionConverters._
+    val dv = entries match {
+      case Right(df) => Some(df)
+      case Left((schema, rows)) =>
+        val names = st.files.map(dataFileName(path, _)).toSet
+        val mine = rows.filter(r => names(r.getString(0)))
+        if (mine.isEmpty) None
+        else Some(spark.createDataFrame(mine.asJava, schema))
+    }
+    dv match {
+      case None => if (how == "left_anti") base else base.limit(0)
+      case Some(d) =>
+        // dvKey is recorded PHYSICAL (rename-safe; composite keys
+        // comma-joined); the base frame is logical, so join under the
+        // keys' current logical names — one conjunct per key column
+        val keys = dvKey.split(",").toSeq
+        val keyConds = keys.zip(dvKeyColNames(keys.size))
+          .map { case (k, n) => base(st.logical(k)) === d(n) }
+        base.join(broadcast(d),
+          keyConds.foldLeft(base(FileNameCol) === d("_graft_dv_file"))(_ && _),
+          how)
+    }
+  }
+
+  /** `st`'s files with its live vectors anti-joined away, each row
+    * keeping its data-file name in [[FileNameCol]]. */
+  private def liveRows(spark: SparkSession, path: String,
+                       st: TableState): DataFrame = {
+    val base = readFilesMapped(spark, path, st, st.files, fileName = true)
+    if (st.dvFiles.isEmpty) base
+    else dvJoin(spark, path, st, base,
+      dvEntries(spark, path, st, st.dvFiles, st.dvKey.get), st.dvKey.get,
+      "left_anti")
   }
 
   /** The data files a committed version resolves to (table-relative). */
@@ -828,7 +958,27 @@ object ManifestTable {
     */
   private def pruneFilesByRange(st: TableState, column: String,
                                 prunableType: Boolean,
-                                lo: Double, hi: Double): Seq[String] = {
+                                lo: Double, hi: Double): Seq[String] =
+    pruneFiles(st, column, prunableType)((min, max) => max >= lo && min <= hi)
+
+  /** Files of `st` whose evidence on `column` can hold at least one of
+    * `points` (an IN list): one binary search per file. */
+  private def pruneFilesByPoints(st: TableState, column: String,
+                                 points: Seq[Double]): Seq[String] = {
+    val ps = points.sorted.toArray
+    pruneFiles(st, column, prunableType = true) { (min, max) =>
+      val i = java.util.Arrays.binarySearch(ps, min)
+      val first = if (i >= 0) i else -i - 1
+      first < ps.length && ps(first) <= max
+    }
+  }
+
+  /** Files of `st` whose [min, max] evidence on `column` (a partition
+    * value reads as [v, v]) `mayHold` accepts; files without complete
+    * evidence are kept. */
+  private def pruneFiles(st: TableState, column: String,
+                         prunableType: Boolean)
+                        (mayHold: (Double, Double) => Boolean): Seq[String] =
     if (!prunableType) st.files
     else {
       // stats (and partition dirs) carry PHYSICAL names; `column` is
@@ -838,18 +988,17 @@ object ManifestTable {
       st.files.filter { file =>
         val pOk = if (!isPart) true
         else partitionValuesOf(file).get(physCol) match {
-          case Some(v) => v.toDoubleOption.forall(d => d >= lo && d <= hi)
+          case Some(v) => v.toDoubleOption.forall(d => mayHold(d, d))
           case None    => true
         }
         val sOk = st.stats.get(file).flatMap(_.get(physCol)) match {
           case Some(s) if s.complete && s.typ != "string" =>
-            s.max.toString.toDouble >= lo && s.min.toString.toDouble <= hi
+            mayHold(s.min.toString.toDouble, s.max.toString.toDouble)
           case _ => true
         }
         pOk && sOk
       }
     }
-  }
 
   private def prunableColumn(st: TableState, column: String): Boolean =
     st.schema match {
@@ -953,8 +1102,8 @@ object ManifestTable {
 
   /** Per-file footer stats for a whole STAGED file set, keyed by
     * table-relative ref. The footer reads are independent driver-side
-    * I/O (one open + footer parse per file), so they fan out across a
-    * bounded thread pool instead of running serially (optimization
+    * I/O (one open + footer parse per file), so they fan out across the
+    * shared bounded [[footerPool]] instead of running serially (optimization
     * round 20) — a few ms per local commit, and on a remote object
     * store a many-file rewrite's O(files) round-trip CHAIN becomes
     * O(files / pool). Values identical to the serial loop. */
@@ -966,26 +1115,38 @@ object ManifestTable {
       Map(relativize(new Path(path), staged.head) ->
         footerStats(spark, staged.head, cols))
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, staged.size))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks: Seq[java.util.concurrent.Callable[(String, Map[String, ColStats])]] =
-          staged.map { p =>
-            () => relativize(new Path(path), p) -> footerStats(spark, p, cols)
-          }
-        pool.invokeAll(tasks.asJava).asScala.map { f =>
-          // surface the footer reader's own exception, not the pool's
-          // ExecutionException wrapper — same failure type as the
-          // single-file path
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
-        }.toMap
-      } finally pool.shutdown()
+      import scala.jdk.CollectionConverters._
+      val tasks: Seq[java.util.concurrent.Callable[(String, Map[String, ColStats])]] =
+        staged.map { p =>
+          () => relativize(new Path(path), p) -> footerStats(spark, p, cols)
+        }
+      footerPool.invokeAll(tasks.asJava).asScala.map { f =>
+        // surface the footer reader's own exception, not the pool's
+        // ExecutionException wrapper — same failure type as the
+        // single-file path
+        try f.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            throw Option(e.getCause).getOrElse(e)
+        }
+      }.toMap
     }
+
+  /** The footer-read pool every commit shares: created on first use, at
+    * most 8 daemon threads, each retired after 30 s idle — no per-commit
+    * pool churn, and nothing left to keep the JVM alive. */
+  private lazy val footerPool: java.util.concurrent.ExecutorService = {
+    val pool = new java.util.concurrent.ThreadPoolExecutor(8, 8, 30L,
+      java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-footer-stats")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
 
   private def minOf(typ: String, a: Any, b: Any): Any = typ match {
     case "long"   => math.min(a.asInstanceOf[Long], b.asInstanceOf[Long])
@@ -1571,7 +1732,15 @@ object ManifestTable {
       s"$path is already a graft table — CONVERT only adopts plain dirs")
     val files = listDataFiles(f, new Path(path))
     require(files.nonEmpty, s"no parquet files under $path to convert")
-    val adds = files.map(p => f.makeQualified(p).toUri.toString).sorted
+    // a ref is a path string as Spark and Hadoop parse one: a name that
+    // URL-encodes (space, %) records its decoded Path form, since the
+    // encoded URI string would name another file; all others keep the
+    // URI form
+    val adds = files.map { p =>
+      val q = f.makeQualified(p)
+      val uri = q.toUri.toString
+      if (uri.contains('%')) q.toString else uri
+    }.sorted
     val schema = spark.read.parquet(path).schema
     val json = deltaJson(1L, System.currentTimeMillis(), adds,
       schema = Some(schema), op = Some("CONVERT"))
@@ -5007,17 +5176,29 @@ object ManifestTable {
     }
   }
 
+  /** A NECESSARY condition of a predicate on one column: the value lies
+    * in [lo, hi] and, when `points` is set, equals one of them. */
+  private[graft] final case class ColBound(lo: Double, hi: Double,
+                                           points: Option[Seq[Double]] = None)
+
   /** Per-column numeric ranges that are NECESSARY conditions of `cond`
-    * firing — extracted from its TOP-LEVEL conjuncts only (an OR
-    * contributes nothing; soundness over completeness, like every
-    * prune in this file). `a > 5 && a < 9 && f(b)` → a ∈ [5, 9]; the
-    * exclusive/inclusive distinction is dropped because range pruning
-    * keeps any file whose [min, max] INTERSECTS the interval. Feeds
-    * [[rewriteWhere]]'s manifest-stats pre-prune, so a predicate
+    * (see [[condPrune]]).
+    */
+  private[graft] def condBounds(cond: Column): Map[String, (Double, Double)] =
+    condPrune(cond).map { case (c, b) => c -> ((b.lo, b.hi)) }
+
+  /** Per-column necessary conditions of `cond` — extracted from its
+    * TOP-LEVEL conjuncts only (an OR contributes nothing; soundness over
+    * completeness, like every prune in this file). `a > 5 && a < 9 &&
+    * f(b)` → a ∈ [5, 9]; the exclusive/inclusive distinction is dropped
+    * because range pruning keeps any file whose [min, max] INTERSECTS
+    * the interval. `a IN (3, 7, null)` → a ∈ {3, 7}: null literals never
+    * make IN true, and an IN with any non-numeric (or NaN) literal
+    * contributes nothing. Feeds [[condCandidates]], so a predicate
     * UPDATE/DELETE over a clustered key skips whole files driver-side
     * before the detection scan reads a single row group.
     */
-  private[graft] def condBounds(cond: Column): Map[String, (Double, Double)] = {
+  private[graft] def condPrune(cond: Column): Map[String, ColBound] = {
     // Spark 4 Columns are ColumnNode graphs (comparisons arrive as
     // UnresolvedFunction(">=", ...), not typed catalyst nodes); the
     // node API is private[sql], so the shim flattens the conjuncts
@@ -5034,12 +5215,18 @@ object ManifestTable {
         case v: Float  => v.toDouble
         case v: Double => v
       }
+    // the IN list's points: None when any literal is unusable
+    def points(lits: Seq[Option[Either[String, Any]]]): Option[Seq[Double]] = {
+      val nonNull = lits.filterNot(_.contains(Right(null)))
+      val ps = nonNull.flatMap(num).filterNot(_.isNaN)
+      if (ps.isEmpty || ps.size != nonNull.size) None else Some(ps.distinct)
+    }
     val neg = Double.NegativeInfinity
     val pos = Double.PositiveInfinity
-    conjuncts.foldLeft(Map.empty[String, (Double, Double)]) { (acc, c) =>
-      val hit: Option[(String, Double, Double)] = c match {
-        case (fn, Seq(x, y)) =>
-          fn match {
+    conjuncts.foldLeft(Map.empty[String, ColBound]) { (acc, c) =>
+      val hit: Option[(String, ColBound)] = c match {
+        case (fn, Seq(x, y)) if fn != "in" =>
+          (fn match {
             case ">" | ">=" =>
               (for (n <- name(x); v <- num(y)) yield (n, v, pos))
                 .orElse(for (n <- name(y); v <- num(x)) yield (n, neg, v))
@@ -5050,15 +5237,37 @@ object ManifestTable {
               (for (n <- name(x); v <- num(y)) yield (n, v, v))
                 .orElse(for (n <- name(y); v <- num(x)) yield (n, v, v))
             case _ => None
-          }
+          }).map { case (n, lo, hi) => n -> ColBound(lo, hi) }
+        case ("in", x +: lits) =>
+          for (n <- name(x); ps <- points(lits))
+            yield n -> ColBound(ps.min, ps.max, Some(ps))
         case _ => None
       }
-      hit.fold(acc) { case (n, lo, hi) =>
-        val (plo, phi) = acc.getOrElse(n, (neg, pos))
-        acc + (n -> (math.max(plo, lo), math.min(phi, hi)))
+      hit.fold(acc) { case (n, b) =>
+        val prev = acc.getOrElse(n, ColBound(neg, pos))
+        val ps = (prev.points, b.points) match {
+          case (Some(a), Some(o)) => Some(a.filter(o.contains))
+          case (a, o)             => a.orElse(o)
+        }
+        acc + (n -> ColBound(math.max(prev.lo, b.lo), math.min(prev.hi, b.hi), ps))
       }
     }
   }
+
+  /** The files of `st` that may hold a row firing `cond`: the
+    * manifest-stats pre-prune against [[condPrune]]'s necessary
+    * conditions (sound: a file whose partition value or stats exclude a
+    * necessary condition holds no matching row). */
+  private[graft] def condCandidates(st: TableState, cond: Column): Seq[String] =
+    condPrune(cond).foldLeft(st.files) { case (files, (c, b)) =>
+      if (files.isEmpty || !prunableColumn(st, c)) files
+      else b.points match {
+        case None => pruneFilesByRange(st.copy(files = files), c,
+          prunableType = true, b.lo, b.hi)
+        case Some(ps) => pruneFilesByPoints(st.copy(files = files), c,
+          ps.filter(p => p >= b.lo && p <= b.hi))
+      }
+    }
 
   /** Merge-on-read predicate DELETE (`DELETE ... WHERE` with deletion
     * vectors): matching rows are killed by a DV SIDECAR — ZERO data
@@ -5081,7 +5290,7 @@ object ManifestTable {
                     tag: Option[String] = None,
                     tagHorizon: Int = DefaultTagHorizon,
                     sparseRowLimit: Long = DefaultSparseRowLimit): Long = {
-    import org.apache.spark.sql.functions.{col, element_at, input_file_name, split}
+    import org.apache.spark.sql.functions.col
     tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
       transact(spark, path, "DV-delete", maxAttempts,
           Some(s"no committed version at $path")) { t =>
@@ -5094,32 +5303,12 @@ object ManifestTable {
             s"table $path has live deletion vectors keyed on " +
               s"'${st.logical(dk)}' — a second DV key would corrupt " +
               "the read-side anti-join"))
-        val candidates = condBounds(cond).foldLeft(st.files) {
-          case (files, (c, (lo, hi))) =>
-            if (files.isEmpty || !prunableColumn(st, c)) files
-            else pruneFilesByRange(st.copy(files = files), c,
-              prunableType = true, lo, hi)
-        }
+        val candidates = condCandidates(st, cond)
         if (candidates.isEmpty) Done(t.base)
         else {
           // DV-aware matching scan (already-deleted rows never re-enter
-          // a sidecar), emitting (file basename, key) pairs
-          // DISTRIBUTIVELY. The file name is projected BEFORE any join
-          // (input_file_name is task-scoped — the same discipline as
-          // readStateDf's own DV anti-join).
-          val base = readFilesMapped(spark, path, st, candidates)
-            .withColumn("_graft_dv_file",
-              element_at(split(input_file_name(), "/"), -1))
-          val alive =
-            if (st.dvFiles.isEmpty) base
-            else {
-              import org.apache.spark.sql.functions.broadcast
-              val dv = spark.read
-                .parquet(st.dvFiles.map(resolveRef(path, _)): _*)
-              base.join(broadcast(dv),
-                base("_graft_dv_file") === dv("_graft_dv_file") &&
-                  base(key) === dv("_graft_dv_key"), "left_anti")
-            }
+          // a sidecar), emitting (file name, key) pairs DISTRIBUTIVELY
+          val alive = liveRows(spark, path, st.copy(files = candidates))
           // the emptiness check, the sparse-contract guard, and the
           // sidecar write all read ONE cached frame — the pruned
           // detection scan runs once (a nondeterministic or
@@ -5127,7 +5316,8 @@ object ManifestTable {
           // that diverges from the emptiness check; mirrors
           // updateWhereDV's cached pattern)
           val pairs = alive.filter(cond)
-            .select(col("_graft_dv_file"), col(key).as("_graft_dv_key"))
+            .select(col(FileNameCol).as("_graft_dv_file"),
+              col(key).as("_graft_dv_key"))
             .dropDuplicates("_graft_dv_file", "_graft_dv_key")
             .cache()
           try {
@@ -5174,7 +5364,7 @@ object ManifestTable {
                     maxAttempts: Int = 3, tag: Option[String] = None,
                     tagHorizon: Int = DefaultTagHorizon,
                     sparseRowLimit: Long = DefaultSparseRowLimit): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at, input_file_name, split, when}
+    import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
       transact(spark, path, "MoR-update", maxAttempts,
@@ -5200,30 +5390,13 @@ object ManifestTable {
         // partitionBy, so every new image lands in its partition home
         // (including rows a SET moves ACROSS partitions)
         val partCols = partitionColsOf(st.files)
-        val candidates = condBounds(cond).foldLeft(st.files) {
-          case (files, (c, (lo, hi))) =>
-            if (files.isEmpty || !prunableColumn(st, c)) files
-            else pruneFilesByRange(st.copy(files = files), c,
-              prunableType = true, lo, hi)
-        }
+        val candidates = condCandidates(st, cond)
         if (candidates.isEmpty) Done(t.base)
         else {
           val idSchema = st.schema.map(sc => StructType(sc.fields :+
             org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-          val base = readFilesMapped(spark, path,
-              st.copy(schema = if (st.rowTracking) idSchema else st.schema),
-              candidates)
-            .withColumn("_graft_dv_file",
-              element_at(split(input_file_name(), "/"), -1))
-          val alive =
-            if (st.dvFiles.isEmpty) base
-            else {
-              val dv = spark.read
-                .parquet(st.dvFiles.map(resolveRef(path, _)): _*)
-              base.join(broadcast(dv),
-                base("_graft_dv_file") === dv("_graft_dv_file") &&
-                  base(key) === dv("_graft_dv_key"), "left_anti")
-            }
+          val alive = liveRows(spark, path, st.copy(files = candidates,
+            schema = if (st.rowTracking) idSchema else st.schema))
           val matching = alive.filter(cond)
           // the DV pairs (old images to kill) and the new images come
           // from ONE cached matching frame — the scan runs once
@@ -5241,14 +5414,15 @@ object ManifestTable {
                 maxAttempts = maxAttempts, tag = tag, tagHorizon = tagHorizon))
             } else {
               val pairs = cached
-                .select(col("_graft_dv_file"), col(key).as("_graft_dv_key"))
+                .select(col(FileNameCol).as("_graft_dv_file"),
+                  col(key).as("_graft_dv_key"))
                 .dropDuplicates("_graft_dv_file", "_graft_dv_key")
               // SET semantics as in updateWhere: stage all RHS against the
               // OLD row — BEFORE generated columns strip, so a RHS may
               // reference them — then overwrite (cond is TRUE on every
               // cached row, so no per-row guard is needed); generated
               // columns recompute from the updated sources
-              val stagedSet = set.foldLeft(cached.drop("_graft_dv_file")) {
+              val stagedSet = set.foldLeft(cached.drop(FileNameCol)) {
                 case (d, (c, e)) =>
                   d.withColumn(s"_graft_set_$c", e.cast(schema(c).dataType))
               }
@@ -5298,7 +5472,7 @@ object ManifestTable {
   /** Shared CoW engine for the keyless row-level verbs: each attempt
     * detects touched files, rewrites them via `transform` and commits
     * the adds/removes. Detection first PRE-PRUNES the candidate files with
-    * the manifest's per-file stats against [[condBounds]]'s necessary
+    * the manifest's per-file stats against [[condPrune]]'s necessary
     * ranges (sound: a file whose stats exclude a necessary condition
     * holds no matching row), then runs ONE filter-pushed name-only scan
     * over the survivors. Row tracking carries ids verbatim through the
@@ -5321,12 +5495,7 @@ object ManifestTable {
       // 1a) manifest-stats pre-prune: necessary ranges from the cond's
       // conjuncts against per-file min/max (and partition values) —
       // whole files skip driver-side before any scan
-      val candidates = condBounds(cond).foldLeft(st.files) {
-        case (files, (c, (lo, hi))) =>
-          if (files.isEmpty || !prunableColumn(st, c)) files
-          else pruneFilesByRange(st.copy(files = files), c,
-            prunableType = true, lo, hi)
-      }
+      val candidates = condCandidates(st, cond)
       // 1b) touched-file detection: filter-pushed scan over the
       // survivors, names only. The filter reaches the parquet scan, so
       // row-group stats prune I/O; only O(matching files) names return.
@@ -6085,24 +6254,20 @@ object ManifestTable {
   private def dvKilledRows(spark: SparkSession, path: String,
                            prev: TableState, dvAdds: Seq[String],
                            keyCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at, input_file_name, split}
-    val dvNew = spark.read.parquet(dvAdds.map(resolveRef(path, _)): _*)
-    val bases = dvNew.select(col("_graft_dv_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val affected = prev.files.filter(f => bases(f.split("/").last))
-    val withF = readStateDf(spark, path, prev.copy(files = affected))
-      .withColumn("_graft_dv_f",
-        element_at(split(input_file_name(), "/"), -1))
+    import org.apache.spark.sql.functions.col
     // keyCol is the log entry's dvKey — comma-joined physicals for a
     // composite-key merge, one sidecar column per key
-    val dvKeys = keyCol.split(",").toSeq
-    val keyConds = dvKeys.zip(dvKeyColNames(dvKeys.size))
-      .map { case (k, n) => col(prev.logical(k)) === dvNew(n) }
-    withF.join(broadcast(dvNew),
-        keyConds.foldLeft(
-          withF("_graft_dv_f") === dvNew("_graft_dv_file"))(_ && _),
-        "left_semi")
-      .drop("_graft_dv_f")
+    val added = dvEntries(spark, path, prev, dvAdds, keyCol)
+    val names: Set[String] = added match {
+      case Left((_, rows)) => rows.map(_.getString(0)).toSet
+      case Right(dv) => dv.select(col("_graft_dv_file")).distinct()
+        .collect().map(_.getString(0)).toSet
+    }
+    val affected = prev.copy(
+      files = prev.files.filter(f => names(dataFileName(path, f))))
+    dvJoin(spark, path, affected, liveRows(spark, path, affected), added,
+      keyCol, "left_semi")
+      .drop(FileNameCol)
   }
 
   /** Row-level changes committed BY `version` (the per-version unit the
@@ -6772,8 +6937,17 @@ object ManifestTable {
                                token: String) {
     /** The version this attempt publishes. */
     def version: Long = base + 1L
-    /** Commit timestamp (see [[commitTs]]) — read once per entry. */
-    def ts: Long = commitTs(spark, path, version)
+    /** Monotone commit timestamp (delta's in-commit-timestamps
+      * rationale): wall-clock now, clamped STRICTLY AFTER the base
+      * version's recorded ts — so timestamp time travel, retention
+      * horizons, and history ordering stay correct even when racing
+      * writers carry skewed clocks (without the clamp, a behind-clock
+      * writer would record a commit "before" its predecessor and
+      * `TIMESTAMP AS OF` would silently skip it). The base's ts is the
+      * one its resolved state mirrors (checkpoint fallback included;
+      * 0 for the empty version), so no commit pays a manifest read or
+      * stat for it. Read once per entry. */
+    def ts: Long = math.max(System.currentTimeMillis(), st.ts + 1)
     /** This attempt's `<kind>-<version>-<token>` dir (snap, dv, bloom,
       * ndv) — unique per attempt, so a loser's staging never collides. */
     def dir(kind: String): String = s"$path/$kind-$version-$token"

@@ -66,6 +66,22 @@ class StatsSchemaSpec extends SparkSpec {
     assert(st3.stats.isEmpty, "cleared declaration must stop auto-stats")
   }
 
+  test("multi-file commits read footer stats on one shared pool of at most 8 daemon threads") {
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName == "graft-footer-stats").toSeq
+    val path = java.nio.file.Files.createTempDirectory("graft_ss_pool").toString + "/t"
+    (1 to 3).foreach { i =>
+      val df = spark.range(i * 1000L, i * 1000L + 500).toDF("id").repartition(12)
+      if (i == 1) ManifestTable.write(df, path, statsCols = Seq("id"))
+      else ManifestTable.append(df, path, statsCols = Seq("id"))
+    }
+    val st = ManifestTable.resolveState(spark, path, 3L)
+    assert(st.files.size === 36 && st.files.forall(f => st.stats(f).contains("id")))
+    val threads = poolThreads
+    assert(threads.nonEmpty && threads.size <= 8, s"${threads.size} pool threads")
+    assert(threads.forall(_.isDaemon), "the footer pool must not keep the JVM alive")
+  }
+
   test("SQL: ALTER TABLE SET STATS COLUMNS declares; clone carries; history classifies") {
     val root = java.nio.file.Files.createTempDirectory("graft_ss3").toString
     val path = s"$root/t"

@@ -123,4 +123,10 @@ class TablesAdaptiveSpec extends SparkSpec {
   test("schema cache: an unstattable path signs -1 and is never cached") {
     assert(Tables.pathSig(spark, "/nonexistent/graft_no_such.parquet") === -1L)
   }
+
+  test("schema cache: a computed signature never lands on the reserved -1") {
+    assert(Tables.sigValue(-1L) === -2L)
+    Seq(-2L, 0L, 1L, Long.MinValue, Long.MaxValue).foreach(s =>
+      assert(Tables.sigValue(s) === s))
+  }
 }

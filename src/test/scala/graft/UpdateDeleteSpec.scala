@@ -113,6 +113,46 @@ class UpdateDeleteSpec extends SparkSpec {
     assert(b4("a")._1 > b4("a")._2)
   }
 
+  test("an IN list prunes to the files whose [min, max] hold a listed key; the DV delete kills the same rows") {
+    val path = java.nio.file.Files.createTempDirectory("graft_upd_in").toString + "/t"
+    ManifestTable.write(
+      spark.range(0, 1600).toDF("o_orderkey").withColumn("v", col("o_orderkey"))
+        .repartitionByRange(16, col("o_orderkey")).sortWithinPartitions("o_orderkey"),
+      path, statsCols = Seq("o_orderkey"))
+    val st = ManifestTable.resolveState(spark, path, 1L)
+    assert(st.files.size === 16)
+    val keys = Seq(5L, 410L, 1599L, 99999L)
+    def holding(ks: Seq[Long]): Set[String] = st.files.filter { f =>
+      val s = st.stats(f)("o_orderkey")
+      ks.exists(k => s.min.toString.toLong <= k && k <= s.max.toString.toLong)
+    }.toSet
+    val cond = col("o_orderkey").isin(keys: _*)
+    val cand = ManifestTable.condCandidates(st, cond)
+    assert(cand.toSet === holding(keys) && cand.size === 3, s"candidates: $cand")
+    // null literals never make IN true; a non-numeric literal (or an OR)
+    // leaves the prune unsure, so every file stays
+    assert(ManifestTable.condCandidates(st,
+      col("o_orderkey").isin(5L, null)).toSet === holding(Seq(5L)))
+    assert(ManifestTable.condCandidates(st,
+      col("o_orderkey").isin(5L, "x")).size === 16)
+    assert(ManifestTable.condCandidates(st,
+      col("o_orderkey").isin(5L) || col("v") === 900L).size === 16)
+    // a range conjunct narrows the points; two IN lists intersect
+    assert(ManifestTable.condCandidates(st,
+      cond && col("o_orderkey") > 100L).toSet === holding(Seq(410L, 1599L)))
+    assert(ManifestTable.condCandidates(st,
+      cond && col("o_orderkey").isin(410L, 7L)).toSet === holding(Seq(410L)))
+    ManifestTable.deleteWhereDV(spark, path, cond, "o_orderkey")
+    val st2 = ManifestTable.resolveState(spark, path, 2L)
+    val killed = spark.read.parquet(st2.dvFiles.map(f => s"$path/$f"): _*)
+    assert(killed.select("_graft_dv_key").as[Long].collect().toSet ===
+      Set(5L, 410L, 1599L))
+    assert(killed.select("_graft_dv_file").as[String].collect().toSet ===
+      holding(keys).map(_.split("/").last))
+    assert(ManifestTable.read(spark, path).select("o_orderkey").as[Long]
+      .collect().toSet === (0L until 1600L).toSet -- Set(5L, 410L, 1599L))
+  }
+
   test("updateWhere pre-prunes whole files from manifest stats before the detection scan") {
     val path = java.nio.file.Files.createTempDirectory("graft_upd5").toString + "/t"
     ManifestTable.write(
