@@ -51,6 +51,14 @@ import scala.util.control.NonFatal
   * row's `_metadata.file_name`, so Catalyst folds a query's key
   * predicates into the vector side; a sidecar past the cache's row
   * budget stays a distributed broadcast read.
+  *
+  * Maintenance rewrites — [[compact]], the OPTIMIZE ZORDER verbs,
+  * [[optimizeClustered]], [[compactWhere]] and auto-compaction — are
+  * one attempt body ([[subsetRewrite]]) inside [[transact]]: each picks
+  * its files from the attempt's base and its entry removes exactly
+  * those, so an append that wins the race is re-read, never dropped.
+  * Explicit OPTIMIZE and Z-order commits show `COMPACT` in [[history]]
+  * (`WRITE` before), clustering shows `CLUSTER`.
   */
 object ManifestTable {
 
@@ -1537,20 +1545,6 @@ object ManifestTable {
         generatedAdds = generatedAdds, propertiesFull = propertiesFull,
         statsSchemaDecl = statsSchemaDecl))
 
-  /** MAINTENANCE overwrite (compact / Z-order): the same commit as
-    * [[write]] but with the expectations gate OFF — a rewrite
-    * re-stages EXISTING rows, and a DROP rule declared after those
-    * rows landed must not silently delete them during an OPTIMIZE
-    * (expectations gate incoming batches; history belongs to CHECK
-    * constraints). Generated columns and constraints still enforce —
-    * they ARE table-wide invariants. */
-  private def writeRewrite(df: DataFrame, path: String,
-                           partitionCols: Seq[String] = Nil,
-                           statsCols: Seq[String] = Nil): Long =
-    transact(df.sparkSession, path, "manifest", 3, None)(
-      writeAttempt(_, df, partitionCols, statsCols, carryForward = false,
-        tag = None, gateExpectations = false))
-
   /** Transactional APPEND: commit a log entry adding this batch's files
     * — O(new files) bytes, regardless of table size. Data files of
     * previous versions are never touched; an appender dying mid-stage
@@ -1670,7 +1664,7 @@ object ManifestTable {
       .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
-      .map(s => s.getPath.toUri.toString).sorted.toSeq
+      .map(s => externalRef(srcFs, s.getPath)).sorted.toSeq
     // the ledger diff runs inside the attempt: a race lost to another
     // COPY of overlapping files re-diffs against the winner's ledger
     var ingested = 0
@@ -1732,15 +1726,7 @@ object ManifestTable {
       s"$path is already a graft table — CONVERT only adopts plain dirs")
     val files = listDataFiles(f, new Path(path))
     require(files.nonEmpty, s"no parquet files under $path to convert")
-    // a ref is a path string as Spark and Hadoop parse one: a name that
-    // URL-encodes (space, %) records its decoded Path form, since the
-    // encoded URI string would name another file; all others keep the
-    // URI form
-    val adds = files.map { p =>
-      val q = f.makeQualified(p)
-      val uri = q.toUri.toString
-      if (uri.contains('%')) q.toString else uri
-    }.sorted
+    val adds = files.map(externalRef(f, _)).sorted
     val schema = spark.read.parquet(path).schema
     val json = deltaJson(1L, System.currentTimeMillis(), adds,
       schema = Some(schema), op = Some("CONVERT"))
@@ -1749,6 +1735,18 @@ object ManifestTable {
         s"CONVERT lost the commit race at $path — another writer " +
           "created the table concurrently")
     1L
+  }
+
+  /** The fs-qualified string by which a file outside the table's own
+    * snapshot dirs is recorded (CONVERT refs, the COPY INTO ledger) and
+    * handed to Spark: a path string as Spark and Hadoop parse one. A
+    * name that URL-encodes (space, %) takes its decoded `Path` form,
+    * since the encoded URI string would name another file; all others
+    * keep the URI form. */
+  private def externalRef(f: FileSystem, p: Path): String = {
+    val q = f.makeQualified(p)
+    val uri = q.toUri.toString
+    if (uri.contains('%')) q.toString else uri
   }
 
   // ------------------------------------------------------------------
@@ -2494,7 +2492,7 @@ object ManifestTable {
   def optimizeClustered(spark: SparkSession, path: String,
                         targetFiles: Int = 0,
                         maxAttempts: Int = 3): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max => smax, min => smin}
+    import org.apache.spark.sql.functions.{col, max => smax, min => smin}
     transact(spark, path, "cluster", maxAttempts,
         Some(s"no committed version at $path")) { t =>
       val st = t.st
@@ -2504,7 +2502,6 @@ object ManifestTable {
       val unclustered = st.files.filterNot(clusteredSet)
       if (unclustered.isEmpty) Done(t.base) // fully clustered: no-op
       else {
-        val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
         val logicalCols = st.clusterCols.map(st.logical)
         // bounding box of the UNCLUSTERED data per cluster column — from
         // manifest stats when every unclustered file has complete stats,
@@ -2562,56 +2559,16 @@ object ManifestTable {
           }
         }
         val rewrite = unclustered ++ overlapping
-        // read the selected rows (DV-aware; ids ride through) and Z-order
-        // them over THIS subset's observed domain
-        val idSchema = st.schema.map(sc => StructType(sc.fields :+
-          org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-        val rows = readStateDf(spark, path, st.copy(files = rewrite,
-          schema = if (st.rowTracking) idSchema else st.schema))
+        // Z-order the selected rows over THIS subset's observed domain
         val nOut = if (targetFiles > 0) targetFiles
           else math.max(1, rewrite.size)
-        val clustered =
+        val layout: DataFrame => DataFrame =
           if (logicalCols.length == 1)
-            rows.repartitionByRange(nOut, col(logicalCols.head))
+            _.repartitionByRange(nOut, col(logicalCols.head))
               .sortWithinPartitions(col(logicalCols.head))
-          else {
-            val b = rows.agg(
-              logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).head,
-              logicalCols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).tail: _*)
-              .head()
-            def d(i: Int): Double =
-              if (b.isNullAt(i)) 0.0 else b.get(i).toString.toDouble
-            def norm(c: String, lo: Double, hi: Double) =
-              if (hi <= lo) lit(0)
-              else (((col(c).cast("double") - lit(lo)) / lit(hi - lo))
-                * lit(4294967000.0) - lit(2147483500.0)).cast("long").cast("int")
-            val zNames = logicalCols.indices.map(i => s"_graft_cz$i")
-            val keyed = logicalCols.zipWithIndex.foldLeft(rows) {
-              case (df0, (c, i)) =>
-                df0.withColumn(zNames(i), norm(c, d(2 * i), d(2 * i + 1)))
-            }
-            val out =
-              if (logicalCols.length == 2)
-                graft.functions.ZOrderKey.clusterBy(keyed,
-                  zNames(0), zNames(1), nOut)
-              else graft.functions.ZOrderKeyN.clusterByN(keyed, zNames, nOut)
-            out.drop(zNames: _*)
-          }
-        val snapDir = t.dir("snap")
-        val physOut =
-          if (!st.mapped) clustered
-          else clustered.select(clustered.schema.fieldNames.map(n =>
-            col(n).as(st.phys(n))).toSeq: _*)
-        physOut.write.mode("overwrite").parquet(snapDir)
-        val staged = listDataFiles(t.f, new Path(snapDir))
-        val stagedRel = staged.map(t.rel)
-        val newStats = stagedFooterStats(spark, path, staged,
-          (st.statsSchemaCols ++ st.clusterCols).distinct)
-        val (bloomAdds, ndvAdds) = t.sidecars(staged)
-        Publish(deltaJson(t.version, t.ts, stagedRel, rewrite, newStats,
-            schema = Some(schema), bloomAdds = bloomAdds, ndvAdds = ndvAdds,
-            op = Some("CLUSTER"), clusteredAdds = stagedRel),
-          snapDir +: t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
+          else rows => zOrder(rows, gridKeys(rows, logicalCols), nOut)
+        subsetRewrite(t, rewrite, layout, Nil,
+          (st.statsSchemaCols ++ st.clusterCols).distinct, "CLUSTER")
       }
     }
   }
@@ -3209,8 +3166,7 @@ object ManifestTable {
 
   /** One write/append attempt against `t`'s base: stage the batch in a
     * fresh snapshot dir and build the log entry that publishes it
-    * ([[write]], [[append]], [[copyInto]] and the maintenance rewrites
-    * all commit through here). */
+    * ([[write]], [[append]] and [[copyInto]] commit through here). */
   private def writeAttempt(t: Txn, df: DataFrame, partitionCols: Seq[String],
                            statsCols: Seq[String],
                            carryForward: Boolean, tag: Option[String],
@@ -3220,8 +3176,7 @@ object ManifestTable {
                            txn: Option[(String, Long)] = None,
                            generatedAdds: Map[String, String] = Map.empty,
                            propertiesFull: Option[Map[String, String]] = None,
-                           statsSchemaDecl: Option[Seq[String]] = None,
-                           gateExpectations: Boolean = true): Attempt = {
+                           statsSchemaDecl: Option[Seq[String]] = None): Attempt = {
     import t.{f, path, spark, st, token, version}
     // writer-transaction idempotency (Delta's txnAppId/txnVersion,
     // MONOTONE): a write whose version is at or below the app's last
@@ -3312,31 +3267,23 @@ object ManifestTable {
     // job (nothing lands), DROP rules filter violating rows, WARN
     // rules keep them — and per-rule violation/pass counts observe
     // DURING the staging write itself (one pass, zero extra scans),
-    // landing in this commit's log entry below (DLT's event log)
-    // MAINTENANCE rewrites (compact / Z-order / auto-compact) bypass
-    // the gate: they re-stage EXISTING rows — rows that landed
-    // before a rule was declared would be silently DROPPED by an
-    // OPTIMIZE, data loss via maintenance (expectations gate
-    // INCOMING batches only; history is CHECK constraints' job)
-    val expectRules =
-      if (!gateExpectations) Map.empty[String, String]
-      else st.expectations
+    // landing in this commit's log entry below (DLT's event log).
+    // Maintenance rewrites never come here ([[subsetRewrite]])
     val expectGate =
-      if (expectRules.isEmpty) None
-      else Some(Expectations.commitGate(genTagged, expectRules,
+      if (st.expectations.isEmpty) None
+      else Some(Expectations.commitGate(genTagged, st.expectations,
         s"graft-expect-$version-$token"))
     val expectGated = expectGate.map(_._1).getOrElse(genTagged)
     // CHECK constraints enforce inside the staging pass: a violating
     // row fails the write job, no manifest lands, readers see nothing
     val guarded0 = constraintGuard(expectGated, st.constraints)
     // row ids: fresh above the high-water mark for rows lacking one;
-    // rewrite paths (compact/zorder via readWithRowIds) keep theirs
+    // a batch read through readWithRowIds keeps its own
     val guarded =
       if (tracked) assignRowIds(guarded0, st.rowHighWater)
       else guarded0
-    // a batch ARRIVING with row ids is either an internal rewrite
-    // (compact/zorder carry ids verbatim — unique by construction) or
-    // an external caller asserting id authority it may not have:
+    // a batch ARRIVING with row ids is a caller asserting id
+    // authority it may not have:
     // validate uniqueness before anything lands, so a buggy caller
     // cannot silently corrupt the contract changesByRowId and feed
     // consumers key on. One aggregate over the staging batch, only on
@@ -6023,41 +5970,75 @@ object ManifestTable {
                         statsCols: Seq[String] = Nil,
                         sortCols: Seq[String] = Nil): Long = {
     require(targetBytes >= 1L, "targetBytes must be >= 1")
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val st = resolveState(spark, path, v)
-    val f = fs(spark, path)
-    val total = st.files.map(r =>
-      f.getFileStatus(new Path(resolveRef(path, r))).getLen).sum
-    val n = math.max(1L, (total + targetBytes - 1L) / targetBytes).toInt
-    compact(spark, path, n, statsCols = statsCols, sortCols = sortCols)
+    transact(spark, path, "compact", 3,
+        Some(s"no committed version at $path")) { t =>
+      compactAttempt(t, fileCountFor(t, t.st.files, targetBytes),
+        statsCols, sortCols)
+    }
   }
 
+  /** OPTIMIZE (bin-pack): rewrite every live file of the current version
+    * into `targetFiles` files — range-partitioned and sorted by
+    * `sortCols` when given — folding deletion vectors away. Stats cover
+    * `statsCols`, else the table's stats schema, else the columns the
+    * files already carry. The commit (op `COMPACT`) removes exactly the
+    * files the rewrite read: an append that wins the race meanwhile is
+    * re-read by the retry, never dropped.
+    */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 1,
-              partitionCols: Seq[String] = Nil,
               statsCols: Seq[String] = Nil,
               sortCols: Seq[String] = Nil): Long = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    val curV = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    // row-tracked tables compact WITH their ids (carried verbatim)
-    val cur =
-      if (resolveState(spark, path, curV).rowTracking)
-        readWithRowIds(spark, path)
-      else read(spark, path)
-    val packed =
-      if (sortCols.nonEmpty)
-        cur.repartitionByRange(targetFiles,
-            sortCols.map(org.apache.spark.sql.functions.col): _*)
-          .sortWithinPartitions(
-            sortCols.map(org.apache.spark.sql.functions.col): _*)
-      else cur.coalesce(targetFiles)
-    writeRewrite(packed, path, partitionCols, statsCols = statsCols)
+    transact(spark, path, "compact", 3,
+        Some(s"no committed version at $path"))(
+      compactAttempt(_, targetFiles, statsCols, sortCols))
+  }
+
+  /** The attempt of [[compact]], [[compactToFileSize]] and
+    * [[compactIfFragmented]]: bin-pack every file of `t`'s base into
+    * `n` files. */
+  private def compactAttempt(t: Txn, n: Int, statsCols: Seq[String],
+                             sortCols: Seq[String]): Attempt = {
+    import org.apache.spark.sql.functions.col
+    fullRewrite(t, rows =>
+      if (sortCols.isEmpty) rows.coalesce(n)
+      else rows.repartitionByRange(n, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*),
+      statsCols)
+  }
+
+  /** The rewrite of every file of `t`'s base (compaction, Z-order):
+    * staged flat unless the table declares PARTITIONED BY, each file
+    * sorted locally by the declared cluster columns as every staged
+    * batch is. `statsCols` are logical names. */
+  private def fullRewrite(t: Txn, layout: DataFrame => DataFrame,
+                          statsCols: Seq[String]): Attempt = {
+    import org.apache.spark.sql.functions.col
+    val st = t.st
+    require(st.files.nonEmpty,
+      s"version ${t.base} at ${t.path} has no data files")
+    val clusterCols = st.clusterCols.map(st.logical)
+    val sorted: DataFrame => DataFrame =
+      if (clusterCols.isEmpty) layout
+      else layout.andThen(_.sortWithinPartitions(clusterCols.map(col): _*))
+    subsetRewrite(t, st.files, sorted, st.partitionColsDecl.map(st.phys),
+      statsCols.map(st.phys), "COMPACT")
+  }
+
+  /** ⌈bytes of `files` / targetBytes⌉ (at least 1), from filesystem
+    * metadata; a file that cannot be stat'ed counts 0. */
+  private def fileCountFor(t: Txn, files: Seq[String],
+                           targetBytes: Long): Int = {
+    val bytes = files.map { r =>
+      try t.f.getFileStatus(new Path(resolveRef(t.path, r))).getLen
+      catch { case _: java.io.IOException => 0L }
+    }.sum
+    math.max(1L, (bytes + targetBytes - 1L) / targetBytes).toInt
   }
 
   /** OPTIMIZE ZORDER BY (c1, c2): rewrite the table clustered along
     * the Morton curve of two columns and commit the rewrite as one
-    * atomic overwrite whose per-file stats are recorded for BOTH
+    * atomic commit whose per-file stats are recorded for BOTH
     * dimensions — delta-spark's `OPTIMIZE ... ZORDER BY` (Delta paper
     * §3.3, VLDB 2020; the reference platform exposes it over the same
     * tables it z-orders at `/root/reference/src/etl_pipeline.py:87-88`).
@@ -6071,49 +6052,19 @@ object ManifestTable {
     * either column. The spec asserts the prune improvement on the
     * trailing dimension directly.
     *
-    * Scale shape: one range-shuffle of the table by the codegen'd
-    * [[graft.functions.ZOrderKey]] (`targetFiles` output tasks), one
-    * footer pass for stats — O(table) once, amortized over every
-    * subsequent pruned read, same cost class as the compact it
-    * replaces. Flat layout only (like [[compact]]'s default): a
-    * partitioned table z-orders within partitions poorly and should
-    * compact per-partition instead.
+    * Scale shape: one min/max pass ([[gridKeys]]), one range-shuffle
+    * of the table by the codegen'd [[graft.functions.ZOrderKey]]
+    * (`targetFiles` output tasks), one footer pass for stats — O(table)
+    * once, amortized over every subsequent pruned read, same cost class
+    * as the compact it replaces. Flat layout unless the table declares
+    * PARTITIONED BY (like [[compact]]): a partitioned table z-orders
+    * within partitions poorly and should compact per-partition instead.
     */
   def optimizeZOrder(spark: SparkSession, path: String,
                      c1: String, c2: String, targetFiles: Int,
-                     extraStatsCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max => smax, min => smin}
-    require(targetFiles >= 1, "targetFiles must be >= 1")
-    val zv = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val cur =
-      if (resolveState(spark, path, zv).rowTracking)
-        readWithRowIds(spark, path)
-      else read(spark, path)
-    // the Morton key interleaves 32-bit coordinates; arbitrary numeric
-    // domains (bigint keys, doubles) first normalize equi-width onto
-    // the int grid from their observed [min, max] — one cheap agg pass
-    // before the O(table) rewrite. Monotone per column, so file-level
-    // clustering (the only consumer) is unaffected by the scaling;
-    // under heavy key skew a rank-based normalization would cluster
-    // tighter — the documented upgrade path.
-    val b = cur.agg(smin(col(c1)), smax(col(c1)),
-      smin(col(c2)), smax(col(c2))).head()
-    def d(i: Int): Double =
-      if (b.isNullAt(i)) 0.0 else b.get(i).toString.toDouble
-    def norm(c: String, lo: Double, hi: Double) =
-      if (hi <= lo) lit(0)
-      else (((col(c).cast("double") - lit(lo)) / lit(hi - lo))
-        * lit(4294967000.0) - lit(2147483500.0)).cast("long").cast("int")
-    val keyed = cur
-      .withColumn("_graft_z1", norm(c1, d(0), d(1)))
-      .withColumn("_graft_z2", norm(c2, d(2), d(3)))
-    val clustered = graft.functions.ZOrderKey
-      .clusterBy(keyed, "_graft_z1", "_graft_z2", targetFiles)
-      .drop("_graft_z1", "_graft_z2")
-    writeRewrite(clustered, path,
-      statsCols = (Seq(c1, c2) ++ extraStatsCols).distinct)
-  }
+                     extraStatsCols: Seq[String] = Nil): Long =
+    zOrderRewrite(spark, path, Seq(c1, c2), targetFiles, extraStatsCols,
+      gridKeys)
 
   /** RANK-normalized OPTIMIZE ZORDER: like [[optimizeZOrder]] but each
     * dimension maps through its own QUANTILE grid (64 rank buckets
@@ -6133,92 +6084,109 @@ object ManifestTable {
                            c1: String, c2: String, targetFiles: Int,
                            extraStatsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, lit, when}
-    require(targetFiles >= 1, "targetFiles must be >= 1")
-    val zv = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val cur =
-      if (resolveState(spark, path, zv).rowTracking)
-        readWithRowIds(spark, path)
-      else read(spark, path)
     val buckets = 64
     val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    def rankCol(c: String) = {
-      val cuts = cur.stat.approxQuantile(c, probs, 0.001)
+    def rankKey(rows: DataFrame, c: String): Column = {
+      val cuts = rows.stat.approxQuantile(c, probs, 0.001)
       // ascending CASE over the interior cuts; ties collapse branches
       val distinctCuts = cuts.distinct
-      val base: org.apache.spark.sql.Column = lit(distinctCuts.length)
-      distinctCuts.zipWithIndex.reverse.foldLeft(base) {
+      val base: Column = lit(distinctCuts.length)
+      (distinctCuts.zipWithIndex.reverse.foldLeft(base) {
         case (acc, (cut, i)) =>
           when(col(c).cast("double") <= cut, i).otherwise(acc)
-      } * lit(1 << 25) // spread bucket ids across the int domain
+      } * lit(1 << 25)).cast("int") // spread bucket ids across the int domain
     }
-    val keyed = cur
-      .withColumn("_graft_z1", rankCol(c1).cast("int"))
-      .withColumn("_graft_z2", rankCol(c2).cast("int"))
-    val clustered = graft.functions.ZOrderKey
-      .clusterBy(keyed, "_graft_z1", "_graft_z2", targetFiles)
-      .drop("_graft_z1", "_graft_z2")
-    writeRewrite(clustered, path,
-      statsCols = (Seq(c1, c2) ++ extraStatsCols).distinct)
+    zOrderRewrite(spark, path, Seq(c1, c2), targetFiles, extraStatsCols,
+      (rows, cols) => cols.map(rankKey(rows, _)))
   }
 
-  /** N-column OPTIMIZE ZORDER (3–8 columns): the same normalize-then-
-    * interleave rewrite over the N-ary Morton key
-    * ([[graft.functions.ZOrderKeyN]] — round-robin bit interleave,
-    * ⌊63/N⌋ bits per dimension). Per-file stats recorded for EVERY
-    * listed column, so range reads prune on any of them. The
-    * two-column overload keeps the faster spread-based kernel.
+  /** N-column OPTIMIZE ZORDER (2–8 columns): the same normalize-then-
+    * interleave rewrite; three or more columns use the N-ary Morton
+    * key ([[graft.functions.ZOrderKeyN]] — round-robin bit interleave,
+    * ⌊63/N⌋ bits per dimension), two keep the faster spread-based
+    * kernel. Per-file stats recorded for EVERY listed column, so range
+    * reads prune on any of them.
     */
   def optimizeZOrderN(spark: SparkSession, path: String,
                       cols: Seq[String], targetFiles: Int,
                       extraStatsCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max => smax, min => smin}
     require(cols.length >= 2 && cols.length <= 8,
       s"optimizeZOrderN takes 2..8 columns, got ${cols.length}")
+    zOrderRewrite(spark, path, cols, targetFiles, extraStatsCols, gridKeys)
+  }
+
+  /** The OPTIMIZE ZORDER verbs: one transaction that Z-orders every
+    * file of its base along `cols` (int-grid coordinates from `keys`)
+    * into `targetFiles` files, with stats for `cols` ++ `extraStatsCols`. */
+  private def zOrderRewrite(spark: SparkSession, path: String,
+                            cols: Seq[String], targetFiles: Int,
+                            extraStatsCols: Seq[String],
+                            keys: (DataFrame, Seq[String]) => Seq[Column])
+      : Long = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    if (cols.length == 2)
-      return optimizeZOrder(spark, path, cols(0), cols(1), targetFiles,
-        extraStatsCols)
-    val zv = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val cur =
-      if (resolveState(spark, path, zv).rowTracking)
-        readWithRowIds(spark, path)
-      else read(spark, path)
-    val b = cur.agg(
-      cols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).head,
-      cols.flatMap(c => Seq(smin(col(c)), smax(col(c)))).tail: _*).head()
+    transact(spark, path, "zorder", 3,
+        Some(s"no committed version at $path"))(
+      fullRewrite(_, rows => zOrder(rows, keys(rows, cols), targetFiles),
+        (cols ++ extraStatsCols).distinct))
+  }
+
+  /** Equi-width int-grid coordinates of `cols` for the Morton key: each
+    * numeric domain (bigint keys, doubles) scales from its observed
+    * [min, max] in `rows` — one cheap agg pass before the O(table)
+    * rewrite — onto the 32-bit range the interleave consumes; an empty
+    * or constant column maps to 0. Monotone per column, so file-level
+    * clustering (the only consumer) is unaffected by the scaling;
+    * under heavy key skew [[optimizeZOrderRanked]]'s quantile grid
+    * clusters tighter. */
+  private def gridKeys(rows: DataFrame, cols: Seq[String]): Seq[Column] = {
+    import org.apache.spark.sql.functions.{col, lit, max => smax, min => smin}
+    val bounds = cols.flatMap(c => Seq(smin(col(c)), smax(col(c))))
+    val b = rows.agg(bounds.head, bounds.tail: _*).head()
     def d(i: Int): Double =
       if (b.isNullAt(i)) 0.0 else b.get(i).toString.toDouble
-    def norm(c: String, lo: Double, hi: Double) =
+    cols.zipWithIndex.map { case (c, i) =>
+      val (lo, hi) = (d(2 * i), d(2 * i + 1))
       if (hi <= lo) lit(0)
       else (((col(c).cast("double") - lit(lo)) / lit(hi - lo))
         * lit(4294967000.0) - lit(2147483500.0)).cast("long").cast("int")
-    val zNames = cols.indices.map(i => s"_graft_z$i")
-    val keyed = cols.zipWithIndex.foldLeft(cur) { case (df0, (c, i)) =>
-      df0.withColumn(zNames(i), norm(c, d(2 * i), d(2 * i + 1))) }
-    val clustered = graft.functions.ZOrderKeyN
-      .clusterByN(keyed, zNames, targetFiles)
-      .drop(zNames: _*)
-    writeRewrite(clustered, path,
-      statsCols = (cols ++ extraStatsCols).distinct)
+    }
+  }
+
+  /** Z-order `rows` into `n` files along the int-grid `keys`: the
+    * two-column spread kernel ([[graft.functions.ZOrderKey]]) for two
+    * keys, the N-ary interleave ([[graft.functions.ZOrderKeyN]]) for
+    * more. */
+  private def zOrder(rows: DataFrame, keys: Seq[Column], n: Int): DataFrame = {
+    val names = keys.indices.map(i => s"_graft_z$i")
+    val keyed = names.zip(keys).foldLeft(rows) {
+      case (df, (name, key)) => df.withColumn(name, key)
+    }
+    val clustered =
+      if (names.length == 2)
+        graft.functions.ZOrderKey.clusterBy(keyed, names(0), names(1), n)
+      else graft.functions.ZOrderKeyN.clusterByN(keyed, names, n)
+    clustered.drop(names: _*)
   }
 
   /** OPTIMIZE scheduling policy: compact only when the current
     * version's file count (or deletion-vector sidecar count) exceeds
     * `maxFiles` — the maintenance loop counterpart of [[compact]].
+    * Decided per attempt, so a lost race re-checks the new base.
     */
   def compactIfFragmented(spark: SparkSession, path: String,
                           maxFiles: Int, targetFiles: Int = 1,
                           statsCols: Seq[String] = Nil,
                           sortCols: Seq[String] = Nil): Option[Long] = {
     require(maxFiles >= 1, "maxFiles must be >= 1")
-    val cur = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val st = resolveState(spark, path, cur)
-    if (st.files.size + st.dvFiles.size <= maxFiles) None
-    else Some(compact(spark, path, targetFiles,
-      statsCols = statsCols, sortCols = sortCols))
+    require(targetFiles >= 1, "targetFiles must be >= 1")
+    var fragmented = false
+    val v = transact(spark, path, "compact", 3,
+        Some(s"no committed version at $path")) { t =>
+      fragmented = t.st.files.size + t.st.dvFiles.size > maxFiles
+      if (fragmented) compactAttempt(t, targetFiles, statsCols, sortCols)
+      else Done(t.base)
+    }
+    if (fragmented) Some(v) else None
   }
 
   /** Row-level change feed between two committed versions (CDC-lite):
@@ -6699,15 +6667,9 @@ object ManifestTable {
         .filter(cond).select("_graft_file")
         .collect().map(_.getString(0)).toSeq
       if (selected.isEmpty) Done(t.base)
-      else subsetRewrite(t, selected, targetFiles, partCols)
+      else subsetRewrite(t, selected, _.coalesce(targetFiles), partCols, Nil,
+        "COMPACT")
     }
-  }
-
-  // reentrancy guard: the auto-compaction's OWN commit must never
-  // re-trigger evaluation (it converges anyway — a compacted state
-  // holds few small files — but the guard makes that a non-property)
-  private val inAutoCompact = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
 
   /** Post-commit AUTO COMPACT (table property [[AutoCompactProp]]):
@@ -6719,13 +6681,12 @@ object ManifestTable {
     * cost is O(small bytes), not O(table); a 100 TB table ingesting
     * micro-batches pays for exactly the slivers it created. Best
     * effort: losing the OCC race (or any failure) leaves the data
-    * commit intact and the small files for the next trigger.
-    * Partitioned layouts (use [[compactWhere]] maintenance) and
-    * DV-bearing states (compact folds them explicitly) skip.
+    * commit intact and the small files for the next trigger. The
+    * auto-compaction's own commit, like every maintenance rewrite,
+    * never re-triggers it.
     */
   private def maybeAutoCompact(spark: SparkSession, path: String,
                                props: Map[String, String]): Unit = {
-    if (inAutoCompact.get) return
     if (!props.get(AutoCompactProp).exists(_.equalsIgnoreCase("true"))) return
     val target = props.get("graft.autoOptimize.targetFileSize")
       .flatMap(_.toLongOption).filter(_ > 0L)
@@ -6733,56 +6694,67 @@ object ManifestTable {
     val minN = props.get("graft.autoCompact.minNumFiles")
       .flatMap(_.toIntOption).filter(_ > 0)
       .getOrElse(AutoCompactMinNumFiles)
-    val v = currentVersion(spark, path).getOrElse(return)
-    val st = resolveState(spark, path, v)
-    if (st.dvFiles.nonEmpty || partitionColsOf(st.files).nonEmpty) return
-    val f = fs(spark, path)
-    // BOUNDED trigger scan: slivers accrete at the NEW end of the file
-    // list (manifest replay order is commit order), and every firing
-    // compaction clears them — so examining a bounded newest window
-    // finds exactly the accreted smalls while a million-file table
-    // never pays a million stat RPCs per commit. A small file older
-    // than the window is the previous trigger's leftover at worst
-    // (best-effort contract); manual OPTIMIZE covers archaeology.
-    val window = math.max(4 * minN, 200)
-    val small = st.files.reverseIterator.take(window).filter { r =>
-      try f.getFileStatus(new Path(resolveRef(path, r))).getLen < target / 2
-      catch { case _: java.io.IOException => false }
-    }.toSeq
-    if (small.size < minN) return
-    inAutoCompact.set(java.lang.Boolean.TRUE)
-    try { compactFiles(spark, path, small, target); () }
+    try { compactSmallFiles(spark, path, target, minN); () }
     catch { case NonFatal(_) => () } // best effort
-    finally inAutoCompact.set(java.lang.Boolean.FALSE)
   }
 
-  /** Bin-pack a SUBSET of the current version's files into
-    * ~`targetBytes` files; untouched files carry verbatim (flat
-    * layouts). Single attempt: a lost race throws, which the
-    * best-effort caller treats as "next trigger's problem". A stale or
-    * empty subset commits nothing. */
-  private def compactFiles(spark: SparkSession, path: String,
-                           subset: Seq[String], targetBytes: Long): Long =
+  /** Bin-pack the current version's files under half of `targetBytes`
+    * into ~`targetBytes` files once at least `minN` of them exist;
+    * every other file carries verbatim. Single attempt: a lost race
+    * throws, which the best-effort caller treats as "next trigger's
+    * problem". Partitioned layouts (use [[compactWhere]] maintenance)
+    * and DV-bearing states (compact folds them explicitly) commit
+    * nothing. */
+  private def compactSmallFiles(spark: SparkSession, path: String,
+                                targetBytes: Long, minN: Int): Long =
     transact(spark, path, "auto-compact", 1,
         Some(s"no committed version at $path")) { t =>
-      val chosen = subset.filter(t.st.files.toSet)
-      if (chosen.isEmpty) Done(t.base)
+      val st = t.st
+      if (st.dvFiles.nonEmpty || partitionColsOf(st.files).nonEmpty)
+        Done(t.base)
       else {
-        val bytes = chosen.map { r =>
-          try t.f.getFileStatus(new Path(resolveRef(path, r))).getLen
-          catch { case _: java.io.IOException => 0L }
-        }.sum
-        val n = math.max(1L, (bytes + targetBytes - 1L) / targetBytes).toInt
-        subsetRewrite(t, chosen, n, Nil)
+        // BOUNDED trigger scan: slivers accrete at the NEW end of the
+        // file list (manifest replay order is commit order), and every
+        // firing compaction clears them — so examining a bounded newest
+        // window finds exactly the accreted smalls while a million-file
+        // table never pays a million stat RPCs per commit. A small file
+        // older than the window is the previous trigger's leftover at
+        // worst (best-effort contract); manual OPTIMIZE covers
+        // archaeology.
+        val window = math.max(4 * minN, 200)
+        val small = st.files.reverseIterator.take(window).filter { r =>
+          try t.f.getFileStatus(new Path(resolveRef(path, r))).getLen <
+            targetBytes / 2
+          catch { case _: java.io.IOException => false }
+        }.toSeq
+        if (small.size < minN) Done(t.base)
+        else subsetRewrite(t, small,
+          _.coalesce(fileCountFor(t, small, targetBytes)), Nil, Nil,
+          "COMPACT")
       }
     }
 
-  /** The subset-rewrite attempt of [[compactWhere]] and auto-compaction:
-    * bin-pack `files` of `t`'s base (DV-aware, row ids carried) into
-    * `n` files inside the `partCols` layout; every other file carries
-    * verbatim. */
-  private def subsetRewrite(t: Txn, files: Seq[String], n: Int,
-                            partCols: Seq[String]): Attempt = {
+  /** THE maintenance rewrite attempt — compaction, Z-order, clustering,
+    * partition-scoped and auto compaction all commit through it. Reads
+    * `files` of `t`'s base (DV-aware, row ids carried), lays the rows
+    * out with `layout`, stages them (physical names on mapped tables)
+    * inside the `partCols` layout, and publishes an `op` entry that
+    * removes exactly `files`: every other file carries verbatim, so a
+    * commit that won the race meanwhile is re-read by the retry, never
+    * dropped. Stats cover `statsCols` (physical), else the table's stats
+    * schema, else the columns the files already carry. A rewrite of
+    * every base file also retires every deletion-vector, bloom and NDV
+    * sidecar; a subset rewrite keeps them. A `CLUSTER` rewrite's output
+    * is the new clustered set.
+    *
+    * Expectations do not gate a rewrite: it re-stages EXISTING rows,
+    * and a DROP rule declared after they landed would silently delete
+    * them during an OPTIMIZE (expectations gate incoming batches;
+    * history belongs to CHECK constraints). */
+  private def subsetRewrite(t: Txn, files: Seq[String],
+                            layout: DataFrame => DataFrame,
+                            partCols: Seq[String], statsCols: Seq[String],
+                            op: String): Attempt = {
     import org.apache.spark.sql.functions.col
     import t.{path, spark, st}
     val idSchema = st.schema.map(sc => StructType(sc.fields :+
@@ -6790,7 +6762,7 @@ object ManifestTable {
     val rows = readStateDf(spark, path, st.copy(files = files,
       schema = if (st.rowTracking) idSchema else st.schema))
     val snapDir = t.dir("snap")
-    val packed = rows.coalesce(n)
+    val packed = layout(rows)
     val physOut =
       if (!st.mapped) packed
       else packed.select(packed.schema.fieldNames.map(nm =>
@@ -6798,18 +6770,29 @@ object ManifestTable {
     val w = physOut.write.mode("overwrite")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
       .parquet(snapDir)
+    val whole = files.toSet == st.files.toSet
+    // a partitioned write of zero rows stages no file at all; a table
+    // rewritten whole keeps one schema-bearing (flat) file instead
+    if (whole && partCols.nonEmpty &&
+        listDataFiles(t.f, new Path(snapDir)).isEmpty)
+      physOut.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
     val staged = listDataFiles(t.f, new Path(snapDir))
+    val adds = staged.map(t.rel)
     val physStats =
-      if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
+      if (statsCols.nonEmpty) statsCols
+      else if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
       else st.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
     val newStats: Map[String, Map[String, ColStats]] =
       if (physStats.isEmpty) Map.empty
       else stagedFooterStats(spark, path, staged, physStats)
     val (bloomAdds, ndvAdds) = t.sidecars(staged)
     val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-    Publish(deltaJson(t.version, t.ts, staged.map(t.rel), files, newStats,
-        schema = Some(schema), bloomAdds = bloomAdds, ndvAdds = ndvAdds,
-        op = Some("COMPACT")),
+    Publish(deltaJson(t.version, t.ts, adds, files, newStats,
+        schema = Some(schema),
+        dvRemoves = if (whole) st.dvFiles else Nil,
+        bloomAdds = bloomAdds, bloomRemoves = if (whole) st.bloomFiles else Nil,
+        ndvAdds = ndvAdds, ndvRemoves = if (whole) st.ndvFiles else Nil,
+        op = Some(op), clusteredAdds = if (op == "CLUSTER") adds else Nil),
       snapDir +: t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
   }
 

@@ -53,6 +53,23 @@ class CopyIntoSpec extends SparkSpec {
       s"ledger wrong: $ledger")
   }
 
+  test("a source file whose name URL-encodes ingests; the re-run skips it") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ci6").toString
+    val src = s"$base/dump"
+    val table = s"$base/t"
+    ManifestTable.write(Seq((0L, "seed")).toDF("id", "v"), table)   // v1
+    stage(Seq((1L, "a"), (2L, "b")), src, "a b%c+d")
+    stage(Seq((3L, "c")), src, "plain")
+    val (v2, n1) = ManifestTable.copyInto(spark, table, src)
+    assert(v2 === 2L && n1 === 2, s"both files must ingest: $n1")
+    assert(ManifestTable.read(spark, table).as[(Long, String)].collect()
+      .toSet === Set((0L, "seed"), (1L, "a"), (2L, "b"), (3L, "c")))
+    // the ledger names the file as the listing does, so a replay is a no-op
+    assert(ManifestTable.copiedFiles(spark, table).map(_.split("/").last)
+      .toSet === Set("a b%c+d.parquet", "plain.parquet"))
+    assert(ManifestTable.copyInto(spark, table, src) === ((2L, 0)))
+  }
+
   test("ledger survives vacuum via the checkpoint; RESTORE rolls it back with the state") {
     val base = java.nio.file.Files.createTempDirectory("graft_ci2").toString
     val src = s"$base/dump"

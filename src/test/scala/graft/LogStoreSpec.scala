@@ -26,6 +26,22 @@ class LogStoreSpec extends SparkSpec {
         LogStore.HardLink.putIfAbsent(f, tmp, dst)
   }
 
+  /** Before the first publish it sees, commits `rival` through the
+    * hard-link store (another writer winning the race for that
+    * version), then publishes through the hard-link store — a
+    * deterministic lost race whose winner adds data. */
+  private final class RivalStore(rival: () => Unit) extends LogStore {
+    private var fired = false
+    override val name = "rival"
+    override def putIfAbsent(f: FileSystem, tmp: Path, dst: Path): Boolean = {
+      if (!fired) {
+        fired = true
+        ManifestTable.withLogStore(LogStore.HardLink)(rival())
+      }
+      LogStore.HardLink.putIfAbsent(f, tmp, dst)
+    }
+  }
+
   test("each store: first putIfAbsent wins, second loses, destination bytes complete, staging cleaned") {
     for (store <- Seq(LogStore.HardLink, LogStore.Rename,
         LogStore.ObjectStore)) {
@@ -109,7 +125,11 @@ class LogStoreSpec extends SparkSpec {
       "merge" -> (p => ManifestTable.merge(
         Seq((1L, "y"), (11L, "z")).toDF("id", "v"), p, "id")),
       "deleteWhereDV" -> (p =>
-        ManifestTable.deleteWhereDV(spark, p, col("id") === 2L, "id")))
+        ManifestTable.deleteWhereDV(spark, p, col("id") === 2L, "id")),
+      "compact" -> (p => ManifestTable.compact(spark, p)),
+      // the table's one numeric column on both axes
+      "optimizeZOrder" -> (p =>
+        ManifestTable.optimizeZOrder(spark, p, "id", "id", targetFiles = 1)))
     val maxAttempts = 3 // every verb's default
     for ((verb, run) <- verbs; k <- Seq(maxAttempts - 1, maxAttempts)) {
       val path = java.nio.file.Files.createTempDirectory(
@@ -145,6 +165,78 @@ class LogStoreSpec extends SparkSpec {
       }.distinct
       assert(tokens.size <= landed,
         s"$verb, $k losses: staging of lost attempts left behind: $names")
+    }
+  }
+
+  test("maintenance rewrites under a rival append: the rival's rows survive, the rewrite lands once and removes only files of its base") {
+    def rows(ids: Range) = ids.map(i => (i.toLong, i % 4L, i * 7L % 23L,
+      s"r$i")).toDF("id", "k", "m", "v")
+    val rivalRows = rows(1001 to 1010)
+    val append = (p: String) => { ManifestTable.append(rivalRows, p); () }
+    // a partitioned table takes no append: an insert-only merge adds
+    // files the same way
+    val insert = (p: String) => {
+      ManifestTable.merge(rivalRows, p, "id"); ()
+    }
+    val flat = (p: String) => {
+      ManifestTable.write(rows(1 to 200).repartition(4), p); ()
+    }
+    val cases = Seq[(String, String => Unit, String => Unit, String => Long, String)](
+      ("compact", flat, append, p => ManifestTable.compact(spark, p),
+        "COMPACT"),
+      ("compactIfFragmented", flat, append,
+        p => ManifestTable.compactIfFragmented(spark, p, maxFiles = 2).get,
+        "COMPACT"),
+      ("compactToFileSize", flat, append,
+        p => ManifestTable.compactToFileSize(spark, p, 1L << 20), "COMPACT"),
+      ("optimizeZOrder", flat, append,
+        p => ManifestTable.optimizeZOrder(spark, p, "id", "m", 2), "COMPACT"),
+      ("optimizeZOrderRanked", flat, append,
+        p => ManifestTable.optimizeZOrderRanked(spark, p, "id", "m", 2),
+        "COMPACT"),
+      ("optimizeZOrderN", flat, append,
+        p => ManifestTable.optimizeZOrderN(spark, p, Seq("id", "k", "m"), 2),
+        "COMPACT"),
+      ("optimizeClustered",
+        p => {
+          flat(p)
+          ManifestTable.setClusterColumns(spark, p, Seq("id", "m")); ()
+        },
+        append, p => ManifestTable.optimizeClustered(spark, p), "CLUSTER"),
+      ("compactWhere",
+        p => {
+          ManifestTable.write(rows(1 to 200).coalesce(1), p,
+            partitionCols = Seq("k")); ()
+        },
+        insert, p => ManifestTable.compactWhere(spark, p, col("k") === 1),
+        "COMPACT"))
+    for ((verb, create, rival, run, op) <- cases) {
+      val path = java.nio.file.Files.createTempDirectory(
+        s"graft_rival_$verb").toString + "/t"
+      create(path)
+      val prev = ManifestTable.currentVersion(spark, path).get
+      assert(ManifestTable.manifestFiles(spark, path, prev).size === 4,
+        s"$verb: a 4-file table")
+      val v = ManifestTable.withLogStore(new RivalStore(() => rival(path)))(
+        run(path))
+      // the rival won prev+1; the rewrite retried once onto it
+      assert(v === prev + 2, verb)
+      assert(ManifestTable.versions(spark, path) === (1L to prev + 2).toSeq,
+        verb)
+      val ops = ManifestTable.history(spark, path)
+        .select("version", "operation").as[(Long, String)].collect().toMap
+      assert(ops(prev + 2) === op, s"$verb: $ops")
+      val ids = ManifestTable.read(spark, path).select("id").as[Long]
+        .collect().sorted.toSeq
+      assert(ids === ((1L to 200L) ++ (1001L to 1010L)),
+        s"$verb: rows lost or duplicated")
+      val entry = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+        new java.io.File(path, s"_graft_manifest-v${prev + 2}.json"))
+      val removes = (0 until entry.get("removes").size)
+        .map(entry.get("removes").get(_).asText()).toSet
+      val base = ManifestTable.manifestFiles(spark, path, prev + 1).toSet
+      assert(removes.nonEmpty && removes.subsetOf(base),
+        s"$verb removed files outside its base: ${removes -- base}")
     }
   }
 }

@@ -311,6 +311,34 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.readVersion(spark, path, 1).count() === 1000)
   }
 
+  test("compact keeps a declared PARTITIONED BY layout, flattens an undeclared one, and keeps a file when every row is deleted") {
+    val base = java.nio.file.Files.createTempDirectory("graft_mt10p").toString
+    val rows = spark.range(1, 41).toDF("id").withColumn("k", col("id") % 2)
+    def files(p: String) = ManifestTable.manifestFiles(spark, p,
+      ManifestTable.currentVersion(spark, p).get)
+    val declared = s"$base/declared"
+    ManifestTable.write(rows, declared, partitionCols = Seq("k"),
+      partitionColsDecl = Seq("k"))
+    ManifestTable.compact(spark, declared)
+    assert(files(declared).size === 2 &&
+      files(declared).forall(_.contains("k=")), s"${files(declared)}")
+    assert(ManifestTable.read(spark, declared).count() === 40)
+    // a partitioned write of zero rows stages nothing: the rewrite keeps
+    // one schema-bearing file so the table stays readable
+    ManifestTable.deleteWhereDV(spark, declared, col("id") > 0, "id")
+    ManifestTable.compact(spark, declared)
+    assert(files(declared).size === 1)
+    assert(ManifestTable.read(spark, declared).count() === 0)
+    val undeclared = s"$base/undeclared"
+    ManifestTable.write(rows, undeclared, partitionCols = Seq("k"))
+    ManifestTable.compact(spark, undeclared)
+    assert(files(undeclared).size === 1 &&
+      !files(undeclared).exists(_.contains("=")), s"${files(undeclared)}")
+    // flat again, so the table takes appends
+    ManifestTable.append(rows, undeclared)
+    assert(ManifestTable.read(spark, undeclared).count() === 80)
+  }
+
   test("incremental gold state merges exactly, any way the facts are sliced") {
     val orders = Tables.orders(spark, sfTiny)
     val h1 = orders.filter(col("o_orderkey") % 3 === 0)

@@ -208,7 +208,7 @@ class RowTrackingSpec extends SparkSpec {
     assert(ManifestTable.currentVersion(spark, path).get === v1,
       "the rejected batch must not commit")
     assert(ManifestTable.read(spark, path).count() === 10)
-    // internal rewrites (unique ids) still pass through the guard
+    // a compaction carries the unique ids verbatim
     ManifestTable.compact(spark, path, targetFiles = 1)
     val ids = ManifestTable.readWithRowIds(spark, path)
       .select(col(ManifestTable.RowIdCol)).as[Long].collect()
