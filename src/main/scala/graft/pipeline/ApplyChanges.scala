@@ -107,10 +107,10 @@ object ApplyChanges {
     * APPLY CHANGES into a shredded-variant or otherwise generated
     * table composes transparently.
     *
-    * `target`, when supplied, is the ALREADY-READ target frame (the
-    * snapshot verb threads its diff read here, so ONE manifest
-    * resolve serves diff + schema + prune — a concurrent commit
-    * cannot split them).
+    * `target`, when supplied, is the ALREADY-RESOLVED target state with
+    * its frame (the snapshot verb threads its diff read here, so ONE
+    * manifest resolve serves diff + schema + prune — a concurrent
+    * commit cannot split them).
     *
     * Returns the committed version. */
   def applyScd1(spark: SparkSession, path: String, key: String,
@@ -119,23 +119,23 @@ object ApplyChanges {
                 tag: Option[String] = None,
                 truncateWhen: Option[String] = None,
                 schemaEvolution: Boolean = false,
-                target: Option[DataFrame] = None): Long = {
+                target: Option[(ManifestTable.TableState, DataFrame)] = None)
+      : Long = {
+    // ONE resolved target state serves the tag replay, the schema and
+    // generated-columns check and the late-prune gate below, so they
+    // cannot see different versions; snapshot callers thread the
+    // state their diff read
+    val st = target.fold(ManifestTable.currentState(spark, path))(_._1)
     // REPLAY fast path: an already-committed tag exits before ANY
     // work — critically BEFORE a truncate (a replayed truncate batch
     // must not re-wipe a table whose merge will then tag-no-op) and
     // before the prune scan
-    tag.flatMap(ManifestTable.committedVersionOfTag(spark, path, _))
-      .foreach(v => return v)
-    // the threaded target read serves the SCHEMA/generated-columns
-    // check only (the r16-era no-claim pre-join is gone — the prune
-    // now happens inside mergeMultiKeyed's clause compile); snapshot
-    // callers still thread their diff read here so diff and schema
-    // check share one manifest resolve
-    val dim = target.getOrElse(ManifestTable.read(spark, path))
+    tag.flatMap(st.tags.get).foreach(v => return v)
+    val dim = target.fold(ManifestTable.stateFrame(spark, path, st))(_._2)
     // generated columns recompute inside the commit from their
     // declarations — they are not business columns and a batch
     // carrying one would trip MERGE's no-assigning-generated rule
-    val genCols = ManifestTable.generatedColumns(spark, path).keySet
+    val genCols = st.generated.keySet
     val bizCols0 = dim.schema.fieldNames
       .filterNot(c => c == SeqCol || genCols.contains(c))
     require(bizCols0.forall(cdc.columns.contains),
@@ -246,10 +246,8 @@ object ApplyChanges {
     val latePruneMinFiles = spark.conf
       .getOption("spark.graft.applyChanges.latePruneMinFiles")
       .flatMap(_.toIntOption).getOrElse(64)
-    val dimFiles = ManifestTable.currentVersion(spark, path)
-      .map(v => ManifestTable.fileCountOf(spark, path, v)).getOrElse(0)
     val latest =
-      if (dimFiles < latePruneMinFiles) latest0
+      if (st.files.size < latePruneMinFiles) latest0
       else {
         val hw = dim.groupBy(col(key).as("_ac_hwk"))
           .agg(max(col(SeqCol)).as("_ac_hw"))
@@ -318,17 +316,29 @@ object ApplyChanges {
   def applyScd2(spark: SparkSession, path: String, key: String,
                 cdc: DataFrame, tracked: Seq[String], sequenceBy: String,
                 ts: Long, tag: Option[String] = None,
-                deleteWhen: Option[String] = None): Long = {
+                deleteWhen: Option[String] = None): Long =
+    applyScd2On(spark, path, ManifestTable.currentState(spark, path), None,
+      key, cdc, tracked, sequenceBy, ts, tag, deleteWhen)
+
+  /** [[applyScd2]] against the resolved target state `st`: one state
+    * serves the tag replay and the dimension read (`dim0`, when the
+    * caller already read it — the snapshot verb's diff read). */
+  private def applyScd2On(spark: SparkSession, path: String,
+                          st: ManifestTable.TableState,
+                          dim0: Option[DataFrame], key: String,
+                          cdc: DataFrame, tracked: Seq[String],
+                          sequenceBy: String, ts: Long,
+                          tag: Option[String],
+                          deleteWhen: Option[String]): Long = {
     // replay fast path: an already-committed tag skips the prune scan
     // too (the merge itself would no-op on the tag anyway)
-    tag.flatMap(ManifestTable.committedVersionOfTag(spark, path, _))
-      .foreach(v => return v)
+    tag.flatMap(st.tags.get).foreach(v => return v)
     // NULL-sequence guard BEFORE the reduction (same reading as SCD1:
     // a desc sort parks NULL last and silently discards the event
     // whenever the key has a non-NULL sibling — every NULL fails)
     val guarded = cdc.withColumn(sequenceBy, guardedSeq(cdc, sequenceBy))
     val latest = latestPerKey(guarded, key, sequenceBy, deleteWhen)
-    val dim = ManifestTable.read(spark, path)
+    val dim = dim0.getOrElse(ManifestTable.stateFrame(spark, path, st))
     val dimHasSeq = dim.schema.fieldNames.contains(SeqCol)
     require(tracked.nonEmpty, "SCD2 needs at least one tracked column")
     // ONE pass over the dimension serves BOTH per-batch questions
@@ -436,19 +446,20 @@ object ApplyChanges {
                             key: String, snapshot: DataFrame,
                             snapshotSeq: Long,
                             tag: Option[String] = None): Long = {
-    // ONE target read serves the diff AND (threaded through) the
-    // apply's schema/generated-columns check — a concurrent commit
-    // cannot split them onto different versions (the no-claim prune
-    // itself lives in mergeMultiKeyed's clause compile since r19)
-    val dim = ManifestTable.read(spark, path)
-    val genCols = ManifestTable.generatedColumns(spark, path).keySet
+    // ONE resolved target state serves the diff AND (threaded through)
+    // the apply's tag replay, schema/generated-columns check and
+    // late-prune gate — a concurrent commit cannot split them onto
+    // different versions (the no-claim prune itself lives in
+    // mergeMultiKeyed's clause compile since r19)
+    val st = ManifestTable.currentState(spark, path)
+    val dim = ManifestTable.stateFrame(spark, path, st)
     val bizCols = dim.schema.fieldNames
-      .filterNot(c => c == SeqCol || genCols.contains(c)).toSeq
+      .filterNot(c => c == SeqCol || st.generated.contains(c)).toSeq
     require(bizCols.forall(snapshot.columns.contains),
       s"snapshot must carry the business columns ${bizCols.mkString(",")}")
     val events = snapshotEvents(dim, snapshot, key, bizCols, snapshotSeq)
     applyScd1(spark, path, key, events, sequenceBy = "_snap_seq",
-      deleteWhen = Some("_snap_del"), tag = tag, target = Some(dim))
+      deleteWhen = Some("_snap_del"), tag = tag, target = Some((st, dim)))
   }
 
   /** APPLY CHANGES FROM SNAPSHOT, SCD TYPE 2: the same derived
@@ -461,18 +472,20 @@ object ApplyChanges {
                             key: String, snapshot: DataFrame,
                             tracked: Seq[String], snapshotSeq: Long,
                             ts: Long, tag: Option[String] = None): Long = {
-    val dim = ManifestTable.read(spark, path)
-    val genCols = ManifestTable.generatedColumns(spark, path).keySet
+    // one resolved target state serves the diff and (threaded
+    // through) the apply's tag replay and dimension read
+    val st = ManifestTable.currentState(spark, path)
+    val dim = ManifestTable.stateFrame(spark, path, st)
     val bizCols = dim.schema.fieldNames.filterNot(n =>
       n == SeqCol || n == Scd2.ValidFrom || n == Scd2.ValidTo ||
-        genCols.contains(n)).toSeq
+        st.generated.contains(n)).toSeq
     require(bizCols.forall(snapshot.columns.contains),
       s"snapshot must carry the business columns ${bizCols.mkString(",")}")
     // diff against the OPEN slice only — closed history is not part
     // of the key population a snapshot asserts
     val open = dim.filter(col(Scd2.ValidTo).isNull)
     val events = snapshotEvents(open, snapshot, key, bizCols, snapshotSeq)
-    applyScd2(spark, path, key, events, tracked,
+    applyScd2On(spark, path, st, Some(dim), key, events, tracked,
       sequenceBy = "_snap_seq", ts = ts, tag = tag,
       deleteWhen = Some("_snap_del"))
   }

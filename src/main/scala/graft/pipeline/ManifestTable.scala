@@ -19,9 +19,12 @@ import scala.util.control.NonFatal
   *     before it leaves only an orphaned snapshot directory no reader
   *     sees, and two racing writers cannot both win a version. Every
   *     verb publishes its version through the single transaction
-  *     function [[transact]] — base resolution, the writer-protocol
-  *     gate, the publish, the checkpoint and the OCC retry live there
-  *     once; a verb supplies only its attempt body;
+  *     function [[transact]] — base resolution, the replay-tag check,
+  *     the writer-protocol gate, the publish, the checkpoint and the
+  *     OCC retry live there once; a verb supplies only its attempt
+  *     body. A tagged verb's replay is answered from each attempt's
+  *     base, so a verb that loses its race to a replay of itself lands
+  *     once;
   *  3. since round 10 the committed manifest is an INCREMENTAL LOG
   *     ENTRY (the `_delta_log` shape, Delta paper VLDB 2020 §3): it
   *     records only the commit's `adds`/`removes` (+ per-add stats +
@@ -291,13 +294,6 @@ object ManifestTable {
 
   def currentVersion(spark: SparkSession, path: String): Option[Long] =
     versions(spark, path).lastOption
-
-  /** Data-file count of a committed version — driver-side metadata off
-    * the (LRU-cached) resolved state; no job. Scale gates (e.g. the
-    * APPLY CHANGES late-prune) key off it. */
-  private[graft] def fileCountOf(spark: SparkSession, path: String,
-                                 version: Long): Int =
-    resolveState(spark, path, version).files.size
 
   // ------------------------------------------------------------------
   // State resolution (checkpoint + delta replay, LRU-cached)
@@ -596,14 +592,24 @@ object ManifestTable {
 
   /** Read the table's current committed version. */
   def read(spark: SparkSession, path: String): DataFrame =
-    readVersion(spark, path,
-      currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path")))
+    stateFrame(spark, path, currentState(spark, path))
 
   /** Time travel: read an explicit committed version. */
-  def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val st = resolveState(spark, path, version)
-    require(st.files.nonEmpty, s"version $version at $path has no data files")
+  def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
+    stateFrame(spark, path, resolveState(spark, path, version))
+
+  /** The current version's resolved state — one root listing. A caller
+    * that needs several answers about the same version (its tags,
+    * generated columns, file count and rows) reads them all from it. */
+  private[graft] def currentState(spark: SparkSession,
+                                  path: String): TableState =
+    resolveState(spark, path, currentVersion(spark, path).getOrElse(
+      throw new IllegalStateException(s"no committed version at $path")))
+
+  /** The rows of a resolved state, as [[readVersion]] reads them. */
+  private[graft] def stateFrame(spark: SparkSession, path: String,
+                                st: TableState): DataFrame = {
+    require(st.files.nonEmpty, s"version ${st.version} at $path has no data files")
     readStateDf(spark, path, st)
   }
 
@@ -1556,14 +1562,17 @@ object ManifestTable {
              statsCols: Seq[String] = Nil, tag: Option[String] = None,
              tagHorizon: Int = DefaultTagHorizon,
              txn: Option[(String, Long)] = None): Long = {
-    require(partitionCols.isEmpty,
-      "append is unpartitioned by contract: a partitioned append would mix " +
-        "k=v and flat snapshot layouts under one basePath, which Spark's " +
-        "partition discovery rejects at read time")
+    requireFlatAppend(partitionCols)
     transact(df.sparkSession, path, "manifest", maxAttempts, None)(
       writeAttempt(_, df, partitionCols, statsCols, carryForward = true,
         tag = tag, tagHorizon = tagHorizon, txn = txn))
   }
+
+  private def requireFlatAppend(partitionCols: Seq[String]): Unit =
+    require(partitionCols.isEmpty,
+      "append is unpartitioned by contract: a partitioned append would mix " +
+        "k=v and flat snapshot layouts under one basePath, which Spark's " +
+        "partition discovery rejects at read time")
 
   /** The last committed writer-transaction version for `appId`
     * (Delta's `txnVersion(appId)` — the resume point an idempotent
@@ -1615,18 +1624,22 @@ object ManifestTable {
     * ever committed `tag` (within the tag horizon), the call is a no-op
     * returning that version. Replay protection SURVIVES [[vacuum]]: the
     * tag map rides the resolved state (carried into every checkpoint),
-    * so dropping old manifests never forgets a live tag. Idempotence is
-    * per serialized writer — the same boundary Delta's txn appId
-    * protocol draws.
+    * so dropping old manifests never forgets a live tag. The tag is
+    * checked inside [[transact]] on every attempt, so replays are safe
+    * under races too: an append that loses its race to a replay of the
+    * same tag returns that replay's version instead of appending again.
     */
   def appendIdempotent(df: DataFrame, path: String, tag: String,
                        partitionCols: Seq[String] = Nil,
                        statsCols: Seq[String] = Nil,
                        maxAttempts: Int = 3,
-                       tagHorizon: Int = DefaultTagHorizon): Long =
-    committedVersionOfTag(df.sparkSession, path, tag).getOrElse(
-      append(df, path, partitionCols, maxAttempts = maxAttempts,
-        statsCols = statsCols, tag = Some(tag), tagHorizon = tagHorizon))
+                       tagHorizon: Int = DefaultTagHorizon): Long = {
+    requireFlatAppend(partitionCols)
+    transact(df.sparkSession, path, "manifest", maxAttempts, None,
+        replayTag = Some(tag))(
+      writeAttempt(_, df, partitionCols, statsCols, carryForward = true,
+        tag = Some(tag), tagHorizon = tagHorizon))
+  }
 
   /** COPY INTO (Databricks/Delta's idempotent FILE-level ingest): load
     * every file under `sourceDir` matching `pattern` that the table
@@ -1796,11 +1809,8 @@ object ManifestTable {
     }
 
   /** The table's live GENERATED columns (name → SQL expression). */
-  def generatedColumns(spark: SparkSession, path: String): Map[String, String] = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    resolveState(spark, path, v).generated
-  }
+  def generatedColumns(spark: SparkSession, path: String): Map[String, String] =
+    currentState(spark, path).generated
 
   /** Declare a GENERATED column (Delta `GENERATED ALWAYS AS (expr)`):
     * every subsequent write/append/merge COMPUTES the column when the
@@ -2275,14 +2285,14 @@ object ManifestTable {
   private def buildBloomSidecar(spark: SparkSession, path: String,
                                 staged: Seq[Path], spec: BloomSpec,
                                 version: Long, token: String): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, element_at, input_file_name, lit, split}
+    import org.apache.spark.sql.functions.{col, lit}
     if (staged.isEmpty) return Nil
     val df = spark.read.parquet(staged.map(_.toString): _*)
     val present = spec.cols.filter(df.columns.contains)
     if (present.isEmpty) return Nil
     val perCol = present.map { c =>
       df.select(
-          element_at(split(input_file_name(), "/"), -1).as("_graft_bloom_file"),
+          col("_metadata.file_name").as("_graft_bloom_file"),
           col(c))
         .groupBy("_graft_bloom_file")
         .agg(graft.functions.BloomFileAgg.bloom(spark, col(c), spec.items,
@@ -2589,7 +2599,7 @@ object ManifestTable {
   private def buildNdvSidecar(spark: SparkSession, path: String,
                               staged: Seq[Path], cols: Seq[String],
                               version: Long, token: String): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, count, element_at, hll_sketch_agg, input_file_name, lit, split}
+    import org.apache.spark.sql.functions.{col, count, hll_sketch_agg, lit}
     if (staged.isEmpty) return Nil
     val df = spark.read.parquet(staged.map(_.toString): _*)
     val present = cols.filter(df.columns.contains)
@@ -2599,8 +2609,7 @@ object ManifestTable {
     // head-column coverage (an evolved append omitting one column
     // would otherwise silently shrink the count)
     val rowsEntry = df
-      .select(
-        element_at(split(input_file_name(), "/"), -1).as("_graft_ndv_file"))
+      .select(col("_metadata.file_name").as("_graft_ndv_file"))
       .groupBy("_graft_ndv_file")
       .agg(hll_sketch_agg(lit(1L)).as("_graft_ndv_sketch"),
         count(lit(1)).as("_graft_ndv_rows"))
@@ -2609,7 +2618,7 @@ object ManifestTable {
         "_graft_ndv_rows")
     val perCol = present.map { c =>
       df.select(
-          element_at(split(input_file_name(), "/"), -1).as("_graft_ndv_file"),
+          col("_metadata.file_name").as("_graft_ndv_file"),
           col(c))
         .groupBy("_graft_ndv_file")
         .agg(hll_sketch_agg(col(c)).as("_graft_ndv_sketch"),
@@ -3480,7 +3489,7 @@ object ManifestTable {
     *     keys skip the numeric prune ([[statsPrunable]]) — slower,
     *     never wrong.
     *  2. SEMI-JOIN CONFIRM (one distributed job over the SURVIVORS
-    *     only): scan candidates with `input_file_name`, broadcast-join
+    *     only): scan candidates with their file names, broadcast-join
     *     the update keys, collect the (file, key) matches — O(candidate
     *     bytes) scan, O(matched update keys) driver data, `Set`-based
     *     bookkeeping (no quadratic suffix scans).
@@ -3536,12 +3545,11 @@ object ManifestTable {
                  schemaEvolution: Boolean = false): Long = {
     val spark = updates.sparkSession
     validateMergeKeys(keys)
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
-      transact(spark, path, "merge", maxAttempts,
-          Some(s"no committed version at $path to merge into"))(
-        mergeAttempt(updates, _, keys, deleteCol, statsCols, tag,
-          tagHorizon, sortCols, deleteVectors,
-          schemaEvolution = schemaEvolution)))
+    transact(spark, path, "merge", maxAttempts,
+        Some(s"no committed version at $path to merge into"), tag)(
+      mergeAttempt(updates, _, keys, deleteCol, statsCols, tag,
+        tagHorizon, sortCols, deleteVectors,
+        schemaEvolution = schemaEvolution))
   }
 
   /** The merge-source broadcast gate in rows
@@ -3592,7 +3600,7 @@ object ManifestTable {
                            schemaEvolution: Boolean = false,
                            broadcastSource: Option[Boolean] = None)
       : Attempt = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, input_file_name, lit, split, when, max => smax, min => smin}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, when, max => smax, min => smin}
     import t.{f, path, spark, st, version}
     // MATERIALIZE the source once per attempt (eager local checkpoint,
     // lineage truncated — see mergeMultiKeyed's source note): the body
@@ -3740,9 +3748,8 @@ object ManifestTable {
     val hits: Option[DataFrame] =
       if (candidates.isEmpty) None
       else {
-        val h = readFilesMapped(spark, path, st, candidates)
-          .select(element_at(split(input_file_name(), "/"), -1)
-            .as("_graft_f") +: keyCols: _*)
+        val h = readFilesMapped(spark, path, st, candidates, fileName = true)
+          .select(col(FileNameCol).as("_graft_f") +: keyCols: _*)
           .join(maybeBc(keyFlags), keys, "inner")
         Some(if (deleteVectors) h.cache() else h)
       }
@@ -4044,110 +4051,164 @@ object ManifestTable {
     val spark = updates.sparkSession
     validateMergeKeys(keys)
     val keyCols = keys.map(col)
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse {
-      require(matched.nonEmpty || notMatched.nonEmpty ||
-          notMatchedBySource.nonEmpty,
-        "merge needs at least one WHEN clause")
-      // BY SOURCE clauses act on TARGET rows with no source match —
-      // there is no source row, so UPDATE needs explicit assignments
-      // (Delta's own restriction) and conditions/expressions may only
-      // reference `_b_<col>` target columns
-      notMatchedBySource.collect { case u: MergeUpdate => u }.foreach(u =>
-        require(u.set.nonEmpty,
-          "WHEN NOT MATCHED BY SOURCE THEN UPDATE needs explicit SET " +
-            "assignments — there is no source row to take an image from"))
-      // BY SOURCE conditions and SET expressions may reference TARGET
-      // columns only (`_b_<col>`): there is no source row. Validated
-      // up front — against a probe frame carrying exactly the `_b_`
-      // columns — so BOTH size-gated strategies agree: a bare source
-      // reference would throw AnalysisException in the broadcast
-      // anti-join path (source columns absent from that frame) but
-      // silently evaluate to NULL in the fused full-outer path (the
-      // condition reads false, an update writes NULL). Delta refuses
-      // source references in by-source clauses at analysis; so do we.
-      // Zero-row ANALYSIS probe (no job, no data read): expressions
-      // resolve against null columns shaped like the merge's resolved
-      // frame — `src` columns bare, the target's as `_b_<col>`.
-      def analyzeOn(target: StructType, src: Seq[StructField],
-                    exprs: Seq[Column]): Unit = {
-        val probe = spark.range(1).select(
-          (src.map(fd => lit(null).cast(fd.dataType).as(fd.name)) ++
-            target.fields.map(fd =>
-              lit(null).cast(fd.dataType).as(s"_b_${fd.name}"))): _*)
-        exprs.foreach(e => probe.select(e).queryExecution.analyzed)
+    require(matched.nonEmpty || notMatched.nonEmpty ||
+        notMatchedBySource.nonEmpty,
+      "merge needs at least one WHEN clause")
+    // BY SOURCE clauses act on TARGET rows with no source match —
+    // there is no source row, so UPDATE needs explicit assignments
+    // (Delta's own restriction) and conditions/expressions may only
+    // reference `_b_<col>` target columns
+    notMatchedBySource.collect { case u: MergeUpdate => u }.foreach(u =>
+      require(u.set.nonEmpty,
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE needs explicit SET " +
+          "assignments — there is no source row to take an image from"))
+    notMatchedBySource.dropRight(1).foreach(c =>
+      require(c.condition.isDefined,
+        "a WHEN NOT MATCHED BY SOURCE clause without a condition must " +
+          "be the last on its side — later clauses are unreachable"))
+    // Delta's reachability rule: anything after an unconditional
+    // clause on the same match side can never fire
+    matched.dropRight(1).foreach(c => require(c.condition.isDefined,
+      "a WHEN MATCHED clause without a condition must be the last " +
+        "matched clause — later matched clauses are unreachable"))
+    notMatched.dropRight(1).foreach(c => require(c.condition.isDefined,
+      "a WHEN NOT MATCHED clause without a condition must be the " +
+        "last insert clause — later insert clauses are unreachable"))
+    val updClauses = matched.collect { case u: MergeUpdate => u }
+    val bySourceSets =
+      notMatchedBySource.collect { case u: MergeUpdate => u }.flatMap(_.set)
+    // Zero-row ANALYSIS probe (no job, no data read): expressions
+    // resolve against a frame shaped like the merge's resolved frame —
+    // the source's own columns (alias qualifiers kept, so SQL's
+    // `src.col` resolves as it does in the join), the target's as null
+    // `_b_<col>` columns.
+    def analyzeOn(target: StructType, src: Option[DataFrame],
+                  exprs: Seq[Column]): Unit = {
+      val targetCols = target.fields.map(fd =>
+        lit(null).cast(fd.dataType).as(s"_b_${fd.name}")).toSeq
+      val probe = src.fold(spark.range(1).select(targetCols: _*))(s =>
+        s.limit(0).select(s.columns.map(col).toSeq ++ targetCols: _*))
+      exprs.foreach(e => probe.select(e).queryExecution.analyzed)
+    }
+    def exprsOf(cl: MergeMatched): Seq[Column] =
+      cl.condition.toSeq ++ (cl match {
+        case u: MergeUpdate => u.set.map(_._2)
+        case _              => Nil
+      })
+    /** Clause validation against one attempt's base `st` (its logical
+      * `schema`), shared by the empty-source and the full path so a
+      * clause error never depends on whether the batch is empty. All
+      * driver-only. `targetable` is the schema SET/INSERT may assign
+      * (the evolved one under schema evolution).
+      *
+      * A SET may not reassign a merge KEY column — the keyed
+      * copy-on-write addresses base rows by key equality, so a
+      * re-keyed image would orphan the old row instead of replacing it
+      * (rewrite through delete + insert instead). The TRIVIAL
+      * re-assignments tooling emits — `SET k = s.k` (the source key,
+      * equal to the base key by the ON clause) and `SET k = t.k` (the
+      * base value, `_b_k` here) — are no-ops Delta accepts. In BY
+      * SOURCE clauses there IS no source row — bare `s.k` reads NULL
+      * on base-only rows, so only the base spelling (`t.k` = `_b_k`)
+      * is a no-op there.
+      *
+      * GENERATED columns may not be assigned by any clause (Delta's
+      * rule): they recompute from their declaration over the final
+      * image — a hand-assigned value could silently disagree with it.
+      *
+      * BY SOURCE conditions and SET expressions may reference TARGET
+      * columns only (`_b_<col>`): there is no source row. Checked
+      * against a probe carrying exactly the `_b_` columns, so BOTH
+      * size-gated strategies agree: a bare source reference would
+      * throw in the broadcast anti-join path but silently read NULL in
+      * the fused full-outer path. Delta refuses source references in
+      * by-source clauses at analysis; so do we. */
+    def checkClauses(st: TableState, schema: StructType,
+                     targetable: Seq[String], src: DataFrame): Unit = {
+      def checkReKey(set: Seq[(String, Column)],
+                     okSpellings: String => Set[String]): Unit =
+        set.foreach { case (c, e) =>
+          val trivialNoOp = org.apache.spark.sql.graftshim.PlanShim
+            .bareAttribute(e).exists(parts =>
+              parts.lastOption.exists(okSpellings(c)))
+          require(!keys.contains(c) || trivialNoOp,
+            s"MERGE UPDATE SET cannot re-key merge key column " +
+              s"'$c' — the keyed copy-on-write addresses rows by " +
+              "key equality; express a re-key as DELETE + INSERT") }
+      checkReKey(updClauses.flatMap(_.set), c => Set(c, s"_b_$c"))
+      checkReKey(bySourceSets, c => Set(s"_b_$c"))
+      val assigned = updClauses.flatMap(_.set).map(("MERGE UPDATE SET", _)) ++
+        notMatched.flatMap(_.values).map(("MERGE INSERT", _)) ++
+        bySourceSets.map(("MERGE UPDATE SET", _))
+      assigned.foreach { case (what, (c, _)) =>
+        require(!st.generated.contains(c),
+          s"MERGE cannot assign generated column '$c' — it " +
+            s"recomputes from its declaration " +
+            s"(${st.generated.getOrElse(c, "")})")
+        require(targetable.contains(c), s"$what targets unknown column '$c'")
       }
-      def exprsOf(cl: MergeMatched): Seq[Column] =
-        cl.condition.toSeq ++ (cl match {
-          case u: MergeUpdate => u.set.map(_._2)
-          case _              => Nil
-        })
-      if (notMatchedBySource.nonEmpty) {
-        val curV = currentVersion(spark, path).getOrElse(
-          throw new IllegalStateException(
-            s"no committed version at $path to merge into"))
-        val st0 = resolveState(spark, path, curV)
-        val schema0 =
-          st0.schema.getOrElse(readStateDf(spark, path, st0).schema)
-        try analyzeOn(schema0, Nil, notMatchedBySource.flatMap(exprsOf))
-        catch {
-          case ex: org.apache.spark.sql.AnalysisException =>
-            throw new IllegalArgumentException(
-              "WHEN NOT MATCHED BY SOURCE conditions and SET " +
-                "expressions may only reference TARGET columns — " +
-                "by-source clauses act on target rows with NO " +
-                "source match (engine API: `_b_<col>`; SQL: " +
-                s"qualify with the target alias). ${ex.getMessage}")
-        }
+      analyzeOn(schema, Some(src),
+        matched.flatMap(exprsOf) ++ residual.toSeq ++ notMatched
+          .flatMap(cl => cl.condition.toSeq ++ cl.values.map(_._2)))
+      try analyzeOn(schema, None, notMatchedBySource.flatMap(exprsOf))
+      catch {
+        case ex: org.apache.spark.sql.AnalysisException =>
+          throw new IllegalArgumentException(
+            "WHEN NOT MATCHED BY SOURCE conditions and SET " +
+              "expressions may only reference TARGET columns — " +
+              "by-source clauses act on target rows with NO " +
+              "source match (engine API: `_b_<col>`; SQL: " +
+              s"qualify with the target alias). ${ex.getMessage}")
       }
-      notMatchedBySource.dropRight(1).foreach(c =>
-        require(c.condition.isDefined,
-          "a WHEN NOT MATCHED BY SOURCE clause without a condition must " +
-            "be the last on its side — later clauses are unreachable"))
-      // MATERIALIZE the merge SOURCE for the whole merge (optimization
-      // round 20): it is consumed by up to four separate actions — the
-      // key-stats aggregate below, the broadcast-pairs build, the
-      // source-only anti-join (or the fused full-outer's source side),
-      // and the compiled frame's fill. Unpinned, EACH consumer re-ran
-      // the source's whole plan — and a CDC apply's source embeds a
-      // dimension scan + join (SCD2's change-detection join, the
-      // snapshot verb's full-outer diff), so every extra evaluation
-      // was a full dimension pass. An EAGER LOCAL CHECKPOINT (delta-
-      // spark's own merge-source materialization) beats a persist()
-      // here: besides single evaluation it TRUNCATES the lineage, so
-      // every downstream action analyzes a shallow RDD scan instead of
-      // re-walking the whole CDC plan through Catalyst (~10 actions ×
-      // deep plan per merge — measured driver-gap cost). It also makes
-      // the key-stats (uniqueness + bounds) provably consistent with
-      // the rows later attempts resolve: a non-deterministic source
-      // CANNOT yield different rows to a retry. MEMORY_AND_DISK blocks
-      // (spill, not OOM, at any source size), released win or lose via
-      // the shim's explicit unpersist; skipped when the caller already
-      // pinned or materialized. Trade-off vs persist: lost blocks fail
-      // the job instead of recomputing — the contract delta accepts
-      // for merge sources (and strictly better for non-deterministic
-      // ones, where silent recompute is a correctness bug).
-      val ownSrcPin =
-        updates.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
-          !org.apache.spark.sql.graftshim.PlanShim.isMaterializedRdd(updates)
-      val (srcMat, releaseSrc) =
-        if (ownSrcPin)
-          org.apache.spark.sql.graftshim.PlanShim
-            .localCheckpointReleasable(updates)
-        else (updates, () => ())
-      try {
-      // every body reference below binds to the materialized frame
-      val updates = srcMat
-      // ONE source job answers four questions (key-uniqueness, the
-      // by-source fuse gate, the broadcast gate, and — fused in
-      // optimization round 19 — the per-key-column MIN/MAX bounds the
-      // per-attempt base prune needs, which used to be its own
-      // aggregate pass over the source inside the retry loop).
-      // NULL-keyed source rows are EXCLUDED from the uniqueness check
-      // (SQL join semantics: they can never match a target row, so
-      // several of them are never ambiguous — they just insert); they
-      // still count toward the size gates. min/max over the distinct
-      // key rollup equal min/max over the raw rows exactly (and both
-      // ignore NULLs).
+    }
+    // MATERIALIZE the merge SOURCE for the whole merge (optimization
+    // round 20): it is consumed by up to four separate actions — the
+    // key-stats aggregate below, the broadcast-pairs build, the
+    // source-only anti-join (or the fused full-outer's source side),
+    // and the compiled frame's fill. Unpinned, EACH consumer re-ran
+    // the source's whole plan — and a CDC apply's source embeds a
+    // dimension scan + join (SCD2's change-detection join, the
+    // snapshot verb's full-outer diff), so every extra evaluation
+    // was a full dimension pass. An EAGER LOCAL CHECKPOINT (delta-
+    // spark's own merge-source materialization) beats a persist()
+    // here: besides single evaluation it TRUNCATES the lineage, so
+    // every downstream action analyzes a shallow RDD scan instead of
+    // re-walking the whole CDC plan through Catalyst (~10 actions ×
+    // deep plan per merge — measured driver-gap cost). It also makes
+    // the key-stats (uniqueness + bounds) provably consistent with
+    // the rows later attempts resolve: a non-deterministic source
+    // CANNOT yield different rows to a retry. MEMORY_AND_DISK blocks
+    // (spill, not OOM, at any source size), released win or lose via
+    // the shim's explicit unpersist; skipped when the caller already
+    // pinned or materialized. Trade-off vs persist: lost blocks fail
+    // the job instead of recomputing — the contract delta accepts
+    // for merge sources (and strictly better for non-deterministic
+    // ones, where silent recompute is a correctness bug).
+    // Lazy: the first attempt that is not a tag replay materializes
+    // it, so a replay returns before any source work.
+    var releaseSrc: () => Unit = () => ()
+    lazy val srcMat: DataFrame =
+      if (updates.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+          org.apache.spark.sql.graftshim.PlanShim.isMaterializedRdd(updates))
+        updates
+      else {
+        val (m, release) = org.apache.spark.sql.graftshim.PlanShim
+          .localCheckpointReleasable(updates)
+        releaseSrc = release
+        m
+      }
+    // ONE source job answers four questions (key-uniqueness, the
+    // by-source fuse gate, the broadcast gate, and — fused in
+    // optimization round 19 — the per-key-column MIN/MAX bounds the
+    // per-attempt base prune needs, which used to be its own
+    // aggregate pass over the source inside the retry loop).
+    // NULL-keyed source rows are EXCLUDED from the uniqueness check
+    // (SQL join semantics: they can never match a target row, so
+    // several of them are never ambiguous — they just insert); they
+    // still count toward the size gates. min/max over the distinct
+    // key rollup equal min/max over the raw rows exactly (and both
+    // ignore NULLs). Run once, by the first non-replay attempt.
+    lazy val keyStats: Row = {
       val keyNotNull = keys.map(k => col(k).isNotNull).reduce(_ && _)
       val keyStatsAggs =
         Seq(coalesce(smax(when(col("_nn"), col("count"))), lit(0L))
@@ -4156,54 +4217,53 @@ object ManifestTable {
             org.apache.spark.sql.functions.sum(col("count")), lit(0L))
             .as("_n")) ++
           keys.flatMap(k => Seq(smin(col(k)), smax(col(k))))
-      val keyStats = updates.groupBy(keyCols: _*)
+      val row = srcMat.groupBy(keyCols: _*)
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("count"),
           smax(keyNotNull).as("_nn"))
         .agg(keyStatsAggs.head, keyStatsAggs.tail: _*)
         .head()
-      require(keyStats.getLong(0) <= 1L,
+      require(row.getLong(0) <= 1L,
         "conditional merge requires key-unique updates on " +
           s"'${keys.mkString(",")}' — multiple source rows match the " +
           "same target row (ambiguous clauses)")
-      val srcRows = keyStats.getLong(1)
-      // Delta's reachability rule: anything after an unconditional
-      // clause on the same match side can never fire
-      matched.dropRight(1).foreach(c => require(c.condition.isDefined,
-        "a WHEN MATCHED clause without a condition must be the last " +
-          "matched clause — later matched clauses are unreachable"))
-      notMatched.dropRight(1).foreach(c => require(c.condition.isDefined,
-        "a WHEN NOT MATCHED clause without a condition must be the " +
-          "last insert clause — later insert clauses are unreachable"))
-      val updClauses = matched.collect { case u: MergeUpdate => u }
-      // Delta's WITH SCHEMA EVOLUTION covers BOTH forms: star clauses
-      // (UPDATE SET * / INSERT *) evolve by the source's additive
-      // columns, and explicit assignment lists evolve by the columns
-      // they ASSIGN that the target lacks (`UPDATE SET t.newcol = ...`
-      // adds `newcol`) — the evolved set is computed per-attempt below
-      // once the committed schema is known.
-      val hasBySource = notMatchedBySource.nonEmpty
-      // By-source resolution strategy, sized to the SOURCE:
-      //  - a broadcastable source resolves base-only rows through a
-      //    broadcast ANTI join — ZERO base exchange, the right call
-      //    when a small tombstone/sync list meets a huge table;
-      //  - past the gate that two-join shape would hash-exchange the
-      //    full base TWICE (resolve + anti; measured 372× shuffle at
-      //    100× input in the r14 probe), so it flips to ONE
-      //    full-outer join — one base exchange, linear thereafter.
-      // Gate override: spark.graft.bySourceBroadcastRows. Depends only
-      // on the SOURCE, so it is decided ONCE, outside the OCC retry
-      // loop; the gate clamps to the probe's addressable range (a gate
-      // past Int.MaxValue-1 rows means "never fuse" and must not
-      // overflow into a negative limit).
-      val fused = hasBySource && srcRows > {
-        spark.conf.getOption("spark.graft.bySourceBroadcastRows")
-          .flatMap(_.toLongOption).getOrElse(BySourceBroadcastMaxRows)
-          .max(0L)
-      }
-      // the downstream keyed copy-on-write sizes ITS joins to the
-      // source too (confirm scan / row-id / carry) — independent gate,
-      // same fused source-stats job
-      val bcSource = srcRows <= mergeGateRows(spark)
+      row
+    }
+    lazy val srcRows = keyStats.getLong(1)
+    // Delta's WITH SCHEMA EVOLUTION covers BOTH forms: star clauses
+    // (UPDATE SET * / INSERT *) evolve by the source's additive
+    // columns, and explicit assignment lists evolve by the columns
+    // they ASSIGN that the target lacks (`UPDATE SET t.newcol = ...`
+    // adds `newcol`) — the evolved set is computed per-attempt below
+    // once the committed schema is known.
+    val hasBySource = notMatchedBySource.nonEmpty
+    // By-source resolution strategy, sized to the SOURCE:
+    //  - a broadcastable source resolves base-only rows through a
+    //    broadcast ANTI join — ZERO base exchange, the right call
+    //    when a small tombstone/sync list meets a huge table;
+    //  - past the gate that two-join shape would hash-exchange the
+    //    full base TWICE (resolve + anti; measured 372× shuffle at
+    //    100× input in the r14 probe), so it flips to ONE
+    //    full-outer join — one base exchange, linear thereafter.
+    // Gate override: spark.graft.bySourceBroadcastRows. Depends only
+    // on the SOURCE, so it is decided ONCE, outside the OCC retry
+    // loop; the gate clamps to the probe's addressable range (a gate
+    // past Int.MaxValue-1 rows means "never fuse" and must not
+    // overflow into a negative limit).
+    lazy val fused = hasBySource && srcRows > {
+      spark.conf.getOption("spark.graft.bySourceBroadcastRows")
+        .flatMap(_.toLongOption).getOrElse(BySourceBroadcastMaxRows)
+        .max(0L)
+    }
+    // the downstream keyed copy-on-write sizes ITS joins to the
+    // source too (confirm scan / row-id / carry) — independent gate,
+    // same fused source-stats job
+    lazy val bcSource = srcRows <= mergeGateRows(spark)
+    try transact(spark, path, "conditional merge", maxAttempts,
+        Some(s"no committed version at $path to merge into"), tag) { t =>
+      // every body reference below binds to the materialized frame
+      val updates = srcMat
+      val st = t.st
+      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
       // EMPTY-SOURCE fast path (optimization round 20): zero source
       // rows with no BY SOURCE clauses and no schema evolution means
       // the compiled frame is empty by construction — the resolution
@@ -4218,50 +4278,12 @@ object ManifestTable {
       // caller. BY SOURCE merges can act on target rows with zero
       // source rows and schema evolution evolves the schema from the
       // source's COLUMNS even when empty, so both keep the full path.
-      if (srcRows == 0L && !hasBySource && !schemaEvolution)
-        transact(spark, path, "conditional merge", maxAttempts,
-            Some(s"no committed version at $path to merge into")) { t =>
-          val st = t.st
-          val schema =
-            st.schema.getOrElse(readStateDf(spark, path, st).schema)
-          // fail-fast PARITY with the full path (all driver-only):
-          // clause errors must not depend on whether the batch happens
-          // to be empty — a typo'd SET target or clause expression, a
-          // generated-column assignment or a re-keying SET fails here
-          // exactly as it would on the first non-empty batch
-          val setsAndValues =
-            matched.collect { case u: MergeUpdate => u }.flatMap(_.set)
-              .map(("MERGE UPDATE SET", _)) ++
-            notMatched.flatMap(_.values).map(("MERGE INSERT", _))
-          setsAndValues.foreach { case (what, (c, _)) =>
-            require(schema.fieldNames.contains(c),
-              s"$what targets unknown column '$c'")
-            require(!st.generated.contains(c),
-              s"MERGE cannot assign generated column '$c' — it " +
-                s"recomputes from its declaration " +
-                s"(${st.generated.getOrElse(c, "")})")
-          }
-          matched.collect { case u: MergeUpdate => u }.flatMap(_.set)
-            .foreach { case (c, e) =>
-              val trivialNoOp = org.apache.spark.sql.graftshim.PlanShim
-                .bareAttribute(e).exists(parts =>
-                  parts.lastOption.exists(Set(c, s"_b_$c")))
-              require(!keys.contains(c) || trivialNoOp,
-                s"MERGE UPDATE SET cannot re-key merge key column " +
-                  s"'$c' — the keyed copy-on-write addresses rows by " +
-                  "key equality; express a re-key as DELETE + INSERT")
-            }
-          analyzeOn(schema, updates.schema.fields.toSeq,
-            matched.flatMap(exprsOf) ++ residual.toSeq ++ notMatched
-              .flatMap(cl => cl.condition.toSeq ++ cl.values.map(_._2)))
-          Publish(deltaJson(t.version, t.ts, tag = tag,
-              tagHorizon = tagHorizon, schema = Some(schema),
-              mergeKey = Some(keys.mkString(","))), autoCompact = true)
-        }
-      else transact(spark, path, "conditional merge", maxAttempts,
-          Some(s"no committed version at $path to merge into")) { t =>
-        val st = t.st
-        val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+      if (srcRows == 0L && !hasBySource && !schemaEvolution) {
+        checkClauses(st, schema, schema.fieldNames, updates)
+        Publish(deltaJson(t.version, t.ts, tag = tag,
+            tagHorizon = tagHorizon, schema = Some(schema),
+            mergeKey = Some(keys.mkString(","))), autoCompact = true)
+      } else {
         // match-state resolution over the pruned base slice, PINNED to
         // the base. BY SOURCE semantics inspect EVERY target row, so the
         // base-only side cannot prune to the update-key range; without
@@ -4428,50 +4450,6 @@ object ManifestTable {
         val bsDel = notMatchedBySource.zip(bsClaims)
           .collect { case (_: MergeDelete, cl) => cl }
           .reduceOption(_ || _).getOrElse(lit(false))
-        // assignment targets must exist (fail fast, not at scan time);
-        // a SET may not reassign a merge KEY column — the keyed
-        // copy-on-write addresses base rows by key equality, so a
-        // re-keyed image would orphan the old row instead of replacing
-        // it (rewrite through delete + insert instead)
-        // the TRIVIAL re-assignments tooling emits — `SET k = s.k`
-        // (the source key, equal to the base key by the ON clause)
-        // and `SET k = t.k` (the base value, `_b_k` here) — are
-        // no-ops Delta accepts; only genuinely RE-KEYING
-        // expressions are refused (the keyed copy-on-write
-        // addresses base rows by key equality, so a re-keyed
-        // image would orphan the old row instead of replacing it).
-        // In BY SOURCE clauses there IS no source row — bare `s.k`
-        // reads NULL on base-only rows, so only the base spelling
-        // (`t.k` = `_b_k`) is a no-op there; `SET k = s.k` would
-        // null the key and orphan the row, and stays refused.
-        def checkReKey(set: Seq[(String, Column)],
-                       okSpellings: String => Set[String]): Unit =
-          set.foreach { case (c, e) =>
-            val trivialNoOp = org.apache.spark.sql.graftshim.PlanShim
-              .bareAttribute(e).exists(parts =>
-                parts.lastOption.exists(okSpellings(c)))
-            require(!keys.contains(c) || trivialNoOp,
-              s"MERGE UPDATE SET cannot re-key merge key column " +
-                s"'$c' — the keyed copy-on-write addresses rows by " +
-                "key equality; express a re-key as DELETE + INSERT") }
-        checkReKey(updClauses.flatMap(_.set),
-          c => Set(c, s"_b_$c"))
-        checkReKey(notMatchedBySource
-          .collect { case u: MergeUpdate => u }.flatMap(_.set),
-          c => Set(s"_b_$c"))
-        // GENERATED columns may not be assigned by any clause (Delta's
-        // rule): they recompute from their declaration over the final
-        // image (genFill below) — a hand-assigned value could silently
-        // disagree with it (for variant shreds, the exact
-        // wrong-answer-shaped seam the generated-column gate closed)
-        (updClauses.flatMap(_.set) ++ notMatched.flatMap(_.values) ++
-          notMatchedBySource.collect { case u: MergeUpdate => u }
-            .flatMap(_.set)).foreach { case (c, _) =>
-          require(!st.generated.contains(c),
-            s"MERGE cannot assign generated column '$c' — it " +
-              s"recomputes from its declaration " +
-              s"(${st.generated.getOrElse(c, "")})")
-        }
         // Per-clause image compilation (delta-spark's `SET c = expr` /
         // `INSERT (cols) VALUES (exprs)` forms): an assigned column
         // takes its expression (source columns bare, matched base row
@@ -4533,20 +4511,10 @@ object ManifestTable {
               })
             }
           }
-        // assignment targets must exist in the (possibly evolved)
-        // schema — under evolution an unknown target BECOMES a new
-        // column by construction, so this fails fast only without it
-        val targetable = evolvedSchema.fieldNames
-        updClauses.flatMap(_.set).foreach { case (c, _) =>
-          require(targetable.contains(c),
-            s"MERGE UPDATE SET targets unknown column '$c'") }
-        notMatched.flatMap(_.values).foreach { case (c, _) =>
-          require(targetable.contains(c),
-            s"MERGE INSERT targets unknown column '$c'") }
-        notMatchedBySource.collect { case u: MergeUpdate => u }
-          .flatMap(_.set).foreach { case (c, _) =>
-            require(targetable.contains(c),
-              s"MERGE UPDATE SET targets unknown column '$c'") }
+        // clause validation against this attempt's base — under
+        // evolution an unknown SET/INSERT target BECOMES a new column
+        // by construction, so it fails fast only without it
+        checkClauses(st, schema, evolvedSchema.fieldNames, updates)
         val imageNames = evolvedSchema.fieldNames.toSeq
         val srcHas: Set[String] = updates.columns.toSet
         def imgType(c: String) =
@@ -4932,10 +4900,7 @@ object ManifestTable {
           releasePairs()
         }
       }
-      } finally {
-        releaseSrc()
-      }
-    }
+    } finally releaseSrc()
   }
 
   /** Single-clause-per-kind conditional MERGE — the pre-multi-clause
@@ -5012,36 +4977,34 @@ object ManifestTable {
                   tagHorizon: Int = DefaultTagHorizon): Long = {
     import org.apache.spark.sql.functions.{col, when}
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse {
-      rewriteWhere(spark, path, cond, op = "UPDATE",
-        statsCols, maxAttempts, tag, tagHorizon,
-        transform = (df, st) => {
-          set.foreach { case (c, _) =>
-            require(!st.generated.contains(c),
-              s"cannot UPDATE generated column '$c' — it recomputes from " +
-                s"its declaration (${st.generated.getOrElse(c, "")})")
-            require(df.schema.fieldNames.contains(c),
-              s"UPDATE SET targets unknown column '$c'")
-          }
-          // Every RHS evaluates against the OLD row (SQL semantics —
-          // `SET a = b, b = a` swaps): stage all values into temp
-          // columns first, then overwrite. Staging happens BEFORE the
-          // generated columns strip, so both the WHERE predicate and a
-          // SET RHS may reference a generated column (Delta permits
-          // both); generatedGuard then recomputes the generated values
-          // from the updated sources.
-          val staged = set.foldLeft(df) { case (d, (c, e)) =>
-            d.withColumn(s"_graft_set_$c",
-              when(cond, e.cast(df.schema(c).dataType)).otherwise(col(c)))
-          }
-          val stripped = st.generated.keys.foldLeft(staged)(_ drop _)
-          val updated = set.foldLeft(stripped) { case (d, (c, _)) =>
-            d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
-          }
-          constraintGuard(generatedGuard(updated, st.generated),
-            st.constraints)
-        })
-    }
+    rewriteWhere(spark, path, cond, op = "UPDATE",
+      statsCols, maxAttempts, tag, tagHorizon,
+      transform = (df, st) => {
+        set.foreach { case (c, _) =>
+          require(!st.generated.contains(c),
+            s"cannot UPDATE generated column '$c' — it recomputes from " +
+              s"its declaration (${st.generated.getOrElse(c, "")})")
+          require(df.schema.fieldNames.contains(c),
+            s"UPDATE SET targets unknown column '$c'")
+        }
+        // Every RHS evaluates against the OLD row (SQL semantics —
+        // `SET a = b, b = a` swaps): stage all values into temp
+        // columns first, then overwrite. Staging happens BEFORE the
+        // generated columns strip, so both the WHERE predicate and a
+        // SET RHS may reference a generated column (Delta permits
+        // both); generatedGuard then recomputes the generated values
+        // from the updated sources.
+        val staged = set.foldLeft(df) { case (d, (c, e)) =>
+          d.withColumn(s"_graft_set_$c",
+            when(cond, e.cast(df.schema(c).dataType)).otherwise(col(c)))
+        }
+        val stripped = st.generated.keys.foldLeft(staged)(_ drop _)
+        val updated = set.foldLeft(stripped) { case (d, (c, _)) =>
+          d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
+        }
+        constraintGuard(generatedGuard(updated, st.generated),
+          st.constraints)
+      })
   }
 
   /** Predicate DELETE (Delta `DELETE FROM tbl WHERE cond`) — keyless
@@ -5056,11 +5019,9 @@ object ManifestTable {
                   tag: Option[String] = None,
                   tagHorizon: Int = DefaultTagHorizon): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse {
-      rewriteWhere(spark, path, cond, op = "DELETE",
-        statsCols, maxAttempts, tag, tagHorizon,
-        transform = (df, _) => df.filter(!coalesce(cond, lit(false))))
-    }
+    rewriteWhere(spark, path, cond, op = "DELETE",
+      statsCols, maxAttempts, tag, tagHorizon,
+      transform = (df, _) => df.filter(!coalesce(cond, lit(false))))
   }
 
   /** Selective overwrite (Delta's `replaceWhere` /
@@ -5087,40 +5048,35 @@ object ManifestTable {
                      statsCols: Seq[String] = Nil, maxAttempts: Int = 3,
                      tag: Option[String] = None,
                      tagHorizon: Int = DefaultTagHorizon): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val spark = batch.sparkSession
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse {
-      val prevV = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version at $path to overwrite into"))
-      val st = resolveState(spark, path, prevV)
-      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-      // the batch must carry exactly the table columns, except that
-      // GENERATED columns may be omitted — they recompute in the guard
-      // (the write/append contract)
-      val rwMissing = schema.fieldNames.filterNot(batch.columns.contains)
-      require(rwMissing.forall(st.generated.contains) &&
-          batch.schema.fieldNames.sorted.toSeq ==
-            schema.fieldNames.filterNot(rwMissing.contains).sorted.toSeq,
-        s"replaceWhere batch columns ${batch.schema.fieldNames.mkString("(", ",", ")")} " +
-          s"must carry exactly the table columns ${schema.fieldNames.mkString("(", ",", ")")}" +
-          " (generated columns may be omitted)")
-      val offenders = batch.filter(!coalesce(cond, lit(false))).count()
-      require(offenders == 0L,
-        s"replaceWhere batch violates its own predicate: $offenders rows " +
-          "do not satisfy the WHERE condition (Delta's replaceWhere rule)")
-      val guarded = constraintGuard(
-        generatedGuard(batch.select(schema.fieldNames
-          .filterNot(rwMissing.contains).map(
-            org.apache.spark.sql.functions.col).toSeq: _*), st.generated),
-        st.constraints)
-        .select(schema.fieldNames.map(
-          org.apache.spark.sql.functions.col).toSeq: _*)
-      rewriteWhere(spark, path, cond, op = "REPLACE_WHERE",
-        statsCols, maxAttempts, tag, tagHorizon,
-        transform = (df, _) => df.filter(!coalesce(cond, lit(false))),
-        extra = Some(guarded))
-    }
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    // the batch-satisfies-predicate rule does not depend on the base:
+    // counted once, by the first attempt that is not a tag replay
+    lazy val offenders = batch.filter(!coalesce(cond, lit(false))).count()
+    rewriteWhere(batch.sparkSession, path, cond, op = "REPLACE_WHERE",
+      statsCols, maxAttempts, tag, tagHorizon,
+      transform = (df, _) => df.filter(!coalesce(cond, lit(false))),
+      extra = Some { (st, schema) =>
+        require(offenders == 0L,
+          s"replaceWhere batch violates its own predicate: $offenders rows " +
+            "do not satisfy the WHERE condition (Delta's replaceWhere rule)")
+        // the batch must carry exactly the table columns, except that
+        // GENERATED columns may be omitted — they recompute in the
+        // guard (the write/append contract); schema, generated columns
+        // and CHECK constraints are the attempt's base's
+        val rwMissing = schema.fieldNames.filterNot(batch.columns.contains)
+        require(rwMissing.forall(st.generated.contains) &&
+            batch.schema.fieldNames.sorted.toSeq ==
+              schema.fieldNames.filterNot(rwMissing.contains).sorted.toSeq,
+          s"replaceWhere batch columns ${batch.schema.fieldNames.mkString("(", ",", ")")} " +
+            s"must carry exactly the table columns ${schema.fieldNames.mkString("(", ",", ")")}" +
+            " (generated columns may be omitted)")
+        constraintGuard(
+          generatedGuard(batch.select(schema.fieldNames
+            .filterNot(rwMissing.contains).map(col).toSeq: _*),
+            st.generated),
+          st.constraints)
+          .select(schema.fieldNames.map(col).toSeq: _*)
+      })
   }
 
   /** A NECESSARY condition of a predicate on one column: the value lies
@@ -5238,59 +5194,58 @@ object ManifestTable {
                     tagHorizon: Int = DefaultTagHorizon,
                     sparseRowLimit: Long = DefaultSparseRowLimit): Long = {
     import org.apache.spark.sql.functions.col
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
-      transact(spark, path, "DV-delete", maxAttempts,
-          Some(s"no committed version at $path")) { t =>
-        val st = t.st
-        val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-        require(schema.fieldNames.contains(key),
-          s"no column '$key' at $path to key deletion vectors on")
-        st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
-          require(dk == st.phys(key),
-            s"table $path has live deletion vectors keyed on " +
-              s"'${st.logical(dk)}' — a second DV key would corrupt " +
-              "the read-side anti-join"))
-        val candidates = condCandidates(st, cond)
-        if (candidates.isEmpty) Done(t.base)
-        else {
-          // DV-aware matching scan (already-deleted rows never re-enter
-          // a sidecar), emitting (file name, key) pairs DISTRIBUTIVELY
-          val alive = liveRows(spark, path, st.copy(files = candidates))
-          // the emptiness check, the sparse-contract guard, and the
-          // sidecar write all read ONE cached frame — the pruned
-          // detection scan runs once (a nondeterministic or
-          // time-sensitive predicate could otherwise commit a vector
-          // that diverges from the emptiness check; mirrors
-          // updateWhereDV's cached pattern)
-          val pairs = alive.filter(cond)
-            .select(col(FileNameCol).as("_graft_dv_file"),
-              col(key).as("_graft_dv_key"))
-            .dropDuplicates("_graft_dv_file", "_graft_dv_key")
-            .cache()
-          try {
-            val matched = pairs.count()
-            if (matched == 0L) Done(t.base) // no match: nothing to commit
-            else if (matched > sparseRowLimit) {
-              // the predicate is BULK, not sparse: a coalesce(1) sidecar
-              // of this size would funnel through one task and readers
-              // would pay a huge anti-join forever — the CoW rewrite is
-              // the right shape, so take it (self-enforcing contract)
-              pairs.unpersist(blocking = false)
-              Done(deleteWhere(spark, path, cond, maxAttempts = maxAttempts,
-                tag = tag, tagHorizon = tagHorizon))
-            } else {
-              val dvDir = t.dir("dv")
-              pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
-              val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
-              Publish(deltaJson(t.version, t.ts, tag = tag,
-                  tagHorizon = tagHorizon, schema = Some(schema),
-                  dvAdds = dvAdds, dvKey = Some(st.phys(key)),
-                  op = Some("DELETE_DV")),
-                Seq(dvDir))
-            }
-          } finally pairs.unpersist(blocking = false)
-        }
-      })
+    transact(spark, path, "DV-delete", maxAttempts,
+        Some(s"no committed version at $path"), tag) { t =>
+      val st = t.st
+      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+      require(schema.fieldNames.contains(key),
+        s"no column '$key' at $path to key deletion vectors on")
+      st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
+        require(dk == st.phys(key),
+          s"table $path has live deletion vectors keyed on " +
+            s"'${st.logical(dk)}' — a second DV key would corrupt " +
+            "the read-side anti-join"))
+      val candidates = condCandidates(st, cond)
+      if (candidates.isEmpty) Done(t.base)
+      else {
+        // DV-aware matching scan (already-deleted rows never re-enter
+        // a sidecar), emitting (file name, key) pairs DISTRIBUTIVELY
+        val alive = liveRows(spark, path, st.copy(files = candidates))
+        // the emptiness check, the sparse-contract guard, and the
+        // sidecar write all read ONE cached frame — the pruned
+        // detection scan runs once (a nondeterministic or
+        // time-sensitive predicate could otherwise commit a vector
+        // that diverges from the emptiness check; mirrors
+        // updateWhereDV's cached pattern)
+        val pairs = alive.filter(cond)
+          .select(col(FileNameCol).as("_graft_dv_file"),
+            col(key).as("_graft_dv_key"))
+          .dropDuplicates("_graft_dv_file", "_graft_dv_key")
+          .cache()
+        try {
+          val matched = pairs.count()
+          if (matched == 0L) Done(t.base) // no match: nothing to commit
+          else if (matched > sparseRowLimit) {
+            // the predicate is BULK, not sparse: a coalesce(1) sidecar
+            // of this size would funnel through one task and readers
+            // would pay a huge anti-join forever — the CoW rewrite is
+            // the right shape, so take it (self-enforcing contract)
+            pairs.unpersist(blocking = false)
+            Done(deleteWhere(spark, path, cond, maxAttempts = maxAttempts,
+              tag = tag, tagHorizon = tagHorizon))
+          } else {
+            val dvDir = t.dir("dv")
+            pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
+            val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
+            Publish(deltaJson(t.version, t.ts, tag = tag,
+                tagHorizon = tagHorizon, schema = Some(schema),
+                dvAdds = dvAdds, dvKey = Some(st.phys(key)),
+                op = Some("DELETE_DV")),
+              Seq(dvDir))
+          }
+        } finally pairs.unpersist(blocking = false)
+      }
+    }
   }
 
   /** Merge-on-read predicate UPDATE (`UPDATE ... SET ... WHERE` with
@@ -5313,107 +5268,106 @@ object ManifestTable {
                     sparseRowLimit: Long = DefaultSparseRowLimit): Long = {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    tag.flatMap(committedVersionOfTag(spark, path, _)).getOrElse(
-      transact(spark, path, "MoR-update", maxAttempts,
-          Some(s"no committed version at $path")) { t =>
-        val st = t.st
-        val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-        require(schema.fieldNames.contains(key),
-          s"no column '$key' at $path to key deletion vectors on")
-        st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
-          require(dk == st.phys(key),
-            s"table $path has live deletion vectors keyed on " +
-              s"'${st.logical(dk)}' — a second DV key would corrupt " +
-              "the read-side anti-join"))
-        set.foreach { case (c, _) =>
-          require(!st.generated.contains(c),
-            s"cannot UPDATE generated column '$c' — it recomputes from " +
-              s"its declaration (${st.generated.getOrElse(c, "")})")
-          require(c != key,
-            s"cannot SET the DV key column '$key' under merge-on-read " +
-              "— the old image's vector is keyed on it (use updateWhere)")
-        }
-        // partitioned layouts: the appended images write goes through
-        // partitionBy, so every new image lands in its partition home
-        // (including rows a SET moves ACROSS partitions)
-        val partCols = partitionColsOf(st.files)
-        val candidates = condCandidates(st, cond)
-        if (candidates.isEmpty) Done(t.base)
-        else {
-          val idSchema = st.schema.map(sc => StructType(sc.fields :+
-            org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-          val alive = liveRows(spark, path, st.copy(files = candidates,
-            schema = if (st.rowTracking) idSchema else st.schema))
-          val matching = alive.filter(cond)
-          // the DV pairs (old images to kill) and the new images come
-          // from ONE cached matching frame — the scan runs once
-          val cached = matching.cache()
-          try {
-            val matchedRows = cached.count()
-            if (matchedRows == 0L) Done(t.base)
-            else if (matchedRows > sparseRowLimit) {
-              // bulk predicate: the MoR shape's single-task images write
-              // and perpetual read-side anti-join would both be the wrong
-              // cost curve — fall through to the CoW rewrite instead
-              // (self-enforcing sparse contract)
-              cached.unpersist(blocking = false)
-              Done(updateWhere(spark, path, set, cond,
-                maxAttempts = maxAttempts, tag = tag, tagHorizon = tagHorizon))
-            } else {
-              val pairs = cached
-                .select(col(FileNameCol).as("_graft_dv_file"),
-                  col(key).as("_graft_dv_key"))
-                .dropDuplicates("_graft_dv_file", "_graft_dv_key")
-              // SET semantics as in updateWhere: stage all RHS against the
-              // OLD row — BEFORE generated columns strip, so a RHS may
-              // reference them — then overwrite (cond is TRUE on every
-              // cached row, so no per-row guard is needed); generated
-              // columns recompute from the updated sources
-              val stagedSet = set.foldLeft(cached.drop(FileNameCol)) {
-                case (d, (c, e)) =>
-                  d.withColumn(s"_graft_set_$c", e.cast(schema(c).dataType))
-              }
-              val stripped = st.generated.keys.foldLeft(stagedSet)(_ drop _)
-              val updated0 = set.foldLeft(stripped) { case (d, (c, _)) =>
-                d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
-              }
-              val carrySchema =
-                if (st.rowTracking) schema.fieldNames :+ RowIdCol
-                else schema.fieldNames
-              val newImages = constraintGuard(
-                generatedGuard(updated0, st.generated), st.constraints)
-                .select(carrySchema.map(col).toSeq: _*)
-              val snapDir = t.dir("snap")
-              val physOut =
-                if (!st.mapped) newImages
-                else newImages.select(newImages.schema.fieldNames.map(n =>
-                  col(n).as(st.phys(n))).toSeq: _*)
-              val imgW = physOut.coalesce(1).write.mode("overwrite")
-              (if (partCols.nonEmpty) imgW.partitionBy(partCols: _*) else imgW)
-                .parquet(snapDir)
-              val staged = listDataFiles(t.f, new Path(snapDir))
-              val dvDir = t.dir("dv")
-              pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
-              val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
-              val physStats =
-                if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
-                else st.stats.values.headOption.map(_.keys.toSeq.sorted)
-                  .getOrElse(Nil)
-              val newStats: Map[String, Map[String, ColStats]] =
-                if (physStats.isEmpty) Map.empty
-                else stagedFooterStats(spark, path, staged, physStats)
-              val (bloomAdds, ndvAdds) = t.sidecars(staged)
-              Publish(deltaJson(t.version, t.ts, staged.map(t.rel),
-                  addStats = newStats, tag = tag, tagHorizon = tagHorizon,
-                  schema = Some(schema), dvAdds = dvAdds,
-                  dvKey = Some(st.phys(key)), bloomAdds = bloomAdds,
-                  ndvAdds = ndvAdds, op = Some("UPDATE_DV")),
-                Seq(snapDir, dvDir) ++
-                  t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
+    transact(spark, path, "MoR-update", maxAttempts,
+        Some(s"no committed version at $path"), tag) { t =>
+      val st = t.st
+      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+      require(schema.fieldNames.contains(key),
+        s"no column '$key' at $path to key deletion vectors on")
+      st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
+        require(dk == st.phys(key),
+          s"table $path has live deletion vectors keyed on " +
+            s"'${st.logical(dk)}' — a second DV key would corrupt " +
+            "the read-side anti-join"))
+      set.foreach { case (c, _) =>
+        require(!st.generated.contains(c),
+          s"cannot UPDATE generated column '$c' — it recomputes from " +
+            s"its declaration (${st.generated.getOrElse(c, "")})")
+        require(c != key,
+          s"cannot SET the DV key column '$key' under merge-on-read " +
+            "— the old image's vector is keyed on it (use updateWhere)")
+      }
+      // partitioned layouts: the appended images write goes through
+      // partitionBy, so every new image lands in its partition home
+      // (including rows a SET moves ACROSS partitions)
+      val partCols = partitionColsOf(st.files)
+      val candidates = condCandidates(st, cond)
+      if (candidates.isEmpty) Done(t.base)
+      else {
+        val idSchema = st.schema.map(sc => StructType(sc.fields :+
+          org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
+        val alive = liveRows(spark, path, st.copy(files = candidates,
+          schema = if (st.rowTracking) idSchema else st.schema))
+        val matching = alive.filter(cond)
+        // the DV pairs (old images to kill) and the new images come
+        // from ONE cached matching frame — the scan runs once
+        val cached = matching.cache()
+        try {
+          val matchedRows = cached.count()
+          if (matchedRows == 0L) Done(t.base)
+          else if (matchedRows > sparseRowLimit) {
+            // bulk predicate: the MoR shape's single-task images write
+            // and perpetual read-side anti-join would both be the wrong
+            // cost curve — fall through to the CoW rewrite instead
+            // (self-enforcing sparse contract)
+            cached.unpersist(blocking = false)
+            Done(updateWhere(spark, path, set, cond,
+              maxAttempts = maxAttempts, tag = tag, tagHorizon = tagHorizon))
+          } else {
+            val pairs = cached
+              .select(col(FileNameCol).as("_graft_dv_file"),
+                col(key).as("_graft_dv_key"))
+              .dropDuplicates("_graft_dv_file", "_graft_dv_key")
+            // SET semantics as in updateWhere: stage all RHS against the
+            // OLD row — BEFORE generated columns strip, so a RHS may
+            // reference them — then overwrite (cond is TRUE on every
+            // cached row, so no per-row guard is needed); generated
+            // columns recompute from the updated sources
+            val stagedSet = set.foldLeft(cached.drop(FileNameCol)) {
+              case (d, (c, e)) =>
+                d.withColumn(s"_graft_set_$c", e.cast(schema(c).dataType))
             }
-          } finally cached.unpersist(blocking = false)
-        }
-      })
+            val stripped = st.generated.keys.foldLeft(stagedSet)(_ drop _)
+            val updated0 = set.foldLeft(stripped) { case (d, (c, _)) =>
+              d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
+            }
+            val carrySchema =
+              if (st.rowTracking) schema.fieldNames :+ RowIdCol
+              else schema.fieldNames
+            val newImages = constraintGuard(
+              generatedGuard(updated0, st.generated), st.constraints)
+              .select(carrySchema.map(col).toSeq: _*)
+            val snapDir = t.dir("snap")
+            val physOut =
+              if (!st.mapped) newImages
+              else newImages.select(newImages.schema.fieldNames.map(n =>
+                col(n).as(st.phys(n))).toSeq: _*)
+            val imgW = physOut.coalesce(1).write.mode("overwrite")
+            (if (partCols.nonEmpty) imgW.partitionBy(partCols: _*) else imgW)
+              .parquet(snapDir)
+            val staged = listDataFiles(t.f, new Path(snapDir))
+            val dvDir = t.dir("dv")
+            pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
+            val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
+            val physStats =
+              if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
+              else st.stats.values.headOption.map(_.keys.toSeq.sorted)
+                .getOrElse(Nil)
+            val newStats: Map[String, Map[String, ColStats]] =
+              if (physStats.isEmpty) Map.empty
+              else stagedFooterStats(spark, path, staged, physStats)
+            val (bloomAdds, ndvAdds) = t.sidecars(staged)
+            Publish(deltaJson(t.version, t.ts, staged.map(t.rel),
+                addStats = newStats, tag = tag, tagHorizon = tagHorizon,
+                schema = Some(schema), dvAdds = dvAdds,
+                dvKey = Some(st.phys(key)), bloomAdds = bloomAdds,
+                ndvAdds = ndvAdds, op = Some("UPDATE_DV")),
+              Seq(snapDir, dvDir) ++
+                t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
+          }
+        } finally cached.unpersist(blocking = false)
+      }
+    }
   }
 
   /** Shared CoW engine for the keyless row-level verbs: each attempt
@@ -5432,12 +5386,14 @@ object ManifestTable {
                            maxAttempts: Int, tag: Option[String],
                            tagHorizon: Int,
                            transform: (DataFrame, TableState) => DataFrame,
-                           extra: Option[DataFrame] = None): Long = {
-    import org.apache.spark.sql.functions.{col, element_at, input_file_name, split}
+                           extra: Option[(TableState, StructType) => DataFrame] = None)
+      : Long = {
+    import org.apache.spark.sql.functions.col
     transact(spark, path, op, maxAttempts,
-        Some(s"no committed version at $path")) { t =>
+        Some(s"no committed version at $path"), tag) { t =>
       val st = t.st
       val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+      val extraDf = extra.map(_(st, schema))
       val partCols = partitionColsOf(st.files)
       // 1a) manifest-stats pre-prune: necessary ranges from the cond's
       // conjuncts against per-file min/max (and partition values) —
@@ -5448,13 +5404,13 @@ object ManifestTable {
       // row-group stats prune I/O; only O(matching files) names return.
       val touchedBase: Set[String] =
         if (candidates.isEmpty) Set.empty
-        else readFilesMapped(spark, path, st, candidates)
+        else readFilesMapped(spark, path, st, candidates, fileName = true)
           .filter(cond)
-          .select(element_at(split(input_file_name(), "/"), -1).as("_graft_f"))
+          .select(col(FileNameCol))
           .distinct().collect().map(_.getString(0)).toSet
       val touched = candidates.filter(fl => touchedBase(fl.split("/").last))
       // no matches AND no staged batch: nothing to commit
-      if (touched.isEmpty && extra.forall(_.isEmpty)) Done(t.base)
+      if (touched.isEmpty && extraDf.forall(_.isEmpty)) Done(t.base)
       else {
         // 2) rewrite ONLY the touched files, DV-aware (already-deleted
         // rows never resurrect); row ids ride along verbatim
@@ -5474,7 +5430,7 @@ object ManifestTable {
               schema = if (st.rowTracking) idSchema else st.schema)), st)
             .select(carrySchema.map(col).toSeq: _*)
             .coalesce(math.max(1, touched.size)))
-        val extraPrep: Option[DataFrame] = extra.map { e =>
+        val extraPrep: Option[DataFrame] = extraDf.map { e =>
           val withId = if (st.rowTracking) assignRowIds(e, st.rowHighWater) else e
           withId.select(carrySchema.map(col).toSeq: _*)
         }
@@ -5512,7 +5468,7 @@ object ManifestTable {
           touched, newStats, tag, tagHorizon, Some(schema),
           bloomAdds = bloomAdds, ndvAdds = ndvAdds, op = Some(op),
           rowHighWater =
-            if (!st.rowTracking || extra.isEmpty) None
+            if (!st.rowTracking || extraDf.isEmpty) None
             else Some(stagedHighWater(spark, staged, st.rowHighWater)),
           // replaceWhere's staged batch carries the identity column by
           // schema contract — supplied values advance the high water
@@ -6952,7 +6908,7 @@ object ManifestTable {
   /** What one attempt decided. */
   private sealed trait Attempt
   /** Nothing to publish: the table already holds the verb's result at
-    * `version` (a replayed tag or txn, an unchanged property map, no
+    * `version` (a replayed txn, an unchanged property map, no
     * matching row, ...). */
   private final case class Done(version: Long) extends Attempt
   /** Publish `entry` as the attempt's version. On a lost race the
@@ -6965,14 +6921,19 @@ object ManifestTable {
   /** THE commit seam: the only place a table version is published. Per
     * attempt it lists the current version (none → refuse with
     * `ifAbsent`, or with `None` start from the empty version 0),
-    * resolves its state, gates on the writer protocol
-    * ([[assertWritable]]), runs the verb's `attempt` body against that
-    * base, and publishes the returned entry as base+1 through
-    * [[publish]] — then checkpoints and runs the post-commit hook. A
-    * lost race deletes the attempt's staging and re-runs the body
-    * against the new base; `maxAttempts` losses give up. */
+    * resolves its state, returns the version that committed
+    * `replayTag` when the base already records it (a replay, checked
+    * on EVERY attempt — Delta's commit-time txn check — so a verb that
+    * loses its race to a replay of itself lands once), gates on the
+    * writer protocol ([[assertWritable]]), runs the verb's `attempt`
+    * body against that base, and publishes the returned entry as
+    * base+1 through [[publish]] — then checkpoints and runs the
+    * post-commit hook. A lost race deletes the attempt's staging and
+    * re-runs the body against the new base; `maxAttempts` losses give
+    * up. */
   private def transact(spark: SparkSession, path: String, op: String,
-                       maxAttempts: Int, ifAbsent: Option[String])
+                       maxAttempts: Int, ifAbsent: Option[String],
+                       replayTag: Option[String] = None)
                       (attempt: Txn => Attempt): Long = {
     val f = fs(spark, path)
     var lost = 0
@@ -6980,6 +6941,7 @@ object ManifestTable {
       val base = currentVersion(spark, path).getOrElse(
         ifAbsent.fold(0L)(msg => throw new IllegalStateException(msg)))
       val st = resolveState(spark, path, base)
+      replayTag.flatMap(st.tags.get).foreach(v => return v)
       assertWritable(st, path)
       val t = Txn(spark, path, f, base, st, newToken())
       attempt(t) match {

@@ -167,6 +167,24 @@ class GraftSqlSpec extends SparkSpec {
     }
   }
 
+  test("MERGE SQL with an EMPTY source resolves table-qualified `src.col` clause references as a non-empty source does") {
+    val root = java.nio.file.Files.createTempDirectory("graft_sql8e").toString
+    val path = s"$root/t"
+    ManifestTable.write(Seq((1L, 10L)).toDF("id", "v"), path)
+    withSql { s =>
+      s.createDataFrame(Seq((1L, 5L))).toDF("id", "v").limit(0)
+        .createOrReplaceTempView("empty_src")
+      s.sql(
+        s"""MERGE INTO '$path' USING empty_src ON id
+            WHEN MATCHED THEN UPDATE SET v = empty_src.v
+            WHEN NOT MATCHED THEN INSERT (id, v) VALUES (empty_src.id, empty_src.v)""")
+      // the empty batch commits its (empty) version and changes no row
+      assert(ManifestTable.versions(s, path) === Seq(1L, 2L))
+      assert(ManifestTable.read(s, path).as[(Long, Long)].collect().toSeq ===
+        Seq((1L, 10L)))
+    }
+  }
+
   test("MERGE SET payload with a column literally named `matched` is not truncated (r13)") {
     val root = java.nio.file.Files.createTempDirectory("graft_sql13m").toString
     val path = s"$root/t"

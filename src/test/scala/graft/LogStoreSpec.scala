@@ -239,4 +239,111 @@ class LogStoreSpec extends SparkSpec {
         s"$verb removed files outside its base: ${removes -- base}")
     }
   }
+
+  test("a tagged verb racing a replay of itself lands once: it returns the replay's version and applies its rows once") {
+    import ManifestTable.{MergeInsert, MergeUpdate}
+    val tag = "self-race"
+    def rows(ids: Seq[Long], m: Long => Long) =
+      ids.map(i => (i, m(i), s"r$i")).toDF("id", "m", "v")
+    val base = (1L to 200L).map(i => i -> i).toMap
+    val low = (1L to 10L).toSet
+    // verb, the rows (id -> m) it leaves behind when applied once
+    val cases = Seq[(String, String => Long, Map[Long, Long])](
+      ("appendIdempotent",
+        p => ManifestTable.appendIdempotent(
+          rows(1001L to 1010L, identity), p, tag),
+        base ++ (1001L to 1010L).map(i => i -> i)),
+      ("merge",
+        p => ManifestTable.merge(rows(Seq(1L, 1001L), i => -i), p, "id",
+          tag = Some(tag)),
+        base ++ Map(1L -> -1L, 1001L -> -1001L)),
+      ("mergeMulti",
+        p => ManifestTable.mergeMulti(rows(low.toSeq :+ 1001L, identity), p,
+          "id", matched = Seq(MergeUpdate(None, Seq("m" -> (col("_b_m") + 1L)))),
+          notMatched = Seq(MergeInsert()), tag = Some(tag)),
+        base ++ low.map(i => i -> (i + 1)) + (1001L -> 1001L)),
+      ("updateWhere",
+        p => ManifestTable.updateWhere(spark, p, Seq("m" -> (col("m") + 1000L)),
+          col("id") <= 10L, tag = Some(tag)),
+        base ++ low.map(i => i -> (i + 1000))),
+      ("deleteWhere",
+        p => ManifestTable.deleteWhere(spark, p, col("id") <= 10L,
+          tag = Some(tag)),
+        base -- low),
+      ("overwriteWhere",
+        p => ManifestTable.overwriteWhere(rows(low.toSeq.sorted, i => -i), p,
+          col("id") <= 10L, tag = Some(tag)),
+        base ++ low.map(i => i -> -i)),
+      ("deleteWhereDV",
+        p => ManifestTable.deleteWhereDV(spark, p, col("id") <= 10L, "id",
+          tag = Some(tag)),
+        base -- low),
+      ("updateWhereDV",
+        p => ManifestTable.updateWhereDV(spark, p,
+          Seq("m" -> (col("m") + 1000L)), col("id") <= 10L, "id",
+          tag = Some(tag)),
+        base ++ low.map(i => i -> (i + 1000))))
+    for ((verb, run, expected) <- cases) {
+      val path = java.nio.file.Files.createTempDirectory(
+        s"graft_self_race_$verb").toString + "/t"
+      ManifestTable.write(rows(1L to 200L, identity).repartition(4), path)
+      val prev = ManifestTable.currentVersion(spark, path).get
+      // the rival is the same verb, same tag: a replay that wins the race
+      val v = ManifestTable.withLogStore(new RivalStore(() => { run(path); () }))(
+        run(path))
+      assert(v === prev + 1, s"$verb must return the replay's version")
+      assert(ManifestTable.versions(spark, path) === (1L to prev + 1).toSeq,
+        s"$verb committed after losing to its own replay")
+      assert(ManifestTable.history(spark, path)
+        .filter(col("tag") === tag).count() === 1, s"$verb: tag entries")
+      val got = ManifestTable.read(spark, path).select("id", "m")
+        .as[(Long, Long)].collect()
+      assert(got.length === expected.size && got.toMap === expected,
+        s"$verb applied its rows more than once")
+    }
+
+    // the replay check precedes the writer-protocol gate, as a replay
+    // exits before any work: a table later upgraded to a future writer
+    // still answers a replayed tagged merge with its version
+    val path = java.nio.file.Files.createTempDirectory(
+      "graft_replay_future_writer").toString + "/t"
+    ManifestTable.write(rows(1L to 4L, identity), path)
+    val merged = ManifestTable.merge(rows(Seq(1L), i => -i), path, "id",
+      tag = Some("m1"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$path/_graft_manifest-v${merged + 1}.json"),
+      (s"""{"version":${merged + 1},"ts":0,"minReader":1,"minWriter":99,""" +
+        """"adds":[],"removes":[]}""").getBytes("UTF-8"))
+    assert(ManifestTable.merge(rows(Seq(1L), i => -i), path, "id",
+      tag = Some("m1")) === merged)
+    val e = intercept[IllegalStateException](ManifestTable.merge(
+      rows(Seq(1L), i => -i), path, "id", tag = Some("m2")))
+    assert(e.getMessage.contains("writer version 99"))
+    assert(ManifestTable.versions(spark, path) === (1L to merged + 1).toSeq)
+  }
+
+  test("overwriteWhere enforces a CHECK constraint a rival commits before its publish") {
+    val path = java.nio.file.Files.createTempDirectory(
+      "graft_rival_constraint").toString + "/t"
+    ManifestTable.write((1L to 200L).map(i => (i, i, s"r$i"))
+      .toDF("id", "m", "v").repartition(4), path)
+    val prev = ManifestTable.currentVersion(spark, path).get
+    // the replacement slice violates `m > 0`, which the rival declares
+    // (every existing row satisfies it) between the read and the publish
+    val batch = (1L to 10L).map(i => (i, -i, s"n$i")).toDF("id", "m", "v")
+    val rival = () => {
+      ManifestTable.addCheckConstraint(spark, path, "m_pos", "m > 0"); ()
+    }
+    val e = intercept[Exception](
+      ManifestTable.withLogStore(new RivalStore(rival))(
+        ManifestTable.overwriteWhere(batch, path, col("id") <= 10L)))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("CHECK constraint 'm_pos'")),
+      s"expected the rival's constraint to refuse the batch: $messages")
+    assert(ManifestTable.versions(spark, path) === (1L to prev + 1).toSeq,
+      "the refused replaceWhere must not commit")
+    assert(ManifestTable.read(spark, path).select("m").as[Long].collect()
+      .sorted.toSeq === (1L to 200L))
+  }
 }
