@@ -24,7 +24,12 @@ import scala.util.control.NonFatal
   *     OCC retry live there once; a verb supplies only its attempt
   *     body. A tagged verb's replay is answered from each attempt's
   *     base, so a verb that loses its race to a replay of itself lands
-  *     once;
+  *     once. Every attempt body that writes data (write/append, merge,
+  *     UPDATE/DELETE/replaceWhere, the merge-on-read verbs, the
+  *     maintenance rewrites) stages through one step, [[Txn.stage]] —
+  *     physical rename, parquet write, the zero-row schema file,
+  *     footer stats, bloom/NDV sidecars, lazy row-id and identity high
+  *     waters — and deletion vectors through [[Txn.stageDv]];
   *  3. since round 10 the committed manifest is an INCREMENTAL LOG
   *     ENTRY (the `_delta_log` shape, Delta paper VLDB 2020 §3): it
   *     records only the commit's `adds`/`removes` (+ per-add stats +
@@ -244,6 +249,19 @@ object ManifestTable {
     def logical(physical: String): String =
       mapping.collectFirst { case (l, p) if p == physical => l }
         .getOrElse(physical)
+    /** The schema a rewrite reads its rows under: the logical schema,
+      * plus [[RowIdCol]] on a row-tracked table so ids carry verbatim. */
+    def rowIdSchema: Option[StructType] =
+      if (!rowTracking) schema
+      else schema.map(sc =>
+        StructType(sc.fields :+ StructField(RowIdCol, LongType)))
+    /** Stats columns of a keyless rewrite (physical): `explicit`, else
+      * the declared stats schema, else the columns the files already
+      * carry stats for — so skipping survives without re-declaring. */
+    def rewriteStatsCols(explicit: Seq[String]): Seq[String] =
+      if (explicit.nonEmpty) explicit
+      else if (statsSchemaCols.nonEmpty) statsSchemaCols
+      else stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
   }
 
   private def fs(spark: SparkSession, path: String): FileSystem =
@@ -3069,9 +3087,7 @@ object ManifestTable {
       throw new IllegalStateException(s"no committed version at $path"))
     val st = resolveState(spark, path, v)
     require(st.rowTracking, s"row tracking is not enabled at $path")
-    val withId = st.schema.map(sc => StructType(sc.fields :+
-      org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-    readStateDf(spark, path, st.copy(schema = withId))
+    readStateDf(spark, path, st.copy(schema = st.rowIdSchema))
   }
 
   /** A committed version WITH row ids exposed ([[readWithRowIds]] for
@@ -3081,9 +3097,7 @@ object ManifestTable {
                             version: Long): DataFrame = {
     val st = resolveState(spark, path, version)
     require(st.rowTracking, s"row tracking is not enabled at $path")
-    val withId = st.schema.map(sc => StructType(sc.fields :+
-      org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-    readStateDf(spark, path, st.copy(schema = withId))
+    readStateDf(spark, path, st.copy(schema = st.rowIdSchema))
   }
 
   /** Assign fresh ids above the high-water mark to rows lacking one;
@@ -3218,14 +3232,12 @@ object ManifestTable {
     // semantics — a present column keeps its values and the high
     // water advances past them after staging). Values are unique by
     // construction: hw + (monotonic id + 1) × step, gaps allowed.
-    val identDecl = st.identityCol.map(c =>
-      (st.logical(c), c, st.identityStep, st.identityHighWater))
-    val genApplied = identDecl match {
-      case Some((lc, _, step, hw)) if !genApplied0.columns.contains(lc) =>
+    val genApplied = st.identityCol.map(st.logical) match {
+      case Some(lc) if !genApplied0.columns.contains(lc) =>
         genApplied0.withColumn(lc,
-          (org.apache.spark.sql.functions.lit(hw) +
+          (org.apache.spark.sql.functions.lit(st.identityHighWater) +
             (org.apache.spark.sql.functions.monotonically_increasing_id()
-              + 1L) * step).cast(LongType))
+              + 1L) * st.identityStep).cast(LongType))
       case _ => genApplied0
     }
     // shred binding metadata: on a shred-spec'd table, re-tag the
@@ -3270,7 +3282,6 @@ object ManifestTable {
         if (!prevMapped) statsCols
         else statsCols.map(c => newMapping.getOrElse(c, c))
       } else statsSchemaDecl.getOrElse(st.statsSchemaCols)
-    val snapDir = t.dir("snap")
     // persisted EXPECTATIONS (DLT's table-bound quality rules) gate
     // the batch in the SAME staging pass: FAIL rules abort the write
     // job (nothing lands), DROP rules filter violating rows, WARN
@@ -3308,13 +3319,9 @@ object ManifestTable {
           s"(${chk.getLong(0)} rows, ${chk.getLong(1)} distinct ids) — " +
           "caller-supplied row ids must be unique")
     }
-    // rename logical -> physical as the last step before the write
-    // (the row id keeps its reserved physical name)
-    val stagedDf =
-      if (!prevMapped) guarded
-      else guarded.select(guarded.schema.fieldNames.map(n =>
-        org.apache.spark.sql.functions.col(n)
-          .as(newMapping.getOrElse(n, n))).toSeq: _*)
+    // files hold PHYSICAL names (the row id keeps its reserved one):
+    // [[Txn.stage]] renames through the evolved mapping as it writes
+    val rename: String => String = n => newMapping.getOrElse(n, n)
     // DECLARED partitioning (empty-table DDL / first-write
     // declaration): an overwrite that names no layout inherits the
     // table's declaration; an explicit partitionBy always wins
@@ -3326,19 +3333,21 @@ object ManifestTable {
     // file layout, like footers) — reads translate via the mapping
     val partColsPhys =
       if (!prevMapped) effPartCols
-      else effPartCols.map(c => newMapping.getOrElse(c, c))
+      else effPartCols.map(rename)
     // ingestion-time clustering (liquid-clustering shape): declared
-    // cluster columns sort each staged file LOCALLY — zero shuffle,
-    // tight per-file stats on the cluster key from the first commit;
-    // [[optimizeClustered]] does the global incremental recluster
-    val clusterPhys = st.clusterCols.filter(stagedDf.columns.contains)
-    require(clusterPhys.isEmpty || partColsPhys.isEmpty,
+    // cluster columns (stored physical) sort each staged file LOCALLY
+    // — zero shuffle, tight per-file stats on the cluster key from the
+    // first commit; [[optimizeClustered]] does the global incremental
+    // recluster
+    val clusterCols =
+      st.clusterCols.flatMap(c => guarded.columns.find(rename(_) == c))
+    require(clusterCols.isEmpty || partColsPhys.isEmpty,
       s"table $path has cluster columns declared — clustering " +
         "replaces partitioning (write without partitionBy)")
-    val toStage0 =
-      if (clusterPhys.isEmpty) stagedDf
-      else stagedDf.sortWithinPartitions(
-        clusterPhys.map(org.apache.spark.sql.functions.col): _*)
+    def clustered(d: DataFrame, cols: Seq[String]): DataFrame =
+      if (cols.isEmpty) d
+      else d.sortWithinPartitions(
+        cols.map(org.apache.spark.sql.functions.col): _*)
     // OPTIMIZED WRITE (`graft.autoOptimize.optimizeWrite`): coalesce
     // the staged batch toward the target file size instead of
     // committing one sliver per shuffle partition — the write-time
@@ -3355,33 +3364,17 @@ object ManifestTable {
       .flatMap(_.toLongOption).filter(_ > 0L)
       .getOrElse(AutoOptimizeTargetBytes)
     val toStage =
-      if (!optimizeWrite) toStage0
+      if (!optimizeWrite) clustered(guarded, clusterCols)
       else {
-        val est = stagedDf.queryExecution.optimizedPlan.stats.sizeInBytes
+        val est = guarded.queryExecution.optimizedPlan.stats.sizeInBytes
         val n = ((est + owTarget - 1) / owTarget)
           .min(BigInt(1 << 20)).max(BigInt(1)).toInt
         // coalesce FIRST, then the cluster sort: coalesce on top of
         // sortWithinPartitions concatenates sorted runs, silently
         // degrading clustered layout whenever optimizeWrite merges
-        // partitions (the repack path below already orders it this
-        // way)
-        val merged = stagedDf.coalesce(n)
-        if (clusterPhys.isEmpty) merged
-        else merged.sortWithinPartitions(
-          clusterPhys.map(org.apache.spark.sql.functions.col): _*)
+        // partitions (the repack pass below orders it this way too)
+        clustered(guarded.coalesce(n), clusterCols)
       }
-    val w = toStage.write.mode("overwrite")
-    (if (partColsPhys.nonEmpty) w.partitionBy(partColsPhys: _*) else w)
-      .parquet(snapDir)
-    var staged = listDataFiles(f, new Path(snapDir))
-    if (staged.isEmpty && !(carryForward && t.base > 0L)) {
-      // a PARTITIONED write of zero rows emits no files at all, which
-      // would commit an unreadable version — re-stage unpartitioned:
-      // an empty non-partitioned parquet write keeps a schema-bearing
-      // file (partition columns become ordinary empty columns).
-      stagedDf.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
-      staged = listDataFiles(f, new Path(snapDir))
-    }
     // OPTIMIZED WRITE, post-hoc exactness pass: the plan-stats
     // estimate above can be UNKNOWN (RDD-backed frames — the
     // streaming sink's rebased micro-batches — default to
@@ -3393,70 +3386,65 @@ object ManifestTable {
     // commit still lands exactly once. The repack read pins the
     // staged schema (partition dirs re-read under their written
     // types, never re-inferred) and restores the cluster sort.
-    if (optimizeWrite && staged.size > 1) {
-      val stagedBytes = staged.map { p =>
-        try f.getFileStatus(p).getLen
-        catch { case _: java.io.IOException => owTarget } // conservative
-      }.sum
-      val want = math.max(1L, (stagedBytes + owTarget - 1L) / owTarget)
-      if (want < staged.size) {
-        val snapDir2 = s"$snapDir-r"
-        val back0 = spark.read.schema(toStage0.schema).parquet(snapDir)
-          .coalesce(want.toInt)
-        val back =
-          if (clusterPhys.isEmpty) back0
-          else back0.sortWithinPartitions(
-            clusterPhys.map(org.apache.spark.sql.functions.col): _*)
-        val w2 = back.write.mode("overwrite")
-        (if (partColsPhys.nonEmpty) w2.partitionBy(partColsPhys: _*)
-         else w2).parquet(snapDir2)
-        val repacked = listDataFiles(f, new Path(snapDir2))
-        // a PARTITIONED repack re-splits by partition value and may
-        // not shrink — keep whichever layout holds fewer files
-        if (repacked.nonEmpty && repacked.size < staged.size) {
-          f.delete(new Path(snapDir), true)
-          staged = repacked
-        } else f.delete(new Path(snapDir2), true)
+    val snapDir = t.dir("snap")
+    def repack(phys: DataFrame, staged: Seq[Path]): Seq[Path] =
+      if (!optimizeWrite || staged.size <= 1) staged
+      else {
+        val stagedBytes = staged.map { p =>
+          try f.getFileStatus(p).getLen
+          catch { case _: java.io.IOException => owTarget } // conservative
+        }.sum
+        val want = math.max(1L, (stagedBytes + owTarget - 1L) / owTarget)
+        if (want >= staged.size) staged
+        else {
+          val snapDir2 = s"$snapDir-r"
+          val back = spark.read.schema(phys.schema).parquet(snapDir)
+            .coalesce(want.toInt)
+          val w2 = clustered(back, clusterCols.map(rename)).write
+            .mode("overwrite")
+          (if (partColsPhys.nonEmpty) w2.partitionBy(partColsPhys: _*)
+           else w2).parquet(snapDir2)
+          val repacked = listDataFiles(f, new Path(snapDir2))
+          // a PARTITIONED repack re-splits by partition value and may
+          // not shrink — keep whichever layout holds fewer files
+          if (repacked.nonEmpty && repacked.size < staged.size) {
+            f.delete(new Path(snapDir), true)
+            repacked
+          } else {
+            f.delete(new Path(snapDir2), true)
+            staged
+          }
+        }
       }
-    }
-    val adds = staged.map(p => relativize(new Path(path), p))
-    val newStats: Map[String, Map[String, ColStats]] =
-      if (statsColsPhys.isEmpty) Map.empty
-      else stagedFooterStats(spark, path, staged, statsColsPhys)
-    // overwrite: every previous file (and deletion vector) leaves the
-    // state; append: nothing leaves. Carried stats survive appends by
-    // construction — a stats-less streaming append only leaves its
-    // own files unindexed.
+    // an append onto a committed version keeps its files; any other
+    // write is the version's only data
+    val staged = t.stage(Some(toStage), partColsPhys, statsColsPhys,
+      survives = carryForward && t.base > 0L, rename, repack)
+    // overwrite: every previous file (and deletion vector, and index
+    // sidecar) leaves the state; append: nothing leaves. Carried stats
+    // survive appends by construction — a stats-less streaming append
+    // only leaves its own files unindexed.
     val removes = if (carryForward) Nil else st.files
     val dvRemoves = if (carryForward) Nil else st.dvFiles
-    // index sidecars: one pass over the STAGED files builds their
-    // filters/sketches; an overwrite retires every previous sidecar
-    val (bloomAdds, ndvAdds) = t.sidecars(staged)
     val bloomRemoves = if (carryForward) Nil else st.bloomFiles
     val ndvRemoves = if (carryForward) Nil else st.ndvFiles
-    val newHigh =
-      if (!tracked) None
-      else Some(stagedHighWater(spark, staged, st.rowHighWater))
-    // identity high water from the STAGED files' own column (one
-    // long-column scan of the new files), so supplied values advance
-    // it too
-    val newIdentHigh = identDecl.map { case (_, physCol, _, hw) =>
-      stagedColMax(spark, staged, physCol, hw) }
     // expectation metrics materialized with the staging write above
     // (the observe fired inside that action — no extra job here)
     val expectCounts: Map[String, (Long, Long)] =
       expectGate.map { case (_, obs, names) =>
         Expectations.metricsOf(obs, names) }.getOrElse(Map.empty)
-    val json = deltaJson(version, t.ts, adds, removes,
-      newStats, tag, tagHorizon, Some(schema), dvRemoves = dvRemoves,
-      bloomAdds = bloomAdds, bloomRemoves = bloomRemoves,
+    val json = deltaJson(version, t.ts, staged.adds, removes,
+      staged.stats, tag, tagHorizon, Some(schema), dvRemoves = dvRemoves,
+      bloomAdds = staged.bloomAdds, bloomRemoves = bloomRemoves,
       mapping = if (prevMapped) Some(newMapping) else None,
       maxColId = if (prevMapped) Some(newMaxColId) else None,
-      ndvAdds = ndvAdds, ndvRemoves = ndvRemoves,
+      ndvAdds = staged.ndvAdds, ndvRemoves = ndvRemoves,
       op = Some(if (copyAdds.nonEmpty) "COPY"
         else if (carryForward) "APPEND" else "WRITE"),
-      rowHighWater = newHigh,
-      identityHighWater = newIdentHigh,
+      rowHighWater = if (!tracked) None else Some(staged.rowHighWater),
+      // identity high water from the STAGED files' own column, so
+      // supplied values advance it too
+      identityHighWater = staged.identityHighWater,
       partitionColsDecl =
         if (partitionColsDecl.nonEmpty) Some(partitionColsDecl) else None,
       copyAdds = copyAdds, txn = txn,
@@ -3465,8 +3453,7 @@ object ManifestTable {
       statsSchema = statsSchemaDecl,
       expectMetrics = expectCounts)
     // a lost race drops this attempt's staging; the next re-stages
-    Publish(json, Seq(snapDir, s"$snapDir-r") ++
-      t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds), autoCompact = true)
+    Publish(json, staged.cleanup :+ s"$snapDir-r", autoCompact = true)
   }
 
   // ------------------------------------------------------------------
@@ -3601,7 +3588,7 @@ object ManifestTable {
                            broadcastSource: Option[Boolean] = None)
       : Attempt = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, when, max => smax, min => smin}
-    import t.{f, path, spark, st, version}
+    import t.{path, spark, st, version}
     // MATERIALIZE the source once per attempt (eager local checkpoint,
     // lineage truncated — see mergeMultiKeyed's source note): the body
     // evaluates `updates` several times (bounds aggregate, confirm-scan
@@ -3797,8 +3784,6 @@ object ManifestTable {
     // Delta 3.x row-tracking contract); inserts draw fresh ids above
     // the high-water mark. Requires key-unique updates — two update
     // rows cannot both inherit one base id.
-    val idSchema = st.schema.map(sc => StructType(sc.fields :+
-      org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
     if (st.rowTracking) {
       // null-keyed rows never match a base row (they insert with a
       // FRESH id), so they are exempt from the uniqueness contract
@@ -3821,7 +3806,7 @@ object ManifestTable {
               StructType(keys.map(schema(_)) :+
                 org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
           else readStateDf(spark, path,
-              st.copy(files = touched, schema = idSchema))
+              st.copy(files = touched, schema = st.rowIdSchema))
             .join(maybeBc(updKeys), keys, "left_semi")
             .select(keyCols :+ col(RowIdCol): _*)
         assignRowIds(ordered0.join(baseIds, keys, "left"),
@@ -3846,115 +3831,83 @@ object ManifestTable {
     val newData =
       if (touched.isEmpty) ordered
       else carryUp(readStateDf(spark, path,
-          st.copy(files = touched,
-            schema = if (st.rowTracking) idSchema else st.schema))
+          st.copy(files = touched, schema = st.rowIdSchema))
         .join(maybeBc(updKeys), keys, "left_anti"))
         .unionByName(ordered)
-    val snapDir = t.dir("snap")
-    val untouched = st.files.filterNot(touchedSet)
-    var staged: Seq[Path] = Nil
-    if (touched.nonEmpty || hasUpserts) {
-      // stage in ~as many files as were touched (shuffle-free coalesce):
-      // a merge must not fragment the rewrite into shuffle.partitions
-      // slivers. `sortCols` re-sorts rewritten files in place so a
-      // clustered table keeps tight stats through churn; partitioned
-      // tables rewrite INSIDE their partition layout.
-      val packed = newData.coalesce(math.max(1, touched.size))
-      val sorted = if (sortCols.nonEmpty)
-        packed.sortWithinPartitions(
-          sortCols.map(org.apache.spark.sql.functions.col): _*)
-      else packed
-      // column-mapped tables stage under PHYSICAL names (identity
-      // otherwise); the mapping only changes when schema evolution
-      // added columns (fresh physicals assigned above)
-      val physOut =
-        if (!st.mapped) sorted
-        else sorted.select(sorted.schema.fieldNames.map(n =>
-          org.apache.spark.sql.functions.col(n)
-            .as(physEvolved(n))).toSeq: _*)
-      val w = physOut.write.mode("overwrite")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(snapDir)
-      staged = listDataFiles(f, new Path(snapDir))
-      if (staged.isEmpty && untouched.isEmpty && !hasDvEntries) {
-        // all rows deleted: commit a readable empty version
-        physOut.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
-        staged = listDataFiles(f, new Path(snapDir))
-      }
-    }
+    // the read-side anti-join resolves ONE dvKey per table: checked
+    // before anything stages
+    if (hasDvEntries) t.requireDvKey(keys)
+    // stage in ~as many files as were touched (shuffle-free coalesce):
+    // a merge must not fragment the rewrite into shuffle.partitions
+    // slivers. `sortCols` re-sorts rewritten files in place so a
+    // clustered table keeps tight stats through churn; partitioned
+    // tables rewrite INSIDE their partition layout, under PHYSICAL
+    // names on mapped tables (the mapping only changes when schema
+    // evolution added columns — fresh physicals assigned above). Stats
+    // cover the explicit statsCols, else the declared stats schema;
+    // rewritten files get fresh index sidecars (stale ones for the
+    // removed files are dead weight until compact retires them). When
+    // every row is deleted and no file or vector survives, one
+    // zero-row file keeps the version readable.
+    val staged = t.stage(
+      if (touched.isEmpty && !hasUpserts) None
+      else {
+        val packed = newData.coalesce(math.max(1, touched.size))
+        Some(if (sortCols.isEmpty) packed
+          else packed.sortWithinPartitions(sortCols.map(col): _*))
+      },
+      partCols,
+      if (statsCols.nonEmpty) statsCols.map(st.phys) else st.statsSchemaCols,
+      survives = st.files.exists(!touchedSet(_)) || hasDvEntries,
+      physEvolved)
     // deletion-vector sidecar for delete-only files — written
     // DISTRIBUTIVELY from the cached confirm scan (the r14 shape
     // collected the pairs and re-parallelized them: driver memory
     // scaled with the merge's delete set)
-    var dvAdds: Seq[String] = Nil
-    val dvDir = t.dir("dv")
-    if (hasDvEntries) {
-      // the read-side anti-join resolves ONE dvKey per table: adding
-      // vectors keyed differently than the live ones would corrupt it
-      // (same rule deleteWhereDV/updateWhereDV enforce)
-      st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
-        require(dk == keys.map(st.phys).mkString(","),
-          s"table $path has live deletion vectors keyed on '$dk' — a " +
-            s"merge keyed on '${keys.mkString(",")}' cannot add vectors " +
-            "without corrupting the read-side anti-join; compact first"))
-      // keep only delete-keyed hits in files NOT being rewritten; the
-      // touched-name frame is O(files) — always broadcast-safe
-      val touchedNames = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          touchedBase.toSeq.map(org.apache.spark.sql.Row(_)),
-          math.max(1, math.min(4, touchedBase.size))),
-        StructType(Seq(org.apache.spark.sql.types.StructField("_graft_f",
-          org.apache.spark.sql.types.StringType, nullable = false))))
-      hits.get
-        .filter(col("_graft_del") === 1)
-        .join(broadcast(touchedNames), Seq("_graft_f"), "left_anti")
-        .select(col("_graft_f").as("_graft_dv_file") +:
-          keys.zip(dvKeyColNames(keys.size)).map { case (k, n) =>
-            col(k).as(n) }: _*)
-        .distinct()
-        .coalesce(1)
-        .write.mode("overwrite").parquet(dvDir)
-      dvAdds = listDataFiles(f, new Path(dvDir))
-        .map(p => relativize(new Path(path), p))
-    }
+    val dvAdds: Seq[String] =
+      if (!hasDvEntries) Nil
+      else {
+        // keep only delete-keyed hits in files NOT being rewritten; the
+        // touched-name frame is O(files) — always broadcast-safe
+        val touchedNames = spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            touchedBase.toSeq.map(org.apache.spark.sql.Row(_)),
+            math.max(1, math.min(4, touchedBase.size))),
+          StructType(Seq(org.apache.spark.sql.types.StructField("_graft_f",
+            org.apache.spark.sql.types.StringType, nullable = false))))
+        t.stageDv(hits.get
+          .filter(col("_graft_del") === 1)
+          .join(broadcast(touchedNames), Seq("_graft_f"), "left_anti")
+          .select(col("_graft_f").as("_graft_dv_file") +:
+            keys.zip(dvKeyColNames(keys.size)).map { case (k, n) =>
+              col(k).as(n) }: _*)
+          .distinct())
+      }
     if (deleteVectors) hits.foreach(_.unpersist(blocking = false))
-    val stagedRel = staged.map(p => relativize(new Path(path), p))
-    // explicit statsCols override; else the declared stats schema
-    val mergeStatsPhys =
-      if (statsCols.nonEmpty) statsCols.map(st.phys)
-      else st.statsSchemaCols
-    val newStats: Map[String, Map[String, ColStats]] =
-      if (mergeStatsPhys.isEmpty) Map.empty
-      else stagedFooterStats(spark, path, staged, mergeStatsPhys)
-    // index sidecars: rewritten files get fresh entries (stale ones for
-    // the removed files are dead weight until compact retires them)
-    val (bloomAdds, ndvAdds) = t.sidecars(staged)
-    val json = deltaJson(version, t.ts, stagedRel,
-      touched, newStats, tag, tagHorizon, Some(schema),
+    val json = deltaJson(version, t.ts, staged.adds,
+      touched, staged.stats, tag, tagHorizon, Some(schema),
       dvAdds = dvAdds,
       // composite keys record comma-joined (names validated comma-free)
       dvKey =
         if (dvAdds.nonEmpty) Some(keys.map(st.phys).mkString(","))
         else None,
       mergeKey = Some(keys.mkString(",")),
-      bloomAdds = bloomAdds, ndvAdds = ndvAdds,
+      bloomAdds = staged.bloomAdds, ndvAdds = staged.ndvAdds,
       mapping =
         if (st.mapped && evolvedNew.nonEmpty) Some(mergeMapping) else None,
       maxColId =
         if (st.mapped && evolvedNew.nonEmpty) Some(mergeMaxColId) else None,
       rowHighWater =
-        if (!st.rowTracking) None
-        else Some(stagedHighWater(spark, staged, st.rowHighWater)),
+        if (!st.rowTracking) None else Some(staged.rowHighWater),
       // identity uniqueness contract: MERGE-supplied identity values
-      // must advance the high water too (same staged-column scan as
-      // writeAttempt), or later engine-assigned ids could collide with them
-      identityHighWater = st.identityCol.map(pc =>
-        stagedColMax(spark, staged, pc, st.identityHighWater)))
+      // must advance the high water too, or later engine-assigned ids
+      // could collide with them
+      identityHighWater = staged.identityHighWater)
     // merge commits stage small files per batch exactly like appends —
     // auto-compaction evaluates here too (delta's post-commit hook
     // fires after ANY write), same reentrancy guard
-    Publish(json, snapDir +: t.written("dv" -> dvAdds, "bloom" -> bloomAdds,
-      "ndv" -> ndvAdds), autoCompact = true)
+    Publish(json, staged.cleanup ++ t.written("dv" -> dvAdds),
+      autoCompact = true)
     } finally {
       releaseSrc()
     }
@@ -4096,10 +4049,13 @@ object ManifestTable {
         case _              => Nil
       })
     /** Clause validation against one attempt's base `st` (its logical
-      * `schema`), shared by the empty-source and the full path so a
-      * clause error never depends on whether the batch is empty. All
-      * driver-only. `targetable` is the schema SET/INSERT may assign
-      * (the evolved one under schema evolution).
+      * `schema`), run before any source job on both the empty-source
+      * and the full path, so a clause error never depends on whether
+      * the batch is empty and costs no job. All driver-only (analysis
+      * against the unmaterialized source). Returns the schema the
+      * merge commits — the evolved one under schema evolution, where an
+      * unknown SET/INSERT target BECOMES a new column by construction,
+      * so it fails fast only without it.
       *
       * A SET may not reassign a merge KEY column — the keyed
       * copy-on-write addresses base rows by key equality, so a
@@ -4123,8 +4079,47 @@ object ManifestTable {
       * throw in the broadcast anti-join path but silently read NULL in
       * the fused full-outer path. Delta refuses source references in
       * by-source clauses at analysis; so do we. */
-    def checkClauses(st: TableState, schema: StructType,
-                     targetable: Seq[String], src: DataFrame): Unit = {
+    def checkClauses(st: TableState, schema: StructType): StructType = {
+      // Schema evolution, delta-spark's reading of both forms:
+      //  - any STAR clause evolves by the source's additive columns
+      //    (and lossless widenings);
+      //  - explicit assignment lists evolve by the columns they
+      //    ASSIGN that the target lacks (`SET t.newcol = expr` adds
+      //    `newcol`); the new column's type resolves from the
+      //    assignment expression against a row-less probe (analysis
+      //    only, no job). First assignment wins when several clauses
+      //    assign the same new column; later ones cast to it.
+      val evolvedSchema: StructType =
+        if (!schemaEvolution) schema
+        else {
+          val hasStar = updClauses.exists(_.set.isEmpty) ||
+            notMatched.exists(_.values.isEmpty)
+          val fromSource =
+            if (hasStar) evolve(schema, updates.schema) else schema
+          val assignedNew = {
+            val seen =
+              scala.collection.mutable.LinkedHashMap.empty[String, Column]
+            (updClauses.flatMap(_.set) ++ notMatched.flatMap(_.values) ++
+              notMatchedBySource.collect { case u: MergeUpdate => u }
+                .flatMap(_.set))
+              .filterNot { case (c, _) =>
+                fromSource.fieldNames.contains(c) }
+              .foreach { case (c, e) =>
+                if (!seen.contains(c)) seen.update(c, e) }
+            seen.toSeq
+          }
+          if (assignedNew.isEmpty) fromSource
+          else {
+            val probe = updates.limit(0).select(
+              updates.columns.map(col) ++ schema.fields.map(fd =>
+                lit(null).cast(fd.dataType).as(s"_b_${fd.name}")): _*)
+            StructType(fromSource.fields ++ assignedNew.map {
+              case (c, e) =>
+                org.apache.spark.sql.types.StructField(c,
+                  probe.select(e.as(c)).schema.head.dataType)
+            })
+          }
+        }
       def checkReKey(set: Seq[(String, Column)],
                      okSpellings: String => Set[String]): Unit =
         set.foreach { case (c, e) =>
@@ -4145,9 +4140,10 @@ object ManifestTable {
           s"MERGE cannot assign generated column '$c' — it " +
             s"recomputes from its declaration " +
             s"(${st.generated.getOrElse(c, "")})")
-        require(targetable.contains(c), s"$what targets unknown column '$c'")
+        require(evolvedSchema.fieldNames.contains(c),
+          s"$what targets unknown column '$c'")
       }
-      analyzeOn(schema, Some(src),
+      analyzeOn(schema, Some(updates),
         matched.flatMap(exprsOf) ++ residual.toSeq ++ notMatched
           .flatMap(cl => cl.condition.toSeq ++ cl.values.map(_._2)))
       try analyzeOn(schema, None, notMatchedBySource.flatMap(exprsOf))
@@ -4160,6 +4156,7 @@ object ManifestTable {
               "source match (engine API: `_b_<col>`; SQL: " +
               s"qualify with the target alias). ${ex.getMessage}")
       }
+      evolvedSchema
     }
     // MATERIALIZE the merge SOURCE for the whole merge (optimization
     // round 20): it is consumed by up to four separate actions — the
@@ -4260,10 +4257,11 @@ object ManifestTable {
     lazy val bcSource = srcRows <= mergeGateRows(spark)
     try transact(spark, path, "conditional merge", maxAttempts,
         Some(s"no committed version at $path to merge into"), tag) { t =>
-      // every body reference below binds to the materialized frame
-      val updates = srcMat
       val st = t.st
       val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+      val evolvedSchema = checkClauses(st, schema)
+      // every body reference below binds to the materialized frame
+      val updates = srcMat
       // EMPTY-SOURCE fast path (optimization round 20): zero source
       // rows with no BY SOURCE clauses and no schema evolution means
       // the compiled frame is empty by construction — the resolution
@@ -4278,12 +4276,11 @@ object ManifestTable {
       // caller. BY SOURCE merges can act on target rows with zero
       // source rows and schema evolution evolves the schema from the
       // source's COLUMNS even when empty, so both keep the full path.
-      if (srcRows == 0L && !hasBySource && !schemaEvolution) {
-        checkClauses(st, schema, schema.fieldNames, updates)
+      if (srcRows == 0L && !hasBySource && !schemaEvolution)
         Publish(deltaJson(t.version, t.ts, tag = tag,
             tagHorizon = tagHorizon, schema = Some(schema),
             mergeKey = Some(keys.mkString(","))), autoCompact = true)
-      } else {
+      else {
         // match-state resolution over the pruned base slice, PINNED to
         // the base. BY SOURCE semantics inspect EVERY target row, so the
         // base-only side cannot prune to the update-key range; without
@@ -4471,50 +4468,6 @@ object ManifestTable {
         val allStar = (updClauses.nonEmpty || notMatched.nonEmpty) &&
           updClauses.forall(_.set.isEmpty) &&
           notMatched.forall(_.values.isEmpty)
-        val hasStar = updClauses.exists(_.set.isEmpty) ||
-          notMatched.exists(_.values.isEmpty)
-        // Schema evolution, delta-spark's reading of both forms:
-        //  - any STAR clause evolves by the source's additive columns
-        //    (and lossless widenings);
-        //  - explicit assignment lists evolve by the columns they
-        //    ASSIGN that the target lacks (`SET t.newcol = expr` adds
-        //    `newcol`); the new column's type resolves from the
-        //    assignment expression against a row-less probe (analysis
-        //    only, no job). First assignment wins when several clauses
-        //    assign the same new column; later ones cast to it.
-        val evolvedSchema: StructType =
-          if (!schemaEvolution) schema
-          else {
-            val fromSource =
-              if (hasStar) evolve(schema, updates.schema) else schema
-            val assignedNew = {
-              val seen =
-                scala.collection.mutable.LinkedHashMap.empty[String, Column]
-              (updClauses.flatMap(_.set) ++ notMatched.flatMap(_.values) ++
-                notMatchedBySource.collect { case u: MergeUpdate => u }
-                  .flatMap(_.set))
-                .filterNot { case (c, _) =>
-                  fromSource.fieldNames.contains(c) }
-                .foreach { case (c, e) =>
-                  if (!seen.contains(c)) seen.update(c, e) }
-              seen.toSeq
-            }
-            if (assignedNew.isEmpty) fromSource
-            else {
-              val probe = updates.limit(0).select(
-                updates.columns.map(col) ++ schema.fields.map(fd =>
-                  lit(null).cast(fd.dataType).as(s"_b_${fd.name}")): _*)
-              StructType(fromSource.fields ++ assignedNew.map {
-                case (c, e) =>
-                  org.apache.spark.sql.types.StructField(c,
-                    probe.select(e.as(c)).schema.head.dataType)
-              })
-            }
-          }
-        // clause validation against this attempt's base — under
-        // evolution an unknown SET/INSERT target BECOMES a new column
-        // by construction, so it fails fast only without it
-        checkClauses(st, schema, evolvedSchema.fieldNames, updates)
         val imageNames = evolvedSchema.fieldNames.toSeq
         val srcHas: Set[String] = updates.columns.toSet
         def imgType(c: String) =
@@ -4975,36 +4928,47 @@ object ManifestTable {
                   statsCols: Seq[String] = Nil, maxAttempts: Int = 3,
                   tag: Option[String] = None,
                   tagHorizon: Int = DefaultTagHorizon): Long = {
-    import org.apache.spark.sql.functions.{col, when}
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     rewriteWhere(spark, path, cond, op = "UPDATE",
-      statsCols, maxAttempts, tag, tagHorizon,
-      transform = (df, st) => {
-        set.foreach { case (c, _) =>
-          require(!st.generated.contains(c),
-            s"cannot UPDATE generated column '$c' — it recomputes from " +
-              s"its declaration (${st.generated.getOrElse(c, "")})")
-          require(df.schema.fieldNames.contains(c),
-            s"UPDATE SET targets unknown column '$c'")
-        }
-        // Every RHS evaluates against the OLD row (SQL semantics —
-        // `SET a = b, b = a` swaps): stage all values into temp
-        // columns first, then overwrite. Staging happens BEFORE the
-        // generated columns strip, so both the WHERE predicate and a
-        // SET RHS may reference a generated column (Delta permits
-        // both); generatedGuard then recomputes the generated values
-        // from the updated sources.
-        val staged = set.foldLeft(df) { case (d, (c, e)) =>
-          d.withColumn(s"_graft_set_$c",
-            when(cond, e.cast(df.schema(c).dataType)).otherwise(col(c)))
-        }
-        val stripped = st.generated.keys.foldLeft(staged)(_ drop _)
-        val updated = set.foldLeft(stripped) { case (d, (c, _)) =>
-          d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
-        }
-        constraintGuard(generatedGuard(updated, st.generated),
-          st.constraints)
-      })
+      statsCols, maxAttempts, tag, tagHorizon, updateRows(set, cond))
+  }
+
+  /** [[updateWhere]]'s row transform: the SET applied where `cond`
+    * holds. */
+  private def updateRows(set: Seq[(String, Column)], cond: Column)
+      : (DataFrame, TableState) => DataFrame = (df, st) => {
+    set.foreach { case (c, _) =>
+      require(!st.generated.contains(c),
+        s"cannot UPDATE generated column '$c' — it recomputes from " +
+          s"its declaration (${st.generated.getOrElse(c, "")})")
+      require(df.schema.fieldNames.contains(c),
+        s"UPDATE SET targets unknown column '$c'")
+    }
+    setImages(df, st, set, Some(cond))
+  }
+
+  /** The rows of `df` after an UPDATE SET, only where `where` holds
+    * (None: on every row). Every RHS evaluates against the OLD row (SQL
+    * semantics — `SET a = b, b = a` swaps): all values stage into temp
+    * columns first, then overwrite. Staging happens BEFORE the
+    * generated columns strip, so both the WHERE predicate and a SET
+    * RHS may reference a generated column (Delta permits both);
+    * generatedGuard then recomputes the generated values from the
+    * updated sources, and CHECK constraints enforce on the images. */
+  private def setImages(df: DataFrame, st: TableState,
+                        set: Seq[(String, Column)],
+                        where: Option[Column]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, when}
+    val staged = set.foldLeft(df) { case (d, (c, e)) =>
+      val v = e.cast(df.schema(c).dataType)
+      d.withColumn(s"_graft_set_$c",
+        where.fold(v)(w => when(w, v).otherwise(col(c))))
+    }
+    val stripped = st.generated.keys.foldLeft(staged)(_ drop _)
+    val updated = set.foldLeft(stripped) { case (d, (c, _)) =>
+      d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
+    }
+    constraintGuard(generatedGuard(updated, st.generated), st.constraints)
   }
 
   /** Predicate DELETE (Delta `DELETE FROM tbl WHERE cond`) — keyless
@@ -5018,10 +4982,16 @@ object ManifestTable {
                   statsCols: Seq[String] = Nil, maxAttempts: Int = 3,
                   tag: Option[String] = None,
                   tagHorizon: Int = DefaultTagHorizon): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
     rewriteWhere(spark, path, cond, op = "DELETE",
-      statsCols, maxAttempts, tag, tagHorizon,
-      transform = (df, _) => df.filter(!coalesce(cond, lit(false))))
+      statsCols, maxAttempts, tag, tagHorizon, deleteRows(cond))
+  }
+
+  /** [[deleteWhere]]'s row transform: the rows `cond` does not fire on
+    * (a NULL `cond` keeps its row). */
+  private def deleteRows(cond: Column)
+      : (DataFrame, TableState) => DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    (df, _) => df.filter(!coalesce(cond, lit(false)))
   }
 
   /** Selective overwrite (Delta's `replaceWhere` /
@@ -5053,8 +5023,7 @@ object ManifestTable {
     // counted once, by the first attempt that is not a tag replay
     lazy val offenders = batch.filter(!coalesce(cond, lit(false))).count()
     rewriteWhere(batch.sparkSession, path, cond, op = "REPLACE_WHERE",
-      statsCols, maxAttempts, tag, tagHorizon,
-      transform = (df, _) => df.filter(!coalesce(cond, lit(false))),
+      statsCols, maxAttempts, tag, tagHorizon, deleteRows(cond),
       extra = Some { (st, schema) =>
         require(offenders == 0L,
           s"replaceWhere batch violates its own predicate: $offenders rows " +
@@ -5200,11 +5169,7 @@ object ManifestTable {
       val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
       require(schema.fieldNames.contains(key),
         s"no column '$key' at $path to key deletion vectors on")
-      st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
-        require(dk == st.phys(key),
-          s"table $path has live deletion vectors keyed on " +
-            s"'${st.logical(dk)}' — a second DV key would corrupt " +
-            "the read-side anti-join"))
+      t.requireDvKey(Seq(key))
       val candidates = condCandidates(st, cond)
       if (candidates.isEmpty) Done(t.base)
       else {
@@ -5228,20 +5193,19 @@ object ManifestTable {
           else if (matched > sparseRowLimit) {
             // the predicate is BULK, not sparse: a coalesce(1) sidecar
             // of this size would funnel through one task and readers
-            // would pay a huge anti-join forever — the CoW rewrite is
-            // the right shape, so take it (self-enforcing contract)
+            // would pay a huge anti-join forever — the CoW rewrite of
+            // the same base is the right shape, so take it
+            // (self-enforcing contract)
             pairs.unpersist(blocking = false)
-            Done(deleteWhere(spark, path, cond, maxAttempts = maxAttempts,
-              tag = tag, tagHorizon = tagHorizon))
+            rewriteAttempt(t, cond, "DELETE", Nil, tag, tagHorizon,
+              deleteRows(cond))
           } else {
-            val dvDir = t.dir("dv")
-            pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
-            val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
+            val dvAdds = t.stageDv(pairs)
             Publish(deltaJson(t.version, t.ts, tag = tag,
                 tagHorizon = tagHorizon, schema = Some(schema),
                 dvAdds = dvAdds, dvKey = Some(st.phys(key)),
                 op = Some("DELETE_DV")),
-              Seq(dvDir))
+              t.written("dv" -> dvAdds))
           }
         } finally pairs.unpersist(blocking = false)
       }
@@ -5258,8 +5222,9 @@ object ManifestTable {
     * `key` contract as [[deleteWhereDV]] (row-unique per file, one DV
     * key per table); SET semantics identical to [[updateWhere]] (every
     * RHS sees the old row; generated columns recompute; constraints
-    * enforce on the new images; row ids carry verbatim). Readers fold
-    * both sides; [[compact]] folds the vectors away entirely.
+    * enforce on the new images; row ids carry verbatim; a SET identity
+    * value advances the high water). Readers fold both sides;
+    * [[compact]] folds the vectors away entirely.
     */
   def updateWhereDV(spark: SparkSession, path: String,
                     set: Seq[(String, Column)], cond: Column, key: String,
@@ -5274,11 +5239,7 @@ object ManifestTable {
       val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
       require(schema.fieldNames.contains(key),
         s"no column '$key' at $path to key deletion vectors on")
-      st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
-        require(dk == st.phys(key),
-          s"table $path has live deletion vectors keyed on " +
-            s"'${st.logical(dk)}' — a second DV key would corrupt " +
-            "the read-side anti-join"))
+      t.requireDvKey(Seq(key))
       set.foreach { case (c, _) =>
         require(!st.generated.contains(c),
           s"cannot UPDATE generated column '$c' — it recomputes from " +
@@ -5287,83 +5248,49 @@ object ManifestTable {
           s"cannot SET the DV key column '$key' under merge-on-read " +
             "— the old image's vector is keyed on it (use updateWhere)")
       }
-      // partitioned layouts: the appended images write goes through
-      // partitionBy, so every new image lands in its partition home
-      // (including rows a SET moves ACROSS partitions)
-      val partCols = partitionColsOf(st.files)
       val candidates = condCandidates(st, cond)
       if (candidates.isEmpty) Done(t.base)
       else {
-        val idSchema = st.schema.map(sc => StructType(sc.fields :+
-          org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-        val alive = liveRows(spark, path, st.copy(files = candidates,
-          schema = if (st.rowTracking) idSchema else st.schema))
-        val matching = alive.filter(cond)
+        val alive = liveRows(spark, path,
+          st.copy(files = candidates, schema = st.rowIdSchema))
         // the DV pairs (old images to kill) and the new images come
         // from ONE cached matching frame — the scan runs once
-        val cached = matching.cache()
+        val cached = alive.filter(cond).cache()
         try {
           val matchedRows = cached.count()
           if (matchedRows == 0L) Done(t.base)
           else if (matchedRows > sparseRowLimit) {
             // bulk predicate: the MoR shape's single-task images write
             // and perpetual read-side anti-join would both be the wrong
-            // cost curve — fall through to the CoW rewrite instead
-            // (self-enforcing sparse contract)
+            // cost curve — take the CoW rewrite of the same base
+            // instead (self-enforcing sparse contract)
             cached.unpersist(blocking = false)
-            Done(updateWhere(spark, path, set, cond,
-              maxAttempts = maxAttempts, tag = tag, tagHorizon = tagHorizon))
+            rewriteAttempt(t, cond, "UPDATE", Nil, tag, tagHorizon,
+              updateRows(set, cond))
           } else {
-            val pairs = cached
-              .select(col(FileNameCol).as("_graft_dv_file"),
-                col(key).as("_graft_dv_key"))
-              .dropDuplicates("_graft_dv_file", "_graft_dv_key")
-            // SET semantics as in updateWhere: stage all RHS against the
-            // OLD row — BEFORE generated columns strip, so a RHS may
-            // reference them — then overwrite (cond is TRUE on every
-            // cached row, so no per-row guard is needed); generated
-            // columns recompute from the updated sources
-            val stagedSet = set.foldLeft(cached.drop(FileNameCol)) {
-              case (d, (c, e)) =>
-                d.withColumn(s"_graft_set_$c", e.cast(schema(c).dataType))
-            }
-            val stripped = st.generated.keys.foldLeft(stagedSet)(_ drop _)
-            val updated0 = set.foldLeft(stripped) { case (d, (c, _)) =>
-              d.withColumn(c, col(s"_graft_set_$c")).drop(s"_graft_set_$c")
-            }
+            // cond is TRUE on every cached row: no per-row guard
             val carrySchema =
               if (st.rowTracking) schema.fieldNames :+ RowIdCol
               else schema.fieldNames
-            val newImages = constraintGuard(
-              generatedGuard(updated0, st.generated), st.constraints)
+            val newImages = setImages(cached.drop(FileNameCol), st, set, None)
               .select(carrySchema.map(col).toSeq: _*)
-            val snapDir = t.dir("snap")
-            val physOut =
-              if (!st.mapped) newImages
-              else newImages.select(newImages.schema.fieldNames.map(n =>
-                col(n).as(st.phys(n))).toSeq: _*)
-            val imgW = physOut.coalesce(1).write.mode("overwrite")
-            (if (partCols.nonEmpty) imgW.partitionBy(partCols: _*) else imgW)
-              .parquet(snapDir)
-            val staged = listDataFiles(t.f, new Path(snapDir))
-            val dvDir = t.dir("dv")
-            pairs.coalesce(1).write.mode("overwrite").parquet(dvDir)
-            val dvAdds = listDataFiles(t.f, new Path(dvDir)).map(t.rel)
-            val physStats =
-              if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
-              else st.stats.values.headOption.map(_.keys.toSeq.sorted)
-                .getOrElse(Nil)
-            val newStats: Map[String, Map[String, ColStats]] =
-              if (physStats.isEmpty) Map.empty
-              else stagedFooterStats(spark, path, staged, physStats)
-            val (bloomAdds, ndvAdds) = t.sidecars(staged)
-            Publish(deltaJson(t.version, t.ts, staged.map(t.rel),
-                addStats = newStats, tag = tag, tagHorizon = tagHorizon,
+            // partitioned layouts: the images write goes through
+            // partitionBy, so every new image lands in its partition
+            // home (including rows a SET moves ACROSS partitions)
+            val staged = t.stage(Some(newImages.coalesce(1)),
+              partitionColsOf(st.files), st.rewriteStatsCols(Nil),
+              survives = true)
+            val dvAdds = t.stageDv(cached
+              .select(col(FileNameCol).as("_graft_dv_file"),
+                col(key).as("_graft_dv_key"))
+              .dropDuplicates("_graft_dv_file", "_graft_dv_key"))
+            Publish(deltaJson(t.version, t.ts, staged.adds,
+                addStats = staged.stats, tag = tag, tagHorizon = tagHorizon,
                 schema = Some(schema), dvAdds = dvAdds,
-                dvKey = Some(st.phys(key)), bloomAdds = bloomAdds,
-                ndvAdds = ndvAdds, op = Some("UPDATE_DV")),
-              Seq(snapDir, dvDir) ++
-                t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
+                dvKey = Some(st.phys(key)), bloomAdds = staged.bloomAdds,
+                ndvAdds = staged.ndvAdds, op = Some("UPDATE_DV"),
+                identityHighWater = staged.identityHighWater),
+              staged.cleanup ++ t.written("dv" -> dvAdds))
           }
         } finally cached.unpersist(blocking = false)
       }
@@ -5371,116 +5298,100 @@ object ManifestTable {
   }
 
   /** Shared CoW engine for the keyless row-level verbs: each attempt
-    * detects touched files, rewrites them via `transform` and commits
-    * the adds/removes. Detection first PRE-PRUNES the candidate files with
-    * the manifest's per-file stats against [[condPrune]]'s necessary
-    * ranges (sound: a file whose stats exclude a necessary condition
-    * holds no matching row), then runs ONE filter-pushed name-only scan
-    * over the survivors. Row tracking carries ids verbatim through the
-    * rewrite (`transform` never touches [[RowIdCol]]); stats columns
-    * default to the table's inherited stats schema so data skipping
-    * survives updates; bloom/NDV sidecars rebuild for staged files.
-    */
+    * ([[rewriteAttempt]]) detects touched files, rewrites them via
+    * `transform` and commits the adds/removes. */
   private def rewriteWhere(spark: SparkSession, path: String, cond: Column,
                            op: String, statsCols: Seq[String],
                            maxAttempts: Int, tag: Option[String],
                            tagHorizon: Int,
                            transform: (DataFrame, TableState) => DataFrame,
                            extra: Option[(TableState, StructType) => DataFrame] = None)
-      : Long = {
-    import org.apache.spark.sql.functions.col
+      : Long =
     transact(spark, path, op, maxAttempts,
-        Some(s"no committed version at $path"), tag) { t =>
-      val st = t.st
-      val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-      val extraDf = extra.map(_(st, schema))
-      val partCols = partitionColsOf(st.files)
-      // 1a) manifest-stats pre-prune: necessary ranges from the cond's
-      // conjuncts against per-file min/max (and partition values) —
-      // whole files skip driver-side before any scan
-      val candidates = condCandidates(st, cond)
-      // 1b) touched-file detection: filter-pushed scan over the
-      // survivors, names only. The filter reaches the parquet scan, so
-      // row-group stats prune I/O; only O(matching files) names return.
-      val touchedBase: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else readFilesMapped(spark, path, st, candidates, fileName = true)
-          .filter(cond)
-          .select(col(FileNameCol))
-          .distinct().collect().map(_.getString(0)).toSet
-      val touched = candidates.filter(fl => touchedBase(fl.split("/").last))
-      // no matches AND no staged batch: nothing to commit
-      if (touched.isEmpty && extraDf.forall(_.isEmpty)) Done(t.base)
-      else {
-        // 2) rewrite ONLY the touched files, DV-aware (already-deleted
-        // rows never resurrect); row ids ride along verbatim
-        val idSchema = st.schema.map(sc => StructType(sc.fields :+
-          org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-        val carrySchema =
-          if (st.rowTracking) schema.fieldNames :+ RowIdCol
-          else schema.fieldNames
-        // rewritten survivors pack into ~touched-file count (shuffle-free
-        // coalesce); an extra staged batch (replaceWhere's incoming
-        // slice) keeps ITS OWN partitioning — its size is unrelated to
-        // the files it displaces. Extra rows are inserts: under row
-        // tracking they draw fresh ids above the high-water mark.
-        val rewritten: Option[DataFrame] =
-          if (touched.isEmpty) None
-          else Some(transform(readStateDf(spark, path, st.copy(files = touched,
-              schema = if (st.rowTracking) idSchema else st.schema)), st)
-            .select(carrySchema.map(col).toSeq: _*)
-            .coalesce(math.max(1, touched.size)))
-        val extraPrep: Option[DataFrame] = extraDf.map { e =>
-          val withId = if (st.rowTracking) assignRowIds(e, st.rowHighWater) else e
-          withId.select(carrySchema.map(col).toSeq: _*)
-        }
-        val newData = (rewritten.toSeq ++ extraPrep.toSeq).reduce(_ unionByName _)
-        val snapDir = t.dir("snap")
-        // physical names on mapped tables, inside the partition layout
-        val packed = newData
-        val physOut =
-          if (!st.mapped) packed
-          else packed.select(packed.schema.fieldNames.map(n =>
-            col(n).as(st.phys(n))).toSeq: _*)
-        val w = physOut.write.mode("overwrite")
-        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-          .parquet(snapDir)
-        var staged = listDataFiles(t.f, new Path(snapDir))
-        val untouched = st.files.filterNot(touched.toSet)
-        if (staged.isEmpty && untouched.isEmpty) {
-          // every row deleted: keep the version readable
-          physOut.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
-          staged = listDataFiles(t.f, new Path(snapDir))
-        }
-        val stagedRel = staged.map(t.rel)
-        // stats columns: explicit > declared stats schema > inherited
-        // from existing file stats (so skipping survives the rewrite
-        // without the caller re-declaring); stored keys already PHYSICAL
-        val physStats =
-          if (statsCols.nonEmpty) statsCols.map(st.phys)
-          else if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
-          else st.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
-        val newStats: Map[String, Map[String, ColStats]] =
-          if (physStats.isEmpty) Map.empty
-          else stagedFooterStats(spark, path, staged, physStats)
-        val (bloomAdds, ndvAdds) = t.sidecars(staged)
-        val json = deltaJson(t.version, t.ts, stagedRel,
-          touched, newStats, tag, tagHorizon, Some(schema),
-          bloomAdds = bloomAdds, ndvAdds = ndvAdds, op = Some(op),
-          rowHighWater =
-            if (!st.rowTracking || extraDf.isEmpty) None
-            else Some(stagedHighWater(spark, staged, st.rowHighWater)),
-          // replaceWhere's staged batch carries the identity column by
-          // schema contract — supplied values advance the high water
-          // exactly as writeAttempt does, preserving id uniqueness
-          identityHighWater = st.identityCol.map(pc =>
-            stagedColMax(spark, staged, pc, st.identityHighWater)))
-        // UPDATE/DELETE/replaceWhere rewrites stage small files per
-        // commit just like appends — auto-compaction evaluates after
-        // any successful write (delta's post-commit hook shape)
-        Publish(json, snapDir +: t.written("bloom" -> bloomAdds,
-          "ndv" -> ndvAdds), autoCompact = true)
+        Some(s"no committed version at $path"), tag)(
+      rewriteAttempt(_, cond, op, statsCols, tag, tagHorizon, transform,
+        extra))
+
+  /** One keyless copy-on-write attempt against `t`'s base. Detection
+    * first PRE-PRUNES the candidate files with the manifest's per-file
+    * stats against [[condPrune]]'s necessary ranges (sound: a file whose
+    * stats exclude a necessary condition holds no matching row), then
+    * runs ONE filter-pushed name-only scan over the survivors. Row
+    * tracking carries ids verbatim through the rewrite (`transform`
+    * never touches [[RowIdCol]]); stats columns default to the table's
+    * inherited stats schema so data skipping survives updates;
+    * bloom/NDV sidecars rebuild for staged files. `extra` stages a
+    * batch beside the rewrite (replaceWhere's incoming slice).
+    */
+  private def rewriteAttempt(t: Txn, cond: Column, op: String,
+                             statsCols: Seq[String], tag: Option[String],
+                             tagHorizon: Int,
+                             transform: (DataFrame, TableState) => DataFrame,
+                             extra: Option[(TableState, StructType) => DataFrame] = None)
+      : Attempt = {
+    import org.apache.spark.sql.functions.col
+    import t.{path, spark, st}
+    val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
+    val extraDf = extra.map(_(st, schema))
+    // 1a) manifest-stats pre-prune: necessary ranges from the cond's
+    // conjuncts against per-file min/max (and partition values) —
+    // whole files skip driver-side before any scan
+    val candidates = condCandidates(st, cond)
+    // 1b) touched-file detection: filter-pushed scan over the
+    // survivors, names only. The filter reaches the parquet scan, so
+    // row-group stats prune I/O; only O(matching files) names return.
+    val touchedBase: Set[String] =
+      if (candidates.isEmpty) Set.empty
+      else readFilesMapped(spark, path, st, candidates, fileName = true)
+        .filter(cond)
+        .select(col(FileNameCol))
+        .distinct().collect().map(_.getString(0)).toSet
+    val touched = candidates.filter(fl => touchedBase(fl.split("/").last))
+    // no matches AND no staged batch: nothing to commit
+    if (touched.isEmpty && extraDf.forall(_.isEmpty)) Done(t.base)
+    else {
+      // 2) rewrite ONLY the touched files, DV-aware (already-deleted
+      // rows never resurrect); row ids ride along verbatim
+      val carrySchema =
+        if (st.rowTracking) schema.fieldNames :+ RowIdCol
+        else schema.fieldNames
+      // rewritten survivors pack into ~touched-file count (shuffle-free
+      // coalesce); an extra staged batch (replaceWhere's incoming
+      // slice) keeps ITS OWN partitioning — its size is unrelated to
+      // the files it displaces. Extra rows are inserts: under row
+      // tracking they draw fresh ids above the high-water mark.
+      val rewritten: Option[DataFrame] =
+        if (touched.isEmpty) None
+        else Some(transform(readStateDf(spark, path,
+            st.copy(files = touched, schema = st.rowIdSchema)), st)
+          .select(carrySchema.map(col).toSeq: _*)
+          .coalesce(math.max(1, touched.size)))
+      val extraPrep: Option[DataFrame] = extraDf.map { e =>
+        val withId = if (st.rowTracking) assignRowIds(e, st.rowHighWater) else e
+        withId.select(carrySchema.map(col).toSeq: _*)
       }
+      // physical names on mapped tables, inside the partition layout;
+      // a version whose every row is deleted keeps one zero-row file
+      val staged = t.stage(
+        Some((rewritten.toSeq ++ extraPrep.toSeq).reduce(_ unionByName _)),
+        partitionColsOf(st.files),
+        st.rewriteStatsCols(statsCols.map(st.phys)),
+        survives = st.files.filterNot(touched.toSet).nonEmpty)
+      val json = deltaJson(t.version, t.ts, staged.adds,
+        touched, staged.stats, tag, tagHorizon, Some(schema),
+        bloomAdds = staged.bloomAdds, ndvAdds = staged.ndvAdds,
+        op = Some(op),
+        rowHighWater =
+          if (!st.rowTracking || extraDf.isEmpty) None
+          else Some(staged.rowHighWater),
+        // replaceWhere's staged batch carries the identity column by
+        // schema contract — supplied values advance the high water
+        // exactly as writeAttempt does, preserving id uniqueness
+        identityHighWater = staged.identityHighWater)
+      // UPDATE/DELETE/replaceWhere rewrites stage small files per
+      // commit just like appends — auto-compaction evaluates after
+      // any successful write (delta's post-commit hook shape)
+      Publish(json, staged.cleanup, autoCompact = true)
     }
   }
 
@@ -6389,9 +6300,6 @@ object ManifestTable {
     require(vs.contains(version), s"version $version not committed at $path")
     val cur = resolveState(spark, path, version)
     require(cur.rowTracking, s"row tracking is not enabled at $path")
-    def withIds(st: TableState): Option[StructType] =
-      st.schema.map(sc => StructType(sc.fields :+
-        org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
     // metadata-only versions (e.g. the enable-tracking commit itself)
     // carry no schema: their change set is empty, typed on the newest
     // committed schema so feed consumers see stable columns
@@ -6407,7 +6315,7 @@ object ManifestTable {
       .withColumn("_change", lit("insert"))
     if (cur.schema.isEmpty) return emptyOut
     if (version == 1L)
-      return readStateDf(spark, path, cur.copy(schema = withIds(cur)))
+      return readStateDf(spark, path, cur.copy(schema = cur.rowIdSchema))
         .withColumn("_change", lit("insert"))
     require(vs.contains(version - 1),
       s"version ${version - 1} of $path was vacuumed — re-bootstrap")
@@ -6417,14 +6325,14 @@ object ManifestTable {
     val dvAdds = strArr(node, "dvAdds")
     val prev = resolveState(spark, path, version - 1)
     if (removes.isEmpty && dvAdds.isEmpty) {
-      val base = readStateDf(spark, path, cur.copy(schema = withIds(cur)))
+      val base = readStateDf(spark, path, cur.copy(schema = cur.rowIdSchema))
       if (adds.isEmpty) return base.limit(0).withColumn("_change", lit("insert"))
       return readFilesMapped(spark, path,
-          cur.copy(schema = withIds(cur)), adds)
+          cur.copy(schema = cur.rowIdSchema), adds)
         .withColumn("_change", lit("insert"))
     }
     if (adds.isEmpty && removes.isEmpty && dvAdds.nonEmpty)
-      return dvKilledRows(spark, path, prev.copy(schema = withIds(prev)),
+      return dvKilledRows(spark, path, prev.copy(schema = prev.rowIdSchema),
         dvAdds, cur.dvKey.get).withColumn("_change", lit("delete"))
     // rewrite: id-to-id join over the entry's OWN files, both sides
     // read live at their version (aligned on the TO schema across an
@@ -6437,14 +6345,14 @@ object ManifestTable {
       } :+ col(RowIdCol)).toSeq: _*)
     val removed = aligned(
       if (removes.isEmpty)
-        readStateDf(spark, path, prev.copy(schema = withIds(prev))).limit(0)
+        readStateDf(spark, path, prev.copy(schema = prev.rowIdSchema)).limit(0)
       else readStateDf(spark, path,
-        prev.copy(files = removes, schema = withIds(prev))))
+        prev.copy(files = removes, schema = prev.rowIdSchema)))
     val added = aligned(
       if (adds.isEmpty)
-        readStateDf(spark, path, cur.copy(schema = withIds(cur))).limit(0)
+        readStateDf(spark, path, cur.copy(schema = cur.rowIdSchema)).limit(0)
       else readStateDf(spark, path,
-        cur.copy(files = adds, schema = withIds(cur))))
+        cur.copy(files = adds, schema = cur.rowIdSchema)))
     val r = removed.select(struct(valueCols.map(col).toSeq: _*).as("_pre"),
       col(RowIdCol))
     val a = added.select(struct(valueCols.map(col).toSeq: _*).as("_post"),
@@ -6452,7 +6360,7 @@ object ManifestTable {
     val j = r.join(a, Seq(RowIdCol), "full_outer")
     val killed =
       if (dvAdds.isEmpty) j.limit(0).select(col(RowIdCol), col("_pre"))
-      else dvKilledRows(spark, path, prev.copy(schema = withIds(prev)),
+      else dvKilledRows(spark, path, prev.copy(schema = prev.rowIdSchema),
           dvAdds, cur.dvKey.get)
         .select(col(RowIdCol), struct(valueCols.map(col).toSeq: _*).as("_pre"))
     def expand(side: String, change: org.apache.spark.sql.Column) =
@@ -6711,45 +6619,24 @@ object ManifestTable {
                             layout: DataFrame => DataFrame,
                             partCols: Seq[String], statsCols: Seq[String],
                             op: String): Attempt = {
-    import org.apache.spark.sql.functions.col
     import t.{path, spark, st}
-    val idSchema = st.schema.map(sc => StructType(sc.fields :+
-      org.apache.spark.sql.types.StructField(RowIdCol, LongType)))
-    val rows = readStateDf(spark, path, st.copy(files = files,
-      schema = if (st.rowTracking) idSchema else st.schema))
-    val snapDir = t.dir("snap")
-    val packed = layout(rows)
-    val physOut =
-      if (!st.mapped) packed
-      else packed.select(packed.schema.fieldNames.map(nm =>
-        col(nm).as(st.phys(nm))).toSeq: _*)
-    val w = physOut.write.mode("overwrite")
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-      .parquet(snapDir)
     val whole = files.toSet == st.files.toSet
-    // a partitioned write of zero rows stages no file at all; a table
-    // rewritten whole keeps one schema-bearing (flat) file instead
-    if (whole && partCols.nonEmpty &&
-        listDataFiles(t.f, new Path(snapDir)).isEmpty)
-      physOut.limit(0).coalesce(1).write.mode("overwrite").parquet(snapDir)
-    val staged = listDataFiles(t.f, new Path(snapDir))
-    val adds = staged.map(t.rel)
-    val physStats =
-      if (statsCols.nonEmpty) statsCols
-      else if (st.statsSchemaCols.nonEmpty) st.statsSchemaCols
-      else st.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
-    val newStats: Map[String, Map[String, ColStats]] =
-      if (physStats.isEmpty) Map.empty
-      else stagedFooterStats(spark, path, staged, physStats)
-    val (bloomAdds, ndvAdds) = t.sidecars(staged)
+    // a table rewritten whole keeps one schema-bearing file even when a
+    // partitioned write of zero rows stages none
+    val staged = t.stage(
+      Some(layout(readStateDf(spark, path,
+        st.copy(files = files, schema = st.rowIdSchema)))),
+      partCols, st.rewriteStatsCols(statsCols), survives = !whole)
     val schema = st.schema.getOrElse(readStateDf(spark, path, st).schema)
-    Publish(deltaJson(t.version, t.ts, adds, files, newStats,
+    Publish(deltaJson(t.version, t.ts, staged.adds, files, staged.stats,
         schema = Some(schema),
         dvRemoves = if (whole) st.dvFiles else Nil,
-        bloomAdds = bloomAdds, bloomRemoves = if (whole) st.bloomFiles else Nil,
-        ndvAdds = ndvAdds, ndvRemoves = if (whole) st.ndvFiles else Nil,
-        op = Some(op), clusteredAdds = if (op == "CLUSTER") adds else Nil),
-      snapDir +: t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds))
+        bloomAdds = staged.bloomAdds,
+        bloomRemoves = if (whole) st.bloomFiles else Nil,
+        ndvAdds = staged.ndvAdds, ndvRemoves = if (whole) st.ndvFiles else Nil,
+        op = Some(op),
+        clusteredAdds = if (op == "CLUSTER") staged.adds else Nil),
+      staged.cleanup)
   }
 
   /** Time-based retention (Delta's `VACUUM ... RETAIN n HOURS`
@@ -6892,17 +6779,90 @@ object ManifestTable {
     def dir(kind: String): String = s"$path/$kind-$version-$token"
     /** A staged file's table-relative ref. */
     def rel(p: Path): String = relativize(new Path(path), p)
-    /** Bloom and NDV sidecars of the staged files, per the indexes the
-      * base declares (Nil for an undeclared one). */
-    def sidecars(staged: Seq[Path]): (Seq[String], Seq[String]) = (
-      st.bloom.filter(_.cols.nonEmpty).map(spec =>
-        buildBloomSidecar(spark, path, staged, spec, version, token))
-        .getOrElse(Nil),
-      if (st.ndvCols.isEmpty) Nil
-      else buildNdvSidecar(spark, path, staged, st.ndvCols, version, token))
     /** The dirs of the kinds that wrote any refs — a lost race's cleanup. */
     def written(kinds: (String, Seq[String])*): Seq[String] =
       kinds.collect { case (kind, refs) if refs.nonEmpty => dir(kind) }
+
+    /** THE staging step of every verb that writes data files (write,
+      * merge, UPDATE/DELETE, replaceWhere, OPTIMIZE): renames `df`'s
+      * logical columns to physical ones through `rename` (column-mapped
+      * tables only), writes it into this attempt's snap dir
+      * (`partitionBy` over the physical `partCols`) and lists the
+      * staged files. A partitioned write of zero rows stages no file at
+      * all: when no other file `survives` into the version, one flat
+      * zero-row, schema-bearing file keeps it readable. `repack` may
+      * re-lay the listed files out (the optimized-write pass) before
+      * footer stats are read for `statsCols` (physical) and the bloom
+      * and NDV sidecars the base declares are built. `df = None` stages
+      * nothing (a merge that only adds vectors). */
+    def stage(df: Option[DataFrame], partCols: Seq[String],
+              statsCols: Seq[String], survives: Boolean,
+              rename: String => String = st.phys,
+              repack: (DataFrame, Seq[Path]) => Seq[Path] = (_, s) => s)
+        : Staged = {
+      val snap = dir("snap")
+      val files = df.fold(Seq.empty[Path]) { d =>
+        val phys =
+          if (!st.mapped) d
+          else d.select(d.columns.map(n =>
+            org.apache.spark.sql.functions.col(n).as(rename(n))).toSeq: _*)
+        val w = phys.write.mode("overwrite")
+        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
+          .parquet(snap)
+        val listed = listDataFiles(f, new Path(snap))
+        repack(phys,
+          if (listed.nonEmpty || survives) listed
+          else {
+            phys.limit(0).coalesce(1).write.mode("overwrite").parquet(snap)
+            listDataFiles(f, new Path(snap))
+          })
+      }
+      Staged(this, files, stagedFooterStats(spark, path, files, statsCols),
+        st.bloom.filter(_.cols.nonEmpty).map(spec =>
+          buildBloomSidecar(spark, path, files, spec, version, token))
+          .getOrElse(Nil),
+        if (st.ndvCols.isEmpty) Nil
+        else buildNdvSidecar(spark, path, files, st.ndvCols, version, token))
+    }
+
+    /** Write the deletion-vector sidecar `pairs` (the file-name column,
+      * then the key columns) as one file in this attempt's dv dir;
+      * returns its refs. */
+    def stageDv(pairs: DataFrame): Seq[String] = {
+      val dv = dir("dv")
+      pairs.coalesce(1).write.mode("overwrite").parquet(dv)
+      listDataFiles(f, new Path(dv)).map(rel)
+    }
+
+    /** Reads resolve ONE deletion-vector key per table: vectors keyed on
+      * the logical `keys` may join live ones only under the same key. */
+    def requireDvKey(keys: Seq[String]): Unit =
+      st.dvKey.filter(_ => st.dvFiles.nonEmpty).foreach(dk =>
+        require(dk == keys.map(st.phys).mkString(","),
+          s"table $path has live deletion vectors keyed on " +
+            s"'${dk.split(",").map(st.logical).mkString(",")}' — vectors " +
+            s"keyed on '${keys.mkString(",")}' would corrupt the " +
+            "read-side anti-join; compact first"))
+  }
+
+  /** What [[Txn.stage]] staged: the data files, their footer stats and
+    * index sidecars. The high waters read the staged files (footers
+    * first) on first use, so only a verb that can add values pays. */
+  private final case class Staged(t: Txn, files: Seq[Path],
+                                  stats: Map[String, Map[String, ColStats]],
+                                  bloomAdds: Seq[String],
+                                  ndvAdds: Seq[String]) {
+    def adds: Seq[String] = files.map(t.rel)
+    /** Row-id high water past the staged ids. */
+    lazy val rowHighWater: Long =
+      stagedHighWater(t.spark, files, t.st.rowHighWater)
+    /** Identity high water past the staged values (None without an
+      * identity column). */
+    lazy val identityHighWater: Option[Long] = t.st.identityCol.map(c =>
+      stagedColMax(t.spark, files, c, t.st.identityHighWater))
+    /** The staging dirs a lost race deletes. */
+    def cleanup: Seq[String] =
+      t.dir("snap") +: t.written("bloom" -> bloomAdds, "ndv" -> ndvAdds)
   }
 
   /** What one attempt decided. */

@@ -62,6 +62,9 @@ private[streaming] class GraftSink(pathSpec: String, tagPrefix: String)
     val spark = data.sparkSession
     val path = graft.catalog.GraftCatalog.resolvePathSpec(spark, pathSpec)
     val tag = s"$tagPrefix-$batchId"
+    // the pre-check spares a replayed batch the rebase and emptiness
+    // jobs; the append checks the tag again inside its commit, so two
+    // racing replays of one batch still land it once
     if (ManifestTable.committedVersionOfTag(spark, path, tag).isEmpty) {
       // The incoming frame is bound to the streaming (incremental)
       // execution — a batch write on it is refused by analysis. Rebase
@@ -78,7 +81,7 @@ private[streaming] class GraftSink(pathSpec: String, tagPrefix: String)
       try {
         if (!rows.isEmpty()) {
           val batch = spark.createDataFrame(rows, schema)
-          ManifestTable.append(batch, path, tag = Some(tag)): Unit
+          ManifestTable.appendIdempotent(batch, path, tag): Unit
         }
       } finally rows.unpersist(blocking = false): Unit
     }

@@ -88,6 +88,27 @@ class IdentitySpec extends SparkSpec {
     assert(sks.max > hw1 + 500L, "post-replaceWhere insert draws above the supplied max")
   }
 
+  test("an UPDATE that SETs an identity value advances the high water, copy-on-write and merge-on-read") {
+    val verbs = Seq[(String, (String, Long) => Long)](
+      ("updateWhere", (p, hw) => ManifestTable.updateWhere(spark, p,
+        Seq("id" -> lit(hw + 1)), col("k") === 1)),
+      ("updateWhereDV", (p, hw) => ManifestTable.updateWhereDV(spark, p,
+        Seq("id" -> lit(hw + 1)), col("k") === 1, key = "k")))
+    for ((verb, update) <- verbs) {
+      val path = java.nio.file.Files.createTempDirectory(
+        s"graft_id_$verb").toString + "/t"
+      ManifestTable.setIdentityColumn(spark, path, "id")
+      ManifestTable.write(spark.range(0, 10).toDF("k").coalesce(1), path)
+      val hw = ManifestTable.identityInfo(spark, path).get._3
+      update(path, hw)
+      // the next engine-assigned id must clear the value the UPDATE set
+      ManifestTable.append(Seq(10L).toDF("k").coalesce(1), path)
+      val ids = ManifestTable.read(spark, path).select("id").as[Long].collect()
+      assert(ids.length === 11 && ids.distinct.length === 11,
+        s"$verb: identities must stay unique: ${ids.sorted.toSeq}")
+    }
+  }
+
   test("declare on existing data seeds the high water; NULLs and double declarations refused; restore never rolls back") {
     val path = java.nio.file.Files.createTempDirectory("graft_id3").toString + "/t"
     ManifestTable.write(

@@ -322,6 +322,26 @@ class LogStoreSpec extends SparkSpec {
     assert(ManifestTable.versions(spark, path) === (1L to merged + 1).toSeq)
   }
 
+  test("the named-format sink racing a replay of the same batch lands it once") {
+    val path = java.nio.file.Files.createTempDirectory(
+      "graft_sink_self_race").toString + "/t"
+    ManifestTable.write((1L to 4L).toDF("id"), path)
+    val prev = ManifestTable.currentVersion(spark, path).get
+    val sink = new graft.streaming.GraftSinkProvider().createSink(
+      spark.sqlContext, Map("path" -> path), Nil,
+      org.apache.spark.sql.streaming.OutputMode.Append())
+    val batch = (101L to 110L).toDF("id")
+    // the rival replays batch 7 through the same sink and wins the race
+    ManifestTable.withLogStore(new RivalStore(() => sink.addBatch(7L, batch)))(
+      sink.addBatch(7L, batch))
+    assert(ManifestTable.versions(spark, path) === (1L to prev + 1).toSeq,
+      "the sink committed after losing to its own replay")
+    assert(ManifestTable.history(spark, path)
+      .filter(col("tag") === "graft-sink-7").count() === 1)
+    assert(ManifestTable.read(spark, path).select("id").as[Long].collect()
+      .sorted.toSeq === (1L to 4L) ++ (101L to 110L))
+  }
+
   test("overwriteWhere enforces a CHECK constraint a rival commits before its publish") {
     val path = java.nio.file.Files.createTempDirectory(
       "graft_rival_constraint").toString + "/t"

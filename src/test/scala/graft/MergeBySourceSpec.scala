@@ -322,4 +322,40 @@ class MergeBySourceSpec extends SparkSpec {
       .select("id", "v").as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(got === Seq((1L, 10L), (2L, 20L)))
   }
+
+  test("a non-empty merge whose SET targets an unknown column is refused before any Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val path = tmp("graft_bys_nojob")
+    ManifestTable.write(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), path)
+    val src = Seq((1L, 99L), (3L, 30L)).toDF("id", "v")
+    val sc = spark.sparkContext
+    val group = "graft-merge-refusal"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)  => jobs.incrementAndGet(): Unit
+          case Some("marker") => markerSeen.countDown()
+          case _              => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "refused merge")
+      val e = try intercept[IllegalArgumentException] {
+        ManifestTable.mergeMulti(src, path, "id",
+          matched = Seq(MergeUpdate(None, Seq("nope" -> col("v")))),
+          notMatched = Seq(MergeInsert()))
+      } finally sc.clearJobGroup()
+      assert(e.getMessage.contains("unknown column 'nope'"), e.getMessage)
+      // the listener bus delivers in order: once a later marker job is
+      // seen, every job the merge started has been counted
+      sc.setJobGroup("marker", "listener drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get === 0, "the refusal must not run source jobs")
+    } finally sc.removeSparkListener(listener)
+    assert(ManifestTable.versions(spark, path) === Seq(1L))
+  }
 }
